@@ -499,7 +499,7 @@ transformers:
     jq: 'test("ER"; "i")'
     input_schema: {type: string}
 """)
-    from funcify_feature_eng_spark.operators.util import spread_by_key
+    from funcify_feature_eng_spark.operators.util import spread_small_input
 
     # ~28 compiled jq expressions over 1M rows is the densest map stage in
     # the suite; a single-split parquet input runs it all on ONE core
@@ -507,7 +507,7 @@ transformers:
     # (keyless round-robin would pay a single-core sort-before-repartition
     # of the full table) and project the 4 consumed columns first so the
     # spread never shuffles props.
-    ev = spread_by_key(
+    ev = spread_small_input(
         _t(spark, sf_dir, "events").select("event_id", "ts", "value", "event_type"),
         "event_id",
     )
@@ -2502,12 +2502,12 @@ def q_value_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     classes are planted by event_id: malformed JSON, a missing required
     key, and an out-of-range value; the oracle reconstructs the same
     verdicts and reason strings."""
-    from funcify_feature_eng_spark.operators.util import spread_by_key
+    from funcify_feature_eng_spark.operators.util import spread_small_input
     from funcify_feature_eng_spark.plans.validation import validate_json_values
 
     # hash-spread (no sort-before-repartition) — the JSON validation
     # predicates are the dense stage
-    ev = spread_by_key(_t(spark, sf_dir, "events"), "event_id")
+    ev = spread_small_input(_t(spark, sf_dir, "events"), "event_id")
     planted = ev.select(
         "event_id",
         F.when(F.col("event_id") % 10 == 1, F.lit("not json"))

@@ -175,13 +175,13 @@ class LineageTracker:
         new = spine
         if wm is not None and os.path.exists(out):
             new = spine.filter(F.col(ts_col) > F.lit(wm).cast("timestamp"))
-        from funcify_feature_eng_spark.operators.util import spread_by_key
+        from funcify_feature_eng_spark.operators.util import spread_small_input
 
         # compute() and the parquet encode both inherit the spine's split
         # count — a few-split spine would run the whole refresh (and write
         # one giant output file) in a single task; hash-spread by event
         # time first (no-op at scale, where the spine has many splits)
-        new = spread_by_key(new, ts_col)
+        new = spread_small_input(new, ts_col)
         bounds = new.agg(
             F.count(F.lit(1)).alias("n"), F.max(F.col(ts_col)).alias("mx")
         ).collect()[0]

@@ -29,13 +29,13 @@ def chunk_documents(
     """
     if not 0 <= overlap_tokens < chunk_tokens:
         raise ValueError("need 0 <= overlap_tokens < chunk_tokens")
-    from .util import spread_by_key
+    from .util import spread_small_input
 
     # the tokenize+slice+explode chain is a dense pure-map stage that
     # inherits the input split count — spread a few-split input across the
     # cluster first (hash by id, no sort; no-op at scale). Only the two
     # consumed columns are shuffled.
-    df = spread_by_key(df.select(id_col, text_col), id_col)
+    df = spread_small_input(df.select(id_col, text_col), id_col)
     step = chunk_tokens - overlap_tokens
     tk = tokens(F.col(text_col))
     n = F.size(tk)

@@ -67,7 +67,7 @@ def co_occurrence_edges(
         raise ValueError(f"on_oversize must be 'error'|'skip' (got {on_oversize!r})")
     if min_count < 1:
         raise ValueError(f"co_occurrence_edges: min_count must be >= 1, got {min_count}")
-    from .util import spread_by_key
+    from .util import spread_small_input
 
     g, i = F.col(group_col), F.col(item_col)
     # the per-group set build is an ObjectHashAggregate whose PARTIAL pass
@@ -75,7 +75,7 @@ def co_occurrence_edges(
     # core (guide §6); pre-hash by the group key (exchange reused by the
     # groupBy, no-op at scale)
     grouped = (
-        spread_by_key(
+        spread_small_input(
             df.filter(g.isNotNull() & i.isNotNull())
             .select(g.alias("__g"), i.alias("__i")),
             "__g",
@@ -177,13 +177,13 @@ def item_neighbors(
         on_oversize=on_oversize,
     ).localCheckpoint()
     g, i = F.col(group_col), F.col(item_col)
-    from .util import spread_by_key
+    from .util import spread_small_input
 
     # hash by the ITEM key alone: a subset-key hash partitioning satisfies
     # the (group, item) distinct's clustering requirement AND the per-item
     # count aggregation right after it — one exchange serves both
     base = (
-        spread_by_key(
+        spread_small_input(
             df.filter(g.isNotNull() & i.isNotNull())
             .select(g.alias("__g"), i.alias("item")),
             "item",
@@ -396,12 +396,12 @@ def item_lift(
         on_oversize=on_oversize,
     ).localCheckpoint()
     g, i = F.col(group_col), F.col(item_col)
-    from .util import spread_by_key
+    from .util import spread_small_input
 
     # hash by the item key alone (subset-key partitioning satisfies the
     # distinct AND the per-item count — one exchange serves both)
     gi = (
-        spread_by_key(
+        spread_small_input(
             df.filter(g.isNotNull() & i.isNotNull())
             .select(g.alias("__g"), i.alias("__i")),
             "__i",

@@ -212,13 +212,13 @@ def activity_streaks(
             as_of_period = int(row[0])
     aop = F.lit(int(as_of_period)).cast("bigint")
 
-    from .util import spread_by_key
+    from .util import spread_small_input
 
     # the collect_set partial aggregation inherits the scan's split count;
     # pre-hash a few-split input by the entity key (exchange reused by the
     # groupBy, no-op at scale)
     per_user = (
-        spread_by_key(base.filter(F.col("__p") <= aop), user_col)
+        spread_small_input(base.filter(F.col("__p") <= aop), user_col)
         .groupBy(user_col)
         .agg(F.array_sort(F.collect_set("__p")).alias("__ps"))
     )

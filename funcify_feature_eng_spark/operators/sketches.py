@@ -710,13 +710,14 @@ def heavy_hitters(
                 est_v = np.minimum(est_v, grid[d][P[d]])
             return pd.Series(est_v >= thr)
 
-        from .util import spread_by_key
+        from .util import spread_small_input
 
         # hash by the value column: parallelizes the probe on few-split
         # inputs AND is reused by the exact groupBy right after (no-op at
         # scale)
-        nn = spread_by_key(df.filter(v.isNotNull()).select(v.alias(value_col)),
-                           value_col)
+        nn = spread_small_input(
+            df.filter(v.isNotNull()).select(v.alias(value_col)), value_col
+        )
         cand = nn.filter(_cand(F.coalesce(v, F.lit(0)))).select(
             v.alias(value_col), F.lit(n_tot).cast("long").alias("__tot")
         )
@@ -897,9 +898,9 @@ def bloom_prefilter_join(
     # input the scan, the Python probe and the filter would all run inside
     # ONE task — spread by the join key first (hash repartition, no sort;
     # no-op at scale where the fact side has more splits than cores)
-    from .util import spread_by_key
+    from .util import spread_small_input
 
-    lprobe = spread_by_key(lprobe, keys[0] if len(keys) == 1 else tmp)
+    lprobe = spread_small_input(lprobe, keys[0] if len(keys) == 1 else tmp)
     sk = bloom_sketch(rbuild, probe_col, m_bits=m_bits, depth=depth)
     filt = bloom_contains(
         sk,

@@ -5,9 +5,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_small_input(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a DataFrame whose partition count is below the
-    cluster's default parallelism — and leave it untouched otherwise.
+def spread_small_input(df: DataFrame, *keys: str) -> DataFrame:
+    """Repartition a DataFrame whose partition count is below the cluster's
+    default parallelism to ``defaultParallelism`` partitions — round-robin,
+    or hash-partitioned on ``keys`` when given — and leave it untouched
+    otherwise.
 
     Compute-dense map stages (per-row signature folds, explode fan-outs,
     all-pairs loops) inherit the INPUT split count. A small parquet file
@@ -15,6 +17,16 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     one core; spending an n-row shuffle to buy full parallelism on the dense
     stage is the right trade exactly when n is small. At 100 TB the input
     has orders of magnitude more splits than cores and this is a no-op.
+
+    Pass ``keys`` when the NEXT aggregation / distinct groups by them. The
+    keyless round-robin spread pays a local sort of its input before
+    repartitioning (Spark's sortBeforeRepartition, needed for deterministic
+    retries) — on a single-split multi-million-row table that sort runs on
+    one core and costs more than it saves. Hash partitioning needs no such
+    sort, and when the downstream groupBy/distinct uses the same key the
+    exchange is REUSED: the plan keeps exactly one exchange, but the dense
+    aggregation work runs on ``defaultParallelism`` partitions instead of
+    on the scan's single split.
 
     The probe is only free for SCAN-SHAPED inputs: under AQE, ``df.rdd``
     finalizes the plan and can eagerly execute upstream shuffle stages. So
@@ -28,35 +40,7 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     if "Exchange" in plan:
         return df
     if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def spread_by_key(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash-repartition a few-split input on the key its NEXT aggregation /
-    distinct will group by — and leave it untouched otherwise.
-
-    The keyless round-robin spread (:func:`spread_small_input`) pays a
-    local sort of its input before repartitioning (Spark's
-    sortBeforeRepartition, needed for deterministic retries) — on a
-    single-split multi-million-row table that sort runs on one core and
-    costs more than it saves. Hash partitioning needs no such sort, and
-    when the downstream groupBy/distinct uses the same key the exchange is
-    REUSED (guide §2.4): the plan keeps exactly one exchange, but the
-    dense aggregation work runs on ``defaultParallelism`` partitions
-    instead of on the scan's single split. At scale the input has more
-    splits than cores and this is a no-op.
-
-    Same probe discipline as spread_small_input: plans that already
-    contain an Exchange are returned untouched without probing.
-    """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "Exchange" in plan:
-        return df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, *cols)
+        return df.repartition(target, *keys)
     return df
 
 

@@ -14,10 +14,11 @@ Spark-first:
   plan by request shape (the 24 h plan cache,
   ``DefaultSingleRequestMaterializationGraphService.kt:78-84``),
 * *lower* turns the plan into ONE DataFrame lineage: window features share a
-  single window pass, transformer features become ``withColumns`` batches
-  (whole-stage codegen keeps them in one stage), as-of features become
-  ``asof_join`` stages. Spark's lazy DAG is the dispatched-publisher graph;
-  Catalyst's ReuseExchange is the ``.cache()`` memoization.
+  single window pass, transformer features become one chained
+  ``withColumn`` each (whole-stage codegen keeps them in one stage), as-of
+  features become ``asof_join`` stages. Spark's lazy DAG is the
+  dispatched-publisher graph; Catalyst's ReuseExchange is the ``.cache()``
+  memoization.
 
 Temporal auto-tracking (J3, ``StandardQueryConnector.kt:2512-2602``): the
 model requires an ``event_time`` column and refuses to compile if the spine
@@ -460,13 +461,11 @@ class FeatureModel:
                     batch.append(plan[i])
                     i += 1
                 # a transformer may depend on a window feature in the same
-                # batch — withColumns resolves sequentially via select chain
-                exprs = {}
+                # batch — one withColumn per feature resolves them in order
                 for s in batch:
                     if s.kind == "transformer":
                         self._validate_transformer_input(s, df)
-                    exprs[s.name] = self._lower_one(s, keys, order)
-                    df = df.withColumn(s.name, exprs[s.name])
+                    df = df.withColumn(s.name, self._lower_one(s, keys, order))
                     df = _land_feat_aliases(df)
             elif spec.kind == "interval":
                 from funcify_feature_eng_spark.operators.intervals import (

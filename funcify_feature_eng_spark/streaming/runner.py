@@ -37,6 +37,27 @@ def _start_foreach_batch(
     return writer.start()
 
 
+def _start_ledger_stream(
+    stream_df: DataFrame,
+    state: Callable[[DataFrame], DataFrame],
+    ledger_dir: str,
+    checkpoint_dir: str | None,
+    trigger_seconds: int | None,
+) -> StreamingQuery:
+    """Shared body of the monitor streams: each micro-batch reduces to
+    ``state(batch_df)``, stamped with ``batch_id`` and APPENDED to the
+    parquet ``ledger_dir`` — the ledger is the only cross-batch state."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            state(batch_df)
+            .withColumn("batch_id", F.lit(int(batch_id)).cast("bigint"))
+            .write.mode("append").parquet(ledger_dir)
+        )
+
+    return _start_foreach_batch(stream_df, process, checkpoint_dir, trigger_seconds)
+
+
 def materialize_stream(
     stream_df: DataFrame,
     model,
@@ -799,16 +820,13 @@ def quality_monitor_stream(
     """
     from funcify_feature_eng_spark.operators.checks import check_state
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # no coalesce: `unique` frequency rows are distinct-keys-sized,
-        # which at 100 TB must not funnel through one writer task
-        (
-            check_state(batch_df, constraints)
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("bigint"))
-            .write.mode("append").parquet(ledger_dir)
-        )
-
-    return _start_foreach_batch(stream_df, process, checkpoint_dir, trigger_seconds)
+    # no coalesce: `unique` frequency rows are distinct-keys-sized, which
+    # at 100 TB must not funnel through one writer task
+    return _start_ledger_stream(
+        stream_df,
+        lambda batch_df: check_state(batch_df, constraints),
+        ledger_dir, checkpoint_dir, trigger_seconds,
+    )
 
 
 def calibration_monitor_stream(
@@ -841,17 +859,13 @@ def calibration_monitor_stream(
         calibration_state,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            calibration_state(
-                batch_df, score_e6=score_e6, label=label, n_bins=n_bins
-            )
-            .coalesce(1)  # <= n_bins rows: one writer task is correct here
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("bigint"))
-            .write.mode("append").parquet(ledger_dir)
-        )
-
-    return _start_foreach_batch(stream_df, process, checkpoint_dir, trigger_seconds)
+    return _start_ledger_stream(
+        stream_df,
+        lambda batch_df: calibration_state(
+            batch_df, score_e6=score_e6, label=label, n_bins=n_bins
+        ).coalesce(1),  # <= n_bins rows: one writer task is correct here
+        ledger_dir, checkpoint_dir, trigger_seconds,
+    )
 
 
 def decay_monitor_stream(
@@ -887,17 +901,14 @@ def decay_monitor_stream(
     max_pow)."""
     from funcify_feature_eng_spark.operators.decay import decay_state
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            decay_state(
-                batch_df, value_col=value_col, ts_col=ts_col, keys=keys,
-                ref_ts=ref_ts, halflife_s=halflife_s, max_pow=max_pow,
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("bigint"))
-            .write.mode("append").parquet(ledger_dir)
-        )
-
-    return _start_foreach_batch(stream_df, process, checkpoint_dir, trigger_seconds)
+    return _start_ledger_stream(
+        stream_df,
+        lambda batch_df: decay_state(
+            batch_df, value_col=value_col, ts_col=ts_col, keys=keys,
+            ref_ts=ref_ts, halflife_s=halflife_s, max_pow=max_pow,
+        ),
+        ledger_dir, checkpoint_dir, trigger_seconds,
+    )
 
 
 def cms_monitor_stream(

@@ -8,9 +8,9 @@ external data, no randomness):
 - every fact table is 10 copies with per-copy key offsets that keep FK
   consistency (customer<->orders, orders<->lineitem, part/supplier<->
   lineitem, events.user_id, documents.doc_id, embeddings.vec_id);
-- documents text is letter-rotated per copy (same trick as
-  bench_dedup_scale.upscale_documents) so corpus dup DENSITY is preserved
-  instead of making every doc a 10-way exact dup;
+- documents text is letter-rotated per copy (copy c shifts every letter
+  by c) so corpus dup DENSITY is preserved instead of making every doc a
+  10-way exact dup;
 - embeddings are np.roll'ed per copy (norms and within-copy distance
   structure preserved, no cross-copy exact dups);
 - region/nation are fixed-size dims at every TPC-H sf and stay as-is;
@@ -18,11 +18,16 @@ external data, no randomness):
   row groups, mirroring the driver's generated layout (sf0.1's tables are
   all single-row-group at <=600k rows, i.e. default writer settings — so
   the driver's sf1.0 lineitem at 6M rows has ~6 row groups while every
-  other table is still ONE, which is the few-split condition the
-  spread_small_input/spread_by_key work targets).
+  other table is still ONE, which is the few-split condition
+  operators.util.spread_small_input targets).
 
 Timing-representative only — NOT a correctness oracle input (fixture
 oracles are pinned to sf0.01).
+
+This is the one upscaler behind every growth leg (BENCH.md): build the
+10x dir once, time the same ``bench_extra.py`` op list with
+``SPARK_GRAFT_SF_DIR`` pointing at the source and at the 10x dir, and
+read growth as the ratio of the two ``all`` lines.
 
 Usage: python scripts/make_sf10x.py [src_sf_dir] [dst_dir]
        (defaults /root/testdata/sf0.1 -> /root/sf1.0_synth)
