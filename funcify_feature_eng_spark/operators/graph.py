@@ -271,15 +271,22 @@ def _integer_id_type(dt) -> bool:
 
 def _pagerank_driver(spark, e, id_type, n_iters, num, den):
     """Driver-side exact replay of the pinned fixed-point PageRank fold
-    over a collected small edge set (NumPy int64; every product stays
-    under 2^63: num·r ≤ 85·1e12, den·outdeg ≤ den·E ≤ 1e8 at the 1e6
-    edge cap, per-node contribution sums ≤ total mass ≤ 1e12). Same
+    over a collected small edge set, in NumPy int64. Ranks never exceed
+    the total mass 1e12, so every product stays under 2^63 when
+    num·1e12 and den·max(outdeg) do; per-node contribution sums stay
+    under the mass. When either product would not fit (a user-supplied
+    damping fraction with huge terms), returns None so the caller runs
+    the DECIMAL(38) distributed loop instead of wrapping silently. Same
     canonical outputs as the distributed loop — pinned by
     tests/test_pagerank.py::test_driver_fast_path_equals_distributed."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import StructField, StructType, LongType
 
+    e12 = 10**12
+    i64_max = np.iinfo(np.int64).max
+    if num * e12 > i64_max:
+        return None
     ep = e.toPandas()
     s = ep["s"].to_numpy(np.int64)
     d = ep["d"].to_numpy(np.int64)
@@ -288,7 +295,8 @@ def _pagerank_driver(spark, e, id_type, n_iters, num, den):
     s_idx = np.searchsorted(nodes, s)
     d_idx = np.searchsorted(nodes, d)
     outdeg = np.bincount(s_idx, minlength=n).astype(np.int64)
-    e12 = 10**12
+    if den * int(outdeg.max()) > i64_max:
+        return None
     base = ((den - num) * e12) // (den * n)
     r = np.full(n, e12 // n, dtype=np.int64)
     order = np.argsort(d_idx, kind="stable")
@@ -375,11 +383,15 @@ def pagerank(
     id_type = edges.schema[src].dataType
     if 0 < m_edges <= driver_threshold and _integer_id_type(id_type):
         try:
-            return _pagerank_driver(
+            ranked = _pagerank_driver(
                 spark, e, id_type, n_iters, damping_num, damping_den
             )
-        finally:
+        except BaseException:
             release(e)
+            raise
+        if ranked is not None:
+            release(e)
+            return ranked
     nodes = (
         e.select(F.col("s").alias("node"))
         .unionByName(e.select(F.col("d").alias("node")))

@@ -13,10 +13,13 @@ Spark-first:
   feature DAG (J5 ``dispatch/...DispatchService.kt:761-853``), and caches the
   plan by request shape (the 24 h plan cache,
   ``DefaultSingleRequestMaterializationGraphService.kt:78-84``),
-* *lower* turns the plan into ONE DataFrame lineage: window features share a
-  single window pass, transformer features become one chained
-  ``withColumn`` each (whole-stage codegen keeps them in one stage), as-of
-  features become ``asof_join`` stages. Spark's lazy DAG is the
+* *lower* turns the plan into ONE DataFrame lineage. As-of stages depend on
+  nothing, so compile places them first: their ``asof_join`` shuffles the
+  spine on the entity key, and the window pass after it reuses that
+  ``hashpartitioning(entity)`` exchange (Filter/Project keep it). Window and
+  transformer features land as one ``withColumns`` per dependency level, so
+  Catalyst analyzes the plan once per level and collapses same-spec window
+  expressions into one Window operator. Spark's lazy DAG is the
   dispatched-publisher graph; Catalyst's ReuseExchange is the ``.cache()``
   memoization.
 
@@ -302,9 +305,11 @@ class FeatureModel:
         spine_cols: Sequence[str],
         var_keys: Sequence[str] = (),
     ) -> list[FeatureSpec]:
-        """Topo-sorted feature stages needed for the requested columns
-        (plan-cached by request shape + variable-KEY set, mirroring the
-        reference's plan-cache key)."""
+        """Topo-sorted feature stages needed for the requested columns, in
+        the order :meth:`materialize` lowers them: as-of stages first, then
+        the rest with every dependency before its consumer (plan-cached by
+        request shape + variable-KEY set, mirroring the reference's
+        plan-cache key)."""
         key = (
             tuple(sorted(columns)) + ("|",) + tuple(sorted(spine_cols))
             + ("$",) + tuple(sorted(var_keys))
@@ -334,7 +339,11 @@ class FeatureModel:
             kind, resolved = self.resolve_name(col, spine_cols, var_keys)
             if kind == "feature":
                 visit(resolved, ())
-        plan = list(needed.values())
+        # as-of stages have no dependencies: lowering them first keeps the
+        # order topological and lets the window pass reuse their entity
+        # exchange. Interval stages keep their place — they shuffle on
+        # (entity, bucket), which the window pass cannot reuse.
+        plan = sorted(needed.values(), key=lambda s: s.kind != "asof")
         self._plan_cache[key] = plan
         return plan
 
@@ -352,9 +361,10 @@ class FeatureModel:
         them (same 6-tier precedence, same errors). Returns
         ``{"columns": [...], "stages": [...]}`` where each column entry
         records its resolution tier and target, and each stage entry is
-        one topo-ordered feature computation with its kind, operator /
-        transformer / store, and dependency names. Pure metadata — no
-        Spark job runs.
+        one feature computation with its kind, operator / transformer /
+        store, and dependency names. Stages come in the order
+        :meth:`materialize` lowers them: as-of stages first, then every
+        dependency before its consumer. Pure metadata — no Spark job runs.
         """
         cols_out: list[dict] = []
         for col in columns:
@@ -431,8 +441,8 @@ class FeatureModel:
                 df = df.withColumn(req, F.col(res))
         # tier-4 convention match resolving to a declared FEATURE: the
         # resolved column only exists once its stage has run, so the alias
-        # is applied mid-plan as each stage lands (compile accepted the
-        # wiring; without this the dependent stage's F.col(<as written>)
+        # is applied mid-plan as each stage or level lands (compile accepted
+        # the wiring; without this the dependent stage's F.col(<as written>)
         # failed at analysis with an unresolved column)
         feat_aliases = {
             req: res
@@ -450,22 +460,32 @@ class FeatureModel:
         df = _land_feat_aliases(df)
         keys, order = (self.entity_key,), self.order
 
-        # group consecutive same-kind stages so transformer batches stay in
-        # one codegen stage and window features share the one window pass
+        # consecutive window/transformer stages form one batch, lowered as
+        # one withColumns per dependency level: a level holds the features
+        # whose feature arguments all landed in earlier levels or stages
         i = 0
         while i < len(plan):
             spec = plan[i]
             if spec.kind in ("transformer", "window"):
-                batch = []
+                level: dict[str, int] = {}
                 while i < len(plan) and plan[i].kind in ("transformer", "window"):
-                    batch.append(plan[i])
+                    s = plan[i]
+                    # levels follow the RESOLVED argument (needed[dep]), so
+                    # a tier-4 name such as gapSecs orders after gap_secs
+                    level[s.name] = 1 + max(
+                        (level.get(needed[d][1], -1) for d in s.deps()
+                         if needed[d][0] == "feature"),
+                        default=-1,
+                    )
                     i += 1
-                # a transformer may depend on a window feature in the same
-                # batch — one withColumn per feature resolves them in order
-                for s in batch:
-                    if s.kind == "transformer":
-                        self._validate_transformer_input(s, df)
-                    df = df.withColumn(s.name, self._lower_one(s, keys, order))
+                for lv in range(max(level.values()) + 1):
+                    batch = [self._features[n] for n, v in level.items() if v == lv]
+                    for s in batch:
+                        if s.kind == "transformer":
+                            self._validate_transformer_input(s, df)
+                    df = df.withColumns(
+                        {s.name: self._lower_one(s, keys, order) for s in batch}
+                    )
                     df = _land_feat_aliases(df)
             elif spec.kind == "interval":
                 from funcify_feature_eng_spark.operators.intervals import (
@@ -626,10 +646,11 @@ class FeatureModel:
             return W.row_number_col(keys, order)
         if op in ("rolling_count", "rolling_sum", "rolling_distinct"):
             # strictly-prior event-time RANGE frame over the model's
-            # event_time. The epoch order key is inlined per feature, so
-            # two rolling features build two WindowExec nodes over the SAME
-            # exchange — declarative-layer convenience; the fused one-pass
-            # form is operators/windows.py::rolling_time_agg
+            # event_time. The epoch order key is inlined per feature; the
+            # rolling features of one dependency level land in one
+            # withColumns, where the analyzer extracts that key once and
+            # they share one WindowExec (the frame-level twin is
+            # operators/windows.py::rolling_time_agg)
             w_s = int(spec.params.get("window_s", 3600))
             epoch = F.floor(
                 F.unix_micros(F.col(self.event_time).cast("timestamp")) / F.lit(1000000)

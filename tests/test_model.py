@@ -424,3 +424,137 @@ def test_window_scaling_verbs_match_frame_operators(spark):
     assert plan.count("Exchange") <= 1, plan
     with pytest.raises(PlanError):
         m.declare_window_feature("bad", "robust_scale", col="v")
+
+
+def _plan_counts(df):
+    """(Exchange, Window) operator counts of a fresh, un-executed frame's
+    physical plan (a finalized AQE plan renders each shuffle stage with
+    the word Exchange twice)."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("Exchange"), len(re.findall(r"\bWindow \[", plan)), plan
+
+
+def _rows(df, cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_window_transformer_asof_request_runs_on_one_exchange(
+    spark, transcripts, feature_store
+):
+    """Window, transformer and strictly-prior as-of features in one
+    request share ONE hashpartitioning(entity) exchange: the as-of stage
+    lowers first and the window pass reuses its partitioning, and each
+    dependency level lands in one withColumns, so same-spec window
+    expressions collapse into shared Window operators."""
+    from funcify_feature_eng_spark.functions.text import char_len, token_count
+    from funcify_feature_eng_spark.operators import windows as W
+    from funcify_feature_eng_spark.operators.asof import asof_join
+
+    m = FeatureModel(entity_key="conv_id", order=("turn_idx", "ts"), event_time="ts")
+    m.declare_window_feature("prior_role", op="lag", col="role")
+    m.declare_window_feature("last_tool", op="ffill_strict", col="tool")
+    m.declare_window_feature("gap_s", op="gap")
+    m.declare_window_feature("session_id", op="session", gap_threshold_s=1800.0)
+    m.declare_transformer_feature("text_len", "char_len", args=["text"])
+    m.declare_transformer_feature("n_tokens", "token_count", args=["text"])
+    m.register_store("fs", feature_store, last_updated="value_at_ts")
+    m.declare_asof_feature(
+        "store_value", "fs", value_col="value",
+        allow_exact_matches=False, right_order=["value"],
+    )
+    cols = ["conv_id", "turn_idx", "prior_role", "last_tool", "gap_s",
+            "session_id", "text_len", "n_tokens", "store_value"]
+    out = m.materialize(transcripts, cols)
+    n_exchange, n_window, plan = _plan_counts(out)
+    assert n_exchange == 1, plan
+    # one Window for the as-of fill, one for the shared-spec window
+    # features, one for the lag nested inside session_id
+    assert n_window == 3, plan
+
+    keys, order = ["conv_id"], ["turn_idx", "ts"]
+    ref = asof_join(
+        transcripts, feature_store, on=keys, left_ts="ts", right_ts="value_at_ts",
+        value_cols={"value": "store_value"}, allow_exact_matches=False,
+        right_order=["value"],
+    ).select(
+        "conv_id", "turn_idx",
+        W.lag_col("role", keys, order).alias("prior_role"),
+        W.ffill_col("tool", keys, order, strict_prior=True).alias("last_tool"),
+        W.gap_seconds("ts", keys, order).alias("gap_s"),
+        W.session_id("ts", keys, order, 1800.0).alias("session_id"),
+        char_len(F.col("text")).alias("text_len"),
+        token_count(F.col("text")).alias("n_tokens"),
+        "store_value",
+    )
+    assert _rows(out, cols) == _rows(ref, cols)
+
+
+def test_dependency_levels_match_per_feature_chain(spark, transcripts, feature_store):
+    """Features land one withColumns per dependency level. Every chain
+    shape must equal a hand-built chain of one withColumn per feature:
+    transformer over a window feature, transformer over a transformer
+    (two levels deep), a tier-4 convention-name argument, a window over
+    an as-of feature, and as-of features under the segmented and
+    broadcast strategies and the nearest direction."""
+    from funcify_feature_eng_spark.functions.scalars import negative_to_null
+    from funcify_feature_eng_spark.functions.text import char_len
+    from funcify_feature_eng_spark.operators import windows as W
+    from funcify_feature_eng_spark.operators.asof import asof_join
+
+    m = FeatureModel(entity_key="conv_id", order=("turn_idx", "ts"), event_time="ts")
+    m.register_store("fs", feature_store, last_updated="value_at_ts")
+    m.declare_window_feature("gap_secs", op="gap")
+    m.declare_transformer_feature("gap_nonneg", "negative_to_null", args=["gap_secs"])
+    m.declare_transformer_feature("gap_twice", "negative_to_null", args=["gap_nonneg"])
+    m.declare_transformer_feature("turn_len", "char_len", args=["text"])
+    m.declare_transformer_feature("len_nonneg", "negative_to_null", args=["turn_len"])
+    m.declare_transformer_feature("gap_clean", "negative_to_null", args=["gapSecs"])
+    m.declare_window_feature("prior_store", op="lag", col="store_prior")
+    asofs = {
+        "store_prior": dict(allow_exact_matches=False),
+        "store_seg": dict(strategy="segmented"),
+        "store_bc": dict(strategy="broadcast"),
+        "store_near": dict(direction="nearest"),
+    }
+    for name, kw in asofs.items():
+        m.declare_asof_feature(name, "fs", value_col="value", right_order=["value"], **kw)
+    feats = ["gap_twice", "gap_clean", "len_nonneg", "prior_store", "gap_nonneg",
+             "gap_secs", "turn_len", "store_prior", "store_seg", "store_bc",
+             "store_near"]
+    cols = ["conv_id", "turn_idx", *feats]
+    out = m.materialize(transcripts, cols)
+
+    # describe() lists the lowered order: as-of stages first, then every
+    # dependency before its consumer
+    stages = m.describe(cols, transcripts.columns)["stages"]
+    kinds = [s["kind"] for s in stages]
+    assert kinds[:4] == ["asof"] * 4 and "asof" not in kinds[4:]
+    pos = {s["feature"]: s["stage"] for s in stages}
+    assert pos["gap_secs"] < pos["gap_nonneg"] < pos["gap_twice"]
+    assert pos["gap_secs"] < pos["gap_clean"]
+    assert pos["turn_len"] < pos["len_nonneg"]
+    assert pos["store_prior"] < pos["prior_store"]
+
+    keys, order = ["conv_id"], ["turn_idx", "ts"]
+    ref = transcripts
+    for name, kw in asofs.items():
+        ref = asof_join(
+            ref, feature_store, on=keys, left_ts="ts", right_ts="value_at_ts",
+            value_cols={"value": name}, right_order=["value"], **kw,
+        )
+    ref = (
+        ref.withColumn("gap_secs", W.gap_seconds("ts", keys, order))
+        .withColumn("gap_nonneg", negative_to_null(F.col("gap_secs")))
+        .withColumn("gap_twice", negative_to_null(F.col("gap_nonneg")))
+        .withColumn("turn_len", char_len(F.col("text")))
+        .withColumn("len_nonneg", negative_to_null(F.col("turn_len")))
+        .withColumn("gap_clean", negative_to_null(F.col("gap_secs")))
+        .withColumn("prior_store", W.lag_col("store_prior", keys, order))
+    )
+    got = _rows(out, cols)
+    assert got == _rows(ref, cols)
+    # the chains carry values, not only NULLs
+    assert any(r[cols.index("prior_store")] is not None for r in got)
+    assert any(r[cols.index("gap_twice")] is not None for r in got)

@@ -151,6 +151,20 @@ def test_driver_fast_path_equals_distributed(spark):
     }
 
 
+def test_driver_fast_path_int64_overflow_falls_back(spark):
+    """A damping fraction with huge terms: after the first iteration the
+    hub holds ~0.97e12 and has an out-edge, so num·r passes 2^63 in the
+    second. The NumPy int64 fast path must hand over to the DECIMAL loop
+    instead of wrapping node 1's rank."""
+    num, den = 10_000_000, 10_100_000
+    rows = [(leaf, 0) for leaf in range(2, 102)] + [(0, 1)]
+    fast = _run(spark, rows, n_iters=2, damping_num=num, damping_den=den)
+    dist = _run(spark, rows, n_iters=2, damping_num=num, damping_den=den,
+                driver_threshold=0)
+    assert fast == dist
+    assert fast == _twin(rows, n_iters=2, num=num, den=den)
+
+
 def test_lpa_driver_fast_path_equals_distributed(spark):
     import random
 
