@@ -130,6 +130,44 @@ def co_occurrence_edges(
     return out
 
 
+def _incidence(
+    df: DataFrame,
+    group_col: str,
+    item_col: str,
+    item_alias: str,
+    max_group: int,
+    on_oversize: str,
+) -> DataFrame:
+    """Distinct non-NULL ``(__g, <item_alias>)`` incidence rows — the base
+    every per-item count and the group total are taken over.
+
+    Hashed by the ITEM key alone: a subset-key hash partitioning satisfies
+    the (group, item) distinct's clustering requirement AND the per-item
+    count aggregation right after it — one exchange serves both. Under
+    ``on_oversize="skip"`` the oversized groups are dropped here too, so
+    the counts live in the SAME retained-groups universe the edges were
+    built from (counting over all groups understates cosine / lift /
+    Jaccard and can invert ranks)."""
+    from pyspark.sql import Window
+
+    from .util import spread_small_input
+
+    g, i = F.col(group_col), F.col(item_col)
+    base = spread_small_input(
+        df.filter(g.isNotNull() & i.isNotNull())
+        .select(g.alias("__g"), i.alias(item_alias)),
+        item_alias,
+    ).distinct()
+    if on_oversize == "skip":
+        w_g = Window.partitionBy("__g")
+        base = (
+            base.withColumn("__gn", F.count(F.lit(1)).over(w_g))
+            .filter(F.col("__gn") <= F.lit(int(max_group)))
+            .drop("__gn")
+        )
+    return base
+
+
 def item_neighbors(
     df: DataFrame,
     group_col: str,
@@ -176,32 +214,7 @@ def item_neighbors(
         max_group=max_group,
         on_oversize=on_oversize,
     ).localCheckpoint()
-    g, i = F.col(group_col), F.col(item_col)
-    from .util import spread_small_input
-
-    # hash by the ITEM key alone: a subset-key hash partitioning satisfies
-    # the (group, item) distinct's clustering requirement AND the per-item
-    # count aggregation right after it — one exchange serves both
-    base = (
-        spread_small_input(
-            df.filter(g.isNotNull() & i.isNotNull())
-            .select(g.alias("__g"), i.alias("item")),
-            "item",
-        )
-        .distinct()
-    )
-    if on_oversize == "skip":
-        # the incidence counts must live in the SAME retained-groups
-        # universe the edges were built from: skip drops oversized groups
-        # from n_both, so counting n_item over ALL groups would
-        # systematically understate cosine (identical incidence vectors
-        # would no longer reach 1e6) and could invert ranks
-        w_g = Window.partitionBy("__g")
-        base = (
-            base.withColumn("__gn", F.count(F.lit(1)).over(w_g))
-            .filter(F.col("__gn") <= F.lit(int(max_group)))
-            .drop("__gn")
-        )
+    base = _incidence(df, group_col, item_col, "item", max_group, on_oversize)
     cnt = base.groupBy("item").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_item")
     )
@@ -360,7 +373,8 @@ def item_lift(
     **Jaccard**, both on the repo-wide integer ppm grid.
 
     ``lift(a,b) = P(a,b) / (P(a)·P(b)) = n_both·N / (n_a·n_b)`` where N is
-    the number of distinct non-NULL groups. Lift > 1 means the pair
+    the number of distinct non-NULL groups (with ``on_oversize="skip"``,
+    every count is over the retained groups only). Lift > 1 means the pair
     co-occurs more than independence predicts; it is the market-basket
     association measure, and ``log(lift)`` IS pointwise mutual information
     — so ranking by ``lift_ppm`` ranks by PMI with no transcendental in
@@ -395,19 +409,7 @@ def item_lift(
         max_group=max_group,
         on_oversize=on_oversize,
     ).localCheckpoint()
-    g, i = F.col(group_col), F.col(item_col)
-    from .util import spread_small_input
-
-    # hash by the item key alone (subset-key partitioning satisfies the
-    # distinct AND the per-item count — one exchange serves both)
-    gi = (
-        spread_small_input(
-            df.filter(g.isNotNull() & i.isNotNull())
-            .select(g.alias("__g"), i.alias("__i")),
-            "__i",
-        )
-        .distinct()
-    )
+    gi = _incidence(df, group_col, item_col, "__i", max_group, on_oversize)
     cnt = gi.groupBy(F.col("__i").alias("__item")).agg(
         F.count(F.lit(1)).cast("bigint").alias("__n")
     )

@@ -39,7 +39,9 @@ __all__ = [
     "bin_by_cuts",
     "quantile_bin",
     "minmax_scale",
+    "minmax_expr",
     "standardize",
+    "zscore_expr",
     "winsorize",
     "rank_normalize",
     "rank_quantiles",
@@ -153,6 +155,32 @@ def _stats_join(
     return out
 
 
+def minmax_expr(v: Column, mn: Column, mx: Column, scale: int = _PPM) -> Column:
+    """The min-max formula as a Column: floor(scale * (v - mn) / (mx - mn))
+    with the numerator widened to DECIMAL(38) and the exact floor division;
+    NULL ``v`` -> NULL, a constant group (mx == mn) -> 0. ``mn``/``mx`` are
+    the group extrema however they were computed — a broadcast stats join
+    (:func:`minmax_scale`) or a window aggregate (FeatureModel ``minmax``)."""
+    num = (v.cast(_DEC) - mn.cast(_DEC)) * F.lit(int(scale)).cast(_DEC)
+    den = (mx - mn).cast(_DEC)
+    return F.when(v.isNull(), F.lit(None).cast("bigint")).when(
+        mx == mn, F.lit(0).cast("bigint")
+    ).otherwise(exact_floor_div(num, den))
+
+
+def zscore_expr(v: Column, n: Column, s1: Column, s2: Column) -> Column:
+    """The z-score formula as a Column over exact DECIMAL(38) moments
+    ``n = count(v)``, ``s1 = sum(v)``, ``s2 = sum(v^2)`` (see
+    :func:`standardize`); NULL ``v`` and zero-variance groups -> NULL. Like
+    :func:`minmax_expr`, shared by the frame operator and the FeatureModel
+    ``zscore`` window op."""
+    var_num = n * s2 - s1 * s1
+    z = (n * v.cast(_DEC) - s1).cast("double") / F.sqrt(var_num.cast("double"))
+    return F.when(
+        v.isNull() | n.isNull() | (var_num <= 0), F.lit(None).cast("double")
+    ).otherwise(z)
+
+
 def minmax_scale(
     df: DataFrame,
     value_col: str,
@@ -179,14 +207,9 @@ def minmax_scale(
     stats = df.groupBy(*keys).agg(
         F.min(v).alias("__mn"), F.max(v).alias("__mx")
     )
-    num = (v.cast(_DEC) - F.col("__mn").cast(_DEC)) * F.lit(int(scale)).cast(_DEC)
-    den = (F.col("__mx") - F.col("__mn")).cast(_DEC)
-    scaled = F.when(v.isNull(), F.lit(None).cast("bigint")).when(
-        F.col("__mx") == F.col("__mn"), F.lit(0).cast("bigint")
-    ).otherwise(exact_floor_div(num, den))
     return (
         _stats_join(df, stats, keys)
-        .withColumn(out_col, scaled)
+        .withColumn(out_col, minmax_expr(v, F.col("__mn"), F.col("__mx"), scale))
         .drop("__mn", "__mx")
     )
 
@@ -222,17 +245,10 @@ def standardize(
         F.sum(d).alias("__s1"),
         F.sum(d * d).alias("__s2"),
     )
-    var_num = F.col("__n") * F.col("__s2") - F.col("__s1") * F.col("__s1")
-    z = (
-        (F.col("__n") * d - F.col("__s1")).cast("double")
-        / F.sqrt(var_num.cast("double"))
-    )
-    out = F.when(
-        v.isNull() | F.col("__n").isNull() | (var_num <= 0), F.lit(None).cast("double")
-    ).otherwise(z)
+    z = zscore_expr(v, F.col("__n"), F.col("__s1"), F.col("__s2"))
     return (
         _stats_join(df, stats, keys)
-        .withColumn(out_col, out)
+        .withColumn(out_col, z)
         .drop("__n", "__s1", "__s2")
     )
 

@@ -30,10 +30,19 @@ Argument value sources mirror the MaterializationEdge kinds
 VARIABLE_VALUE_PROVIDED (unknown variable → error, like graphql-java
 validation), any other literal is DIRECT_ARGUMENT_VALUE_PROVIDED, and an
 omitted argument keeps the declared default (DEFAULT_ARGUMENT_VALUE_PROVIDED).
-Compiled plans are cached on the model keyed by the canonical document +
-variable-key set — the analog of the 24h plan cache keyed by
+
+Each request compiles onto ONE request-scoped model
+(:meth:`FeatureModel.request_scope`): its variants, aliases and — for the
+GraphQL front door — ad-hoc transformer features live there, never on the
+base model. Both front doors keep compiled scopes in the base model's one
+request cache (``FeatureModel._doc_cache``, see :func:`_materialize`),
+keyed by the canonical document, its variable values, the spine columns and
+the ad-hoc transformer calls — the analog of the 24h plan cache keyed by
 (metamodel.created, variable keys, opName, document)
-(``DefaultSingleRequestMaterializationGraphService.kt:105-180``).
+(``DefaultSingleRequestMaterializationGraphService.kt:105-180``). Every
+declaration, alias, source or store registered on the base model clears
+that cache together with its plan cache, so the next request recompiles
+against the mutated model.
 """
 
 from __future__ import annotations
@@ -45,7 +54,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from funcify_feature_eng_spark.plans.model import FeatureModel, PlanError
+from funcify_feature_eng_spark.functions.scalars import to_snake_case
+from funcify_feature_eng_spark.plans.model import FeatureModel, FeatureSpec, PlanError
 
 _TOP_KEYS = {"variables", "select"}
 _SELECT_KEYS = {"columns", "features", "collections"}
@@ -134,77 +144,18 @@ def parse_document(
     return variables, columns, norm, colls
 
 
-def _doc_cache_key(doc: dict[str, Any]) -> str:
-    # canonical form: sorted-key JSON of the select block + variable KEYS
-    # (values are coerced at dispatch, like the reference's cache key)
-    return json.dumps(
-        {"select": doc.get("select", {}), "var_keys": sorted(doc.get("variables", {}))},
-        sort_keys=True,
-        separators=(",", ":"),
-        default=str,
-    )
-
-
-def _bind_feature_selections(
-    model: FeatureModel,
-    req: FeatureModel,
-    feats: dict[str, dict],
-    variables: dict,
-    what: str = "document",
-) -> list[str]:
-    """Register aliased/parameterized feature variants on the request-scoped
-    model; names that are neither declared features nor variant-requiring
-    pass through as data-element columns (P1). Returns output column names."""
-    out_cols: list[str] = []
-    for out_name, sel in feats.items():
-        base_name = _resolve_feature_name(model, sel["feature"])
-        if base_name is None:
-            if sel["args"]:
-                raise PlanError(
-                    f"{what} selects unknown feature {sel['feature']!r} "
-                    f"(declared: {sorted(model._features)})"
-                )
-            if out_name != sel["feature"]:
-                # aliased column passthrough (GraphQL `alias: field`): route
-                # through the alias registry so J1 tier-3 resolves it
-                from funcify_feature_eng_spark.functions.scalars import to_snake_case
-
-                req._aliases[to_snake_case(out_name)] = sel["feature"]
-            out_cols.append(out_name)  # plain column passthrough
-            continue
-        args = _resolve_args(sel["args"], variables)
-        base = model._features[base_name]
-        if out_name == base_name and not args:
-            out_cols.append(out_name)
-            continue
-        # aliased/parameterized variant: a request-scoped FeatureSpec with
-        # document args overriding the declared defaults
-        variant = replace(base, name=out_name, params={**base.params, **args})
-        if out_name in req._features:
-            del req._features[out_name]
-        req._features[out_name] = variant
-        out_cols.append(out_name)
-    return out_cols
-
-
-def _resolve_feature_name(model: FeatureModel, name: str) -> str | None:
-    """Resolve a selected feature name against the declared features with
-    the same convention-insensitive matching as J1 tiers 2-4 (exact, alias
-    registry, snake_case-equivalent) — so a GraphQL-style ``eventSeq``
-    selection binds the declared ``event_seq`` feature. None if no feature
-    matches (the name may still be a spine/source column)."""
-    from funcify_feature_eng_spark.functions.scalars import to_snake_case
-
-    if name in model._features:
-        return name
-    canon = to_snake_case(name)
-    target = model._aliases.get(canon)
-    if target is not None and target in model._features:
-        return target
-    for f in model._features:
-        if to_snake_case(f) == canon:
-            return f
-    return None
+def _feature_of(
+    req: FeatureModel, name: str, spine_cols: Sequence[str], var_keys: Sequence[str]
+) -> str | None:
+    """The declared feature a selected name resolves to (J1 via
+    :meth:`FeatureModel.resolve_name` — a GraphQL-style ``eventSeq`` binds
+    the declared ``event_seq``), or None when it resolves to anything else
+    or to nothing (the name may still be a spine/source column)."""
+    try:
+        kind, target = req.resolve_name(name, spine_cols, var_keys)
+    except PlanError:
+        return None
+    return target if kind == "feature" else None
 
 
 def compile_document(
@@ -212,26 +163,48 @@ def compile_document(
     doc: dict[str, Any],
     spine_cols: Sequence[str] | None = None,
 ) -> tuple[FeatureModel, list[str], dict[str, dict]]:
-    """Compile a request document against a base model: returns a
+    """Compile a request document against a base model: returns the
     request-scoped model (base features + parameterized/aliased variants),
     the output column list for ``materialize``, and the compiled collection
     specs (field output names bound, ListSegment analog). With
     ``spine_cols`` (known at materialize), flat feature selections may also
     resolve to columns/sources/variables via J1 (GraphQL aliasing)."""
     variables, columns, feats, colls = parse_document(doc)
+    req = model.request_scope()
+    cols = tuple(spine_cols or ())
+    var_keys = tuple(sorted(variables))
+    # every selection resolves against the scope as it stood before this
+    # document; the variants and aliases they bind land after the last one
+    variants: dict[str, FeatureSpec] = {}
+    aliases: dict[str, str] = {}
 
-    req = FeatureModel(
-        entity_key=model.entity_key,
-        order=model.order,
-        event_time=model.event_time,
-        registry=model.registry,
-        max_depth=model.max_depth,
-    )
-    req._features = dict(model._features)
-    req._aliases = dict(model._aliases)
-    req._stores = dict(model._stores)
-    req._sources = dict(model._sources)
-    req._last_updated = dict(model._last_updated)
+    def bind(sels: dict[str, dict], what: str = "document") -> list[str]:
+        # aliased/parameterized feature variants become request-scoped
+        # FeatureSpecs; names that are neither declared features nor
+        # variant-requiring pass through as data-element columns (P1)
+        out_cols: list[str] = []
+        for out_name, sel in sels.items():
+            base_name = _feature_of(req, sel["feature"], cols, var_keys)
+            if base_name is None:
+                if sel["args"]:
+                    raise PlanError(
+                        f"{what} selects unknown feature {sel['feature']!r} "
+                        f"(declared: {sorted(req._features)})"
+                    )
+                if out_name != sel["feature"]:
+                    # aliased column passthrough (GraphQL `alias: field`):
+                    # route through the alias registry so J1 tier-3 resolves it
+                    aliases[to_snake_case(out_name)] = sel["feature"]
+                out_cols.append(out_name)
+                continue
+            args = _resolve_args(sel["args"], variables)
+            if out_name != base_name or args:
+                # document args override the declared defaults
+                base = req._features[base_name]
+                variants.pop(out_name, None)
+                variants[out_name] = replace(base, name=out_name, params={**base.params, **args})
+            out_cols.append(out_name)
+        return out_cols
 
     out_cols = list(columns)
     if colls:
@@ -241,39 +214,38 @@ def compile_document(
         # latest-in-model-order value — the "current state" reading, the
         # same latest-prior convention as J3/as-of. Deterministic because
         # the model order is a total order per entity (O1).
-        scalar_outs = _bind_feature_selections(model, req, feats, variables)
-        out_cols += scalar_outs
+        out_cols += bind(feats)
         for cname, cspec in colls.items():
             if cname in out_cols:
                 raise PlanError(
                     f"collection {cname!r} collides with a scalar selection"
                 )
-            cspec["field_cols"] = _bind_feature_selections(
-                model, req, cspec["fields"], variables, what=f"collection {cname!r}"
-            )
+            cspec["field_cols"] = bind(cspec["fields"], what=f"collection {cname!r}")
             out_cols.append(cname)
     else:
         # strictly-validated flat path: a feature selection must resolve to
         # a declared feature, or (when the spine is known) to a column /
         # source field / variable — unresolvable names are compile errors
-        for out_name, sel in feats.items():
-            if _resolve_feature_name(model, sel["feature"]) is not None:
+        for sel in feats.values():
+            if _feature_of(req, sel["feature"], cols, var_keys) is not None:
                 continue
             if spine_cols is None:
                 raise PlanError(
                     f"document selects unknown feature {sel['feature']!r} "
-                    f"(declared: {sorted(model._features)})"
+                    f"(declared: {sorted(req._features)})"
                 )
             try:
-                model.resolve_name(
-                    sel["feature"], spine_cols,
-                    tuple(sorted(doc.get("variables", {}))),
-                )
+                req.resolve_name(sel["feature"], spine_cols, var_keys)
             except PlanError as e:
                 raise PlanError(
                     f"document selects unknown feature {sel['feature']!r}: {e}"
                 ) from None
-        out_cols += _bind_feature_selections(model, req, feats, variables)
+        out_cols += bind(feats)
+    for name, spec in variants.items():
+        req._features.pop(name, None)
+        req._features[name] = spec
+    req._aliases.update(aliases)
+    req._invalidate()
     return req, out_cols, colls
 
 
@@ -282,37 +254,49 @@ def materialize_document(
 ) -> DataFrame:
     """Execute a document-shaped request on a spine through the base model.
 
-    Request-scoped compiled models are cached on the base model keyed by the
-    canonical document (the 24h-plan-cache analog); variable VALUES are
-    applied at compile because they parameterize column expressions — a
-    changed value is a different plan, hence part of the key via args."""
-    cache = getattr(model, "_doc_cache", None)
-    if cache is None:
-        cache = {}
-        model._doc_cache = cache
-    # spine columns join the key: compile now validates flat selections
-    # against them, so a compile cached for one spine must not be reused
-    # for a spine with different columns
+    The compiled request scope comes from the base model's request cache
+    (the 24h-plan-cache analog, see the module docstring)."""
+    return _materialize(model, spine, doc)
+
+
+def _materialize(
+    model: FeatureModel,
+    spine: DataFrame,
+    doc: dict[str, Any],
+    transformers: tuple[tuple[str, str, tuple[str, ...]], ...] = (),
+) -> DataFrame:
+    """The request path of both front doors. ``transformers`` are ad-hoc
+    ``(output, transformer, argument names)`` invocations (GraphQL's
+    ``transformer { ... }``), declared on the request scope before the
+    document binds.
+
+    The key: the canonical document (sorted-key JSON of the select block +
+    variable KEYS), its variable VALUES — they parameterize column
+    expressions, so a changed value is a different plan — the spine
+    columns, which flat selections are validated against, and the ad-hoc
+    invocations."""
     key = (
-        _doc_cache_key(doc),
+        json.dumps(
+            {"select": doc.get("select", {}), "var_keys": sorted(doc.get("variables", {}))},
+            sort_keys=True,
+            separators=(",", ":"),
+            default=str,
+        ),
         json.dumps(doc.get("variables", {}), sort_keys=True, default=str),
         tuple(sorted(spine.columns)),
-        # model mutation counter: compile snapshots the model's feature/
-        # alias/source registries into the request model, so a declaration
-        # made AFTER a document ran must invalidate that snapshot — the
-        # tabular path's _plan_cache clears on mutation, and without this
-        # term the two entry points disagreed on a mutated model
-        getattr(model, "_mutations", 0),
+        transformers,
     )
-    hit = cache.get(key)
+    hit = model._doc_cache.get(key)
     if hit is None:
-        hit = compile_document(model, doc, spine.columns)
-        cache[key] = hit
+        req = model.request_scope()
+        for out_name, tname, args in transformers:
+            req.declare_transformer_feature(out_name, tname, args=args)
+        hit = model._doc_cache[key] = compile_document(req, doc, spine.columns)
     req, out_cols, colls = hit
+    # variables also feed J1 tier-6 resolution (names satisfiable from the
+    # request's variable set), not just feature arguments
     variables = doc.get("variables")
     if not colls:
-        # variables also feed J1 tier-6 resolution (names satisfiable from
-        # the request's variable set), not just feature arguments
         return req.materialize(spine, out_cols, variables=variables)
     return _materialize_collections(req, spine, colls, variables, out_cols)
 
@@ -375,8 +359,6 @@ def _materialize_collections(
         # NB: a one-parameter lambda — a default second param would make
         # PySpark treat it as the (element, index) binary form
         return lambda x: F.struct(*[x[f].alias(f) for f in field_cols])
-
-    from funcify_feature_eng_spark.functions.scalars import to_snake_case
 
     def _selects_entity(c: str) -> bool:
         # the entity key may be selected under a convention alias (userId)

@@ -8,7 +8,9 @@ the shipped fixed query ``stream/StreamFunctions.kt:62-102``). This module
 is a hand-written parser for the GraphQL subset that query uses (no
 graphql-java / graphql-core in the sandbox), lowering the document to the
 dict shape :mod:`funcify_feature_eng_spark.plans.document` executes — the
-two front doors share one compiler and one plan cache, like the
+two front doors share one compiler (``compile_document`` onto one request
+scope), one request cache on the base model and, through the scope's
+``FeatureModel.materialize``, the tabular door's plan cache, like the
 reference's one materialization graph behind both tabular and GraphQL
 entry points (``TabularQueryDocumentCreator.kt:44-108``).
 
@@ -713,6 +715,14 @@ def validate_request(
                 f"GraphQL validation: entity-lookup argument at '{where}' "
                 f"resolved to a {kind}, expected a spine column"
             )
+        if col_name in tx_outs and col_name not in spine_cols:
+            # the ad-hoc transformer output becomes a request-scoped feature
+            # that would outrank the convention-matched spine column
+            raise PlanError(
+                f"GraphQL validation: entity-lookup argument at '{where}' "
+                "collides with a transformer output of the same name — "
+                "rename the transformer output alias"
+            )
 
 
 # ------------------------------------------------------------ execution
@@ -735,7 +745,7 @@ def materialize_graphql(
     ``MaterializationEdge.kt:7-14``)."""
     from pyspark.sql import functions as F
 
-    from funcify_feature_eng_spark.plans.document import materialize_document
+    from funcify_feature_eng_spark.plans.document import _materialize
 
     lowered = lower_graphql(src, operation_name, variables)
     op = lowered.operation
@@ -761,23 +771,11 @@ def materialize_graphql(
     # schema before any J1 resolution — precise errors name document paths
     validate_request(model, lowered, spine.columns, tuple(merged_vars))
 
-    # request-scoped model clone: ad-hoc transformer invocations register as
-    # transformer features wired to synthesized literal variables (tier 6)
-    req = FeatureModel(
-        entity_key=model.entity_key, order=model.order,
-        event_time=model.event_time, registry=model.registry,
-        max_depth=model.max_depth,
-    )
-    req._features = dict(model._features)
-    req._aliases = dict(model._aliases)
-    req._stores = dict(model._stores)
-    req._sources = dict(model._sources)
-    req._last_updated = dict(model._last_updated)
-
     doc = {"select": dict(lowered.doc["select"])}
     if merged_vars:
         doc["variables"] = merged_vars
     feats = dict(doc["select"].get("features", {}))
+    transformers: list[tuple[str, str, tuple[str, ...]]] = []
     for i, (out_name, tname, targs) in enumerate(lowered.transformer_calls):
         arg_cols: list[str] = []
         for k, v in targs.items():
@@ -788,28 +786,15 @@ def materialize_graphql(
                 merged_vars[lit_name] = v
                 doc["variables"] = merged_vars
                 arg_cols.append(lit_name)
-        req.declare_transformer_feature(out_name, tname, args=arg_cols)
+        transformers.append((out_name, tname, tuple(arg_cols)))
         feats[out_name] = {}
     if feats:
         doc["select"]["features"] = feats
 
     filtered = spine
     for col_name, v in lowered.filters.items():
-        # validate_request guaranteed kind == "column" against the BASE
-        # model — but this resolution runs on the request-scoped clone
-        # AFTER ad-hoc transformer outputs registered, and an output named
-        # like the lookup argument would shadow the spine column in the
-        # exact-feature tier; re-assert the kind so the collision is a
-        # precise error, not an AnalysisException on a wrong column
-        _kind, resolved = req.resolve_name(
-            col_name, spine.columns, tuple(merged_vars)
-        )
-        if _kind != "column":
-            raise PlanError(
-                f"GraphQL: entity-lookup argument {col_name!r} collides "
-                f"with a request-scoped {_kind} of the same name — rename "
-                "the transformer output alias"
-            )
+        # validate_request guaranteed a spine column
+        _kind, resolved = model.resolve_name(col_name, spine.columns, tuple(merged_vars))
         value = v
         if isinstance(v, str) and v.startswith("$"):
             vname = v[1:]
@@ -820,4 +805,6 @@ def materialize_graphql(
             value = merged_vars[vname]
         filtered = filtered.filter(F.col(resolved) == F.lit(value))
 
-    return materialize_document(req, filtered, doc)
+    # ad-hoc transformer invocations become transformer features of the
+    # request scope, wired to synthesized literal variables (tier 6)
+    return _materialize(model, filtered, doc, tuple(transformers))

@@ -7,21 +7,29 @@ Spark-first:
 
 * a *request* is a list of output column names (the tabular entry point B,
   ``TabularQueryDocumentCreator.kt:44-108``),
-* *compile* resolves each name against spine columns, the alias registry and
-  declared features (the J1 auto-wiring precedence, simplified to: exact
-  column → alias/convention-equivalent column → feature), topo-sorts the
-  feature DAG (J5 ``dispatch/...DispatchService.kt:761-853``), and caches the
-  plan by request shape (the 24 h plan cache,
+* *compile* makes the request's name-resolution decision, once: it
+  resolves every requested column and every feature argument (the J1 6-tier
+  precedence, :meth:`FeatureModel.resolve_name`), topo-sorts the feature DAG
+  (J5 ``dispatch/...DispatchService.kt:761-853``), binds each stage's
+  arguments to the resolved column or feature name, and caches the bound
+  stages with that wiring by request shape (the 24 h plan cache,
   ``DefaultSingleRequestMaterializationGraphService.kt:78-84``),
-* *lower* turns the plan into ONE DataFrame lineage. As-of stages depend on
-  nothing, so compile places them first: their ``asof_join`` shuffles the
-  spine on the entity key, and the window pass after it reuses that
-  ``hashpartitioning(entity)`` exchange (Filter/Project keep it). Window and
-  transformer features land as one ``withColumns`` per dependency level, so
-  Catalyst analyzes the plan once per level and collapses same-spec window
-  expressions into one Window operator. Spark's lazy DAG is the
-  dispatched-publisher graph; Catalyst's ReuseExchange is the ``.cache()``
-  memoization.
+* *lower* reads the bound plan and never re-resolves: it lands the tier-5
+  source joins and tier-6 variable literals, then turns the stages into ONE
+  DataFrame lineage. As-of stages depend on nothing, so compile places them
+  first: their ``asof_join`` shuffles the spine on the entity key, and the
+  window pass after it reuses that ``hashpartitioning(entity)`` exchange
+  (Filter/Project keep it). Window and transformer features land as one
+  ``withColumns`` per dependency level (levels read off the bound
+  arguments), so Catalyst analyzes the plan once per level and collapses
+  same-spec window expressions into one Window operator. Spark's lazy DAG
+  is the dispatched-publisher graph; Catalyst's ReuseExchange is the
+  ``.cache()`` memoization.
+
+Request scopes: the document and GraphQL front doors bind a request's
+variants and ad-hoc features onto :meth:`FeatureModel.request_scope`, and
+keep the compiled scopes in the base model's request cache; every mutator
+clears both caches through :meth:`FeatureModel._invalidate`.
 
 Temporal auto-tracking (J3, ``StandardQueryConnector.kt:2512-2602``): the
 model requires an ``event_time`` column and refuses to compile if the spine
@@ -30,9 +38,10 @@ lacks it — every feature value is implicitly "as of" that column.
 
 from __future__ import annotations
 
+import copy
 from collections.abc import Sequence
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass, field, replace
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -41,6 +50,7 @@ from funcify_feature_eng_spark.functions.registry import TransformerRegistry, de
 from funcify_feature_eng_spark.functions.scalars import to_snake_case
 from funcify_feature_eng_spark.operators import windows as W
 from funcify_feature_eng_spark.operators.asof import asof_join
+from funcify_feature_eng_spark.operators.scaling import minmax_expr, zscore_expr
 
 _WINDOW_OPS = {
     "lag", "lead", "ffill", "ffill_strict", "bfill", "gap", "session", "row_number",
@@ -88,6 +98,14 @@ class PlanError(ValueError):
     pass
 
 
+class _BoundPlan(NamedTuple):
+    # stages in lowered order, arguments bound to resolved names
+    stages: list[FeatureSpec]
+    # requested column / argument name -> resolve_name's (kind, target), in
+    # landing order: requested columns, then arguments in stage order
+    wiring: dict[str, tuple[str, Any]]
+
+
 class FeatureModel:
     """Registry of sources (named right-side tables), transformers and
     features over one entity spine — the FeatureEngineeringModel analog
@@ -116,11 +134,30 @@ class FeatureModel:
         # per-domain @lastUpdated registry (J3): store/source name → its
         # temporal attribute (LastUpdatedCoordinatesRegistry.kt:22-35)
         self._last_updated: dict[str, str] = {}
-        self._plan_cache: dict[tuple[str, ...], list[FeatureSpec]] = {}
-        # bumped on every declaration/alias/source registration; external
-        # caches snapshotting this model (plans/document._doc_cache) fold
-        # it into their keys so model mutation invalidates them
-        self._mutations: int = 0
+        self._plan_cache: dict[tuple[str, ...], _BoundPlan] = {}
+        # compiled request scopes of the document / GraphQL front doors
+        # (plans/document.py), keyed by canonical request
+        self._doc_cache: dict[tuple, tuple] = {}
+        self._is_scope = False
+
+    def _invalidate(self) -> None:
+        """Every mutator calls this: both caches snapshot the registries."""
+        self._plan_cache.clear()
+        self._doc_cache.clear()
+
+    def request_scope(self) -> FeatureModel:
+        """The model one request binds its variants, aliases and ad-hoc
+        features onto: this model's declarations in copied registries, with
+        empty caches. A request scope is already private to its request, so
+        scoping it again returns it."""
+        if self._is_scope:
+            return self
+        req = copy.copy(self)
+        for registry in ("_features", "_aliases", "_stores", "_sources", "_last_updated"):
+            setattr(req, registry, dict(getattr(self, registry)))
+        req._plan_cache, req._doc_cache = {}, {}
+        req._is_scope = True
+        return req
 
     # ------------------------------------------------------------- declare
     def register_store(self, name: str, store, last_updated: str | None = None) -> None:
@@ -140,9 +177,9 @@ class FeatureModel:
                 )
             self._last_updated[name] = last_updated
         self._stores[name] = store
-        # re-registering a store swaps its backing data: document-cache
-        # snapshots must not keep serving the old frame
-        self._mutations += 1
+        # re-registering a store swaps its backing data: cached request
+        # scopes must not keep serving the old frame
+        self._invalidate()
 
     def register_source(
         self, name: str, df: DataFrame, join_key: str | None = None, broadcast: bool = True
@@ -156,16 +193,14 @@ class FeatureModel:
         if key not in df.columns:
             raise PlanError(f"source {name!r}: join key {key!r} not in its columns")
         self._sources[name] = (df, key, broadcast)
-        self._plan_cache.clear()
-        self._mutations += 1
+        self._invalidate()
 
     def alias(self, alias: str, target: str) -> None:
         """@alias directive analog (AliasCoordinatesRegistry)."""
         self._aliases[to_snake_case(alias)] = target
         # the alias tier outranks the convention tier, so any cached plan
         # that resolved the name conventionally is now stale
-        self._plan_cache.clear()
-        self._mutations += 1
+        self._invalidate()
 
     def declare_transformer_feature(
         self, name: str, transformer: str, args: Sequence[str], **params: Any
@@ -241,8 +276,7 @@ class FeatureModel:
         if spec.name in self._features:
             raise PlanError(f"feature {spec.name!r} already declared")
         self._features[spec.name] = spec
-        self._plan_cache.clear()
-        self._mutations += 1
+        self._invalidate()
 
     # ------------------------------------------------------------- compile
     def resolve_name(
@@ -307,16 +341,31 @@ class FeatureModel:
     ) -> list[FeatureSpec]:
         """Topo-sorted feature stages needed for the requested columns, in
         the order :meth:`materialize` lowers them: as-of stages first, then
-        the rest with every dependency before its consumer (plan-cached by
-        request shape + variable-KEY set, mirroring the reference's
-        plan-cache key)."""
+        the rest with every dependency before its consumer. Each stage's
+        arguments are bound to the column or feature name they resolve to.
+        Plan-cached by request shape + variable-KEY set, mirroring the
+        reference's plan-cache key."""
+        return self._bind(columns, spine_cols, var_keys).stages
+
+    def _bind(
+        self,
+        columns: Sequence[str],
+        spine_cols: Sequence[str],
+        var_keys: Sequence[str],
+    ) -> _BoundPlan:
         key = (
             tuple(sorted(columns)) + ("|",) + tuple(sorted(spine_cols))
             + ("$",) + tuple(sorted(var_keys))
         )
         if key in self._plan_cache:
             return self._plan_cache[key]
+        resolved: dict[str, tuple[str, Any]] = {}
         needed: dict[str, FeatureSpec] = {}
+
+        def resolve(name: str) -> tuple[str, Any]:
+            if name not in resolved:
+                resolved[name] = self.resolve_name(name, spine_cols, var_keys)
+            return resolved[name]
 
         def visit(fname: str, stack: tuple[str, ...]) -> None:
             if fname in stack:
@@ -330,21 +379,38 @@ class FeatureModel:
                 return
             spec = self._features[fname]
             for dep in spec.deps():
-                kind, resolved = self.resolve_name(dep, spine_cols, var_keys)
+                kind, target = resolve(dep)
                 if kind == "feature":
-                    visit(resolved, stack + (fname,))
+                    visit(target, stack + (fname,))
             needed[fname] = spec  # post-order insert = topo order
 
         for col in columns:
-            kind, resolved = self.resolve_name(col, spine_cols, var_keys)
+            kind, target = resolve(col)
             if kind == "feature":
-                visit(resolved, ())
+                visit(target, ())
         # as-of stages have no dependencies: lowering them first keeps the
         # order topological and lets the window pass reuse their entity
         # exchange. Interval stages keep their place — they shuffle on
         # (entity, bucket), which the window pass cannot reuse.
-        plan = sorted(needed.values(), key=lambda s: s.kind != "asof")
-        self._plan_cache[key] = plan
+        order = sorted(needed.values(), key=lambda s: s.kind != "asof")
+        wiring = {col: resolved[col] for col in columns}
+        for spec in order:
+            for dep in spec.deps():
+                wiring.setdefault(dep, resolved[dep])
+
+        def bound(name: str) -> str:
+            # a column / feature argument reads its resolved name; a source
+            # field or variable lands under the name as written
+            kind, target = wiring[name]
+            return target if kind in ("column", "feature") else name
+
+        stages = [
+            replace(s, args=tuple(bound(a) for a in s.args)) if s.kind == "transformer"
+            else replace(s, col=bound(s.col)) if s.kind == "window" and s.col
+            else s
+            for s in order
+        ]
+        plan = self._plan_cache[key] = _BoundPlan(stages, wiring)
         return plan
 
     def describe(
@@ -357,23 +423,23 @@ class FeatureModel:
         materialization-graph rendering analog (it serializes the request
         graph for inspection; here the same information is two lists).
 
-        ``columns`` resolve exactly as :meth:`materialize` would resolve
-        them (same 6-tier precedence, same errors). Returns
-        ``{"columns": [...], "stages": [...]}`` where each column entry
-        records its resolution tier and target, and each stage entry is
-        one feature computation with its kind, operator / transformer /
-        store, and dependency names. Stages come in the order
-        :meth:`materialize` lowers them: as-of stages first, then every
-        dependency before its consumer. Pure metadata — no Spark job runs.
+        Reads the plan :meth:`compile` binds, so ``columns`` resolve exactly
+        as :meth:`materialize` resolves them (same 6-tier precedence, same
+        errors). Returns ``{"columns": [...], "stages": [...]}`` where each
+        column entry records its resolution tier and target, and each stage
+        entry is one feature computation with its kind, operator /
+        transformer / store, and resolved dependency names. Stages come in
+        the order :meth:`materialize` lowers them: as-of stages first, then
+        every dependency before its consumer. Pure metadata — no Spark job
+        runs.
         """
-        cols_out: list[dict] = []
-        for col in columns:
-            kind, resolved = self.resolve_name(col, list(spine_cols), var_keys)
-            cols_out.append({"column": col, "resolves": kind, "target": resolved})
+        plan = self._bind(columns, list(spine_cols), var_keys)
+        cols_out = [
+            {"column": col, "resolves": plan.wiring[col][0], "target": plan.wiring[col][1]}
+            for col in columns
+        ]
         stages_out: list[dict] = []
-        for i, spec in enumerate(
-            self.compile(columns, list(spine_cols), var_keys)
-        ):
+        for i, spec in enumerate(plan.stages):
             entry: dict = {"stage": i, "feature": spec.name, "kind": spec.kind,
                            "depends_on": list(spec.deps())}
             if spec.kind == "window":
@@ -407,19 +473,13 @@ class FeatureModel:
                 f"spine lacks event-time column {self.event_time!r} — temporal "
                 "auto-tracking (J3) requires it on every source"
             )
-        plan = self.compile(columns, spine.columns, tuple(sorted(variables)))
+        plan = self._bind(columns, spine.columns, tuple(sorted(variables)))
 
-        # J1 wiring pass: resolve every requested column AND feature argument;
-        # tier-5 hits become one pruned equi-join per source (broadcast for
-        # dimension-sized sources, J6), tier-6 hits become literal columns.
-        needed: dict[str, tuple[str, Any]] = {}
-        for col in columns:
-            needed[col] = self.resolve_name(col, spine.columns, variables)
-        for spec in plan:
-            for dep in spec.deps():
-                needed.setdefault(dep, self.resolve_name(dep, spine.columns, variables))
+        # compile's wiring: tier-5 hits become one pruned equi-join per
+        # source (broadcast for dimension-sized sources, J6), tier-6 hits
+        # become literal columns, both under the name as written
         per_src: dict[str, dict[str, str]] = {}
-        for req, (kind, res) in needed.items():
+        for req, (kind, res) in plan.wiring.items():
             if kind == "source":
                 src, field = res
                 per_src.setdefault(src, {})[req] = field
@@ -432,61 +492,38 @@ class FeatureModel:
             if bcast:
                 sel = F.broadcast(sel)
             df = df.join(sel, on=join_key, how="left")
-        for req, (kind, res) in needed.items():
+        for req, (kind, _res) in plan.wiring.items():
             if kind == "variable":
                 df = df.withColumn(req, F.lit(variables[req]))
-            elif kind == "column" and res != req:
-                # tier-4 convention match used as a feature ARGUMENT: the
-                # stage lowers F.col(<name as written>), so alias it in
-                df = df.withColumn(req, F.col(res))
-        # tier-4 convention match resolving to a declared FEATURE: the
-        # resolved column only exists once its stage has run, so the alias
-        # is applied mid-plan as each stage or level lands (compile accepted
-        # the wiring; without this the dependent stage's F.col(<as written>)
-        # failed at analysis with an unresolved column)
-        feat_aliases = {
-            req: res
-            for req, (kind, res) in needed.items()
-            if kind == "feature" and res != req
-        }
-
-        def _land_feat_aliases(frame):
-            for req, res in list(feat_aliases.items()):
-                if res in frame.columns and req not in frame.columns:
-                    frame = frame.withColumn(req, F.col(res))
-                    del feat_aliases[req]
-            return frame
-
-        df = _land_feat_aliases(df)
         keys, order = (self.entity_key,), self.order
 
         # consecutive window/transformer stages form one batch, lowered as
         # one withColumns per dependency level: a level holds the features
         # whose feature arguments all landed in earlier levels or stages
+        stages = plan.stages
         i = 0
-        while i < len(plan):
-            spec = plan[i]
+        while i < len(stages):
+            spec = stages[i]
             if spec.kind in ("transformer", "window"):
                 level: dict[str, int] = {}
-                while i < len(plan) and plan[i].kind in ("transformer", "window"):
-                    s = plan[i]
-                    # levels follow the RESOLVED argument (needed[dep]), so
-                    # a tier-4 name such as gapSecs orders after gap_secs
+                batch_specs: list[FeatureSpec] = []
+                while i < len(stages) and stages[i].kind in ("transformer", "window"):
+                    s = stages[i]
+                    # bound arguments name features directly; anything not
+                    # in this batch landed before it
                     level[s.name] = 1 + max(
-                        (level.get(needed[d][1], -1) for d in s.deps()
-                         if needed[d][0] == "feature"),
-                        default=-1,
+                        (level.get(d, -1) for d in s.deps()), default=-1
                     )
+                    batch_specs.append(s)
                     i += 1
                 for lv in range(max(level.values()) + 1):
-                    batch = [self._features[n] for n, v in level.items() if v == lv]
+                    batch = [s for s in batch_specs if level[s.name] == lv]
                     for s in batch:
                         if s.kind == "transformer":
                             self._validate_transformer_input(s, df)
                     df = df.withColumns(
                         {s.name: self._lower_one(s, keys, order) for s in batch}
                     )
-                    df = _land_feat_aliases(df)
             elif spec.kind == "interval":
                 from funcify_feature_eng_spark.operators.intervals import (
                     guarded_disjoint,
@@ -512,7 +549,6 @@ class FeatureModel:
                     bucket_s=int(spec.params.get("bucket_s", 3600)),
                     null_end_is_open=True,
                 ).drop(spec.start_col, spec.end_col)
-                df = _land_feat_aliases(df)
                 i += 1
                 continue
             else:  # asof
@@ -555,12 +591,11 @@ class FeatureModel:
                         tolerance_s=spec.tolerance_s,
                         direction=spec.direction,
                     )
-                df = _land_feat_aliases(df)
                 i += 1
 
         out_cols = []
         for col in columns:
-            kind, resolved = needed[col]
+            kind, resolved = plan.wiring[col]
             if kind in ("source", "variable"):
                 out_cols.append(F.col(col))  # materialized under the requested name
             else:
@@ -652,10 +687,7 @@ class FeatureModel:
             # they share one WindowExec (the frame-level twin is
             # operators/windows.py::rolling_time_agg)
             w_s = int(spec.params.get("window_s", 3600))
-            epoch = F.floor(
-                F.unix_micros(F.col(self.event_time).cast("timestamp")) / F.lit(1000000)
-            ).cast("long")
-            wspec = W.time_range_window(keys, epoch, -w_s, -1)
+            wspec = W.time_range_window(keys, W.epoch_seconds(self.event_time), -w_s, -1)
             if op == "rolling_count":
                 return F.count(F.col(c)).over(wspec).cast("long")
             if op == "rolling_sum":
@@ -667,10 +699,10 @@ class FeatureModel:
             )
         if op in ("zscore", "minmax"):
             # within-entity scaling over the SAME partition exchange as the
-            # other window features (unbounded frame); exact-arithmetic
-            # formulas shared with operators/scaling.py::standardize/
-            # minmax_scale — the declarative twin of the frame-level ops.
-            # Integral input is the caller's contract (scaling module doc).
+            # other window features (unbounded frame): the formulas of
+            # operators/scaling.py::standardize/minmax_scale over window
+            # aggregates. Integral input is the caller's contract (scaling
+            # module doc).
             wspec = (
                 Window.partitionBy(*[F.col(k) for k in keys])
                 .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -678,29 +710,14 @@ class FeatureModel:
             v = F.col(c)
             if op == "zscore":
                 d = v.cast("decimal(38,0)")
-                n = F.count(v).over(wspec).cast("decimal(38,0)")
-                s1 = F.coalesce(
-                    F.sum(d).over(wspec), F.lit(0).cast("decimal(38,0)")
+                return zscore_expr(
+                    v,
+                    F.count(v).over(wspec).cast("decimal(38,0)"),
+                    F.sum(d).over(wspec),
+                    F.sum(d * d).over(wspec),
                 )
-                s2 = F.coalesce(
-                    F.sum(d * d).over(wspec), F.lit(0).cast("decimal(38,0)")
-                )
-                var_num = n * s2 - s1 * s1
-                return F.when(
-                    v.isNull() | (var_num <= 0), F.lit(None).cast("double")
-                ).otherwise(
-                    (n * d - s1).cast("double") / F.sqrt(var_num.cast("double"))
-                )
-            scale = int(spec.params.get("scale", 1_000_000))
-            mn = F.min(v).over(wspec)
-            mx = F.max(v).over(wspec)
-            num = (v.cast("decimal(38,0)") - mn.cast("decimal(38,0)")) * F.lit(
-                scale
-            ).cast("decimal(38,0)")
-            den = (mx - mn).cast("decimal(38,0)")
-            from funcify_feature_eng_spark.operators.util import exact_floor_div
-
-            return F.when(v.isNull(), F.lit(None).cast("bigint")).when(
-                mx == mn, F.lit(0).cast("bigint")
-            ).otherwise(exact_floor_div(num, den))
+            return minmax_expr(
+                v, F.min(v).over(wspec), F.max(v).over(wspec),
+                int(spec.params.get("scale", 1_000_000)),
+            )
         raise PlanError(f"unhandled window op {op!r}")

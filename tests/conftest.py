@@ -52,3 +52,20 @@ def feature_store_pd(data_dir):
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA_SF
+
+
+@pytest.fixture()
+def compile_calls(monkeypatch):
+    """A list that grows by one per ``plans.document.compile_document`` call
+    (both request front doors compile through it)."""
+    from funcify_feature_eng_spark.plans import document
+
+    calls: list = []
+    real = document.compile_document
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(document, "compile_document", counted)
+    return calls

@@ -229,3 +229,25 @@ def test_item_lift_min_count(spark, baskets):
         for r in item_lift(baskets, "g", "i", min_count=2).collect()
     }
     assert got == {("a", "b")}
+
+
+def test_item_lift_skip_counts_retained_universe_only(spark):
+    """on_oversize='skip' drops oversized groups from n_a, n_b and N too,
+    not just from the edges: two items co-occurring in every retained
+    basket have lift and Jaccard exactly 1e6, not 500000 / 333333."""
+    from funcify_feature_eng_spark.operators.cooccurrence import item_lift
+
+    rows = [("g1", "a"), ("g1", "b")]  # retained: a,b together
+    # oversized group (4 items > max_group=3) also contains a and b
+    rows += [("big", x) for x in ("a", "b", "x", "y")]
+    df = spark.createDataFrame(rows, "g string, i string")
+    got = {
+        (r["item_a"], r["item_b"]): (
+            r["n_both"], r["n_a"], r["n_b"], r["n_groups_total"],
+            r["lift_ppm"], r["jaccard_ppm"],
+        )
+        for r in item_lift(
+            df, "g", "i", max_group=3, on_oversize="skip"
+        ).collect()
+    }
+    assert got == {("a", "b"): (1, 1, 1, 1, 1_000_000, 1_000_000)}

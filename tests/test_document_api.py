@@ -144,6 +144,47 @@ def test_plan_cache_reuses_compiled_request(spark):
     assert m._doc_cache[next(iter(m._doc_cache))] is first
 
 
+def test_model_mutation_recompiles_document_request(spark, compile_calls):
+    """A feature, alias, source or store registered on the base model
+    clears its request cache: the next identical document request
+    recompiles and resolves against the mutated model."""
+    m = _model()
+    ev = _events(spark)
+    store = spark.createDataFrame(
+        [("u1", "2023-12-31 00:00:00", 10)], "user_id string, at_s string, value long"
+    ).selectExpr("user_id", "cast(at_s as timestamp) as at", "value")
+    m.register_store("st", store, last_updated="at")
+    m.declare_asof_feature("sv", "st")
+    doc = {
+        "variables": {"flag": 7, "tier": 3},
+        "select": {"columns": ["event_id"],
+                   "features": {"eventType": {}, "flag": {}, "tier": {}, "sv": {}}},
+    }
+
+    def run():
+        out = materialize_document(m, ev, doc).orderBy("event_id").collect()
+        return {c: [r[c] for r in out] for c in ("eventType", "flag", "tier", "sv")}
+
+    first = run()
+    assert run() == first and len(compile_calls) == 1
+    assert first == {"eventType": ["view", "click", "view", "view"],
+                     "flag": [7] * 4, "tier": [3] * 4, "sv": [10, 10, 10, None]}
+    # tier 3 (alias) outranks the tier-4 convention column
+    m.alias("eventType", "prior_event_type")
+    assert run()["eventType"] == [None, "view", "click", None] and len(compile_calls) == 2
+    # tier 2 (feature) outranks the tier-6 variable
+    m.declare_window_feature("flag", op="row_number")
+    assert run()["flag"] == [1, 2, 3, 1] and len(compile_calls) == 3
+    # tier 5 (source field) outranks the tier-6 variable
+    m.register_source("tiers", spark.createDataFrame(
+        [("u1", 1), ("u2", 2)], "user_id string, tier long"))
+    assert run()["tier"] == [1, 1, 1, 2] and len(compile_calls) == 4
+    # re-registering a store swaps the as-of feature's data
+    m.register_store("st", store.withColumn("value", F.lit(20).cast("long")),
+                     last_updated="at")
+    assert run()["sv"] == [20, 20, 20, None] and len(compile_calls) == 5
+
+
 # ------------------------------------------------------- nested collections
 def test_collection_collect_direction(spark):
     """ListSegment fan-in: entity → ordered array<struct> with an element

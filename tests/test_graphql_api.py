@@ -163,7 +163,7 @@ def test_graphql_entity_lookup_filter(spark):
 
 def test_graphql_lookup_arg_colliding_transformer_alias_rejected(spark):
     """An ad-hoc transformer output aliased like the entity-lookup argument
-    would shadow the spine column in the request-scoped clone's
+    would shadow the spine column in the request scope's
     exact-feature tier — must be one precise PlanError, not a wrong-column
     filter or AnalysisException."""
     src = """
@@ -512,3 +512,61 @@ def test_skip_include_materializes_identically_to_plain_doc(spark):
                                variables={"verbose": True})
     assert full.columns == ["nTurns", "debug"]
     assert full.count() == slim.count() == 18
+
+
+def test_graphql_identical_requests_compile_once(spark, compile_calls):
+    """The GraphQL request scope (ad-hoc transformer features included) is
+    cached on the base model: three identical requests compile once, a
+    changed variable value compiles again."""
+    m, ev = _model(), _events(spark)
+    outs = [
+        materialize_graphql(m, ev, QUERY).orderBy("userId").collect()
+        for _ in range(3)
+    ]
+    assert len(compile_calls) == 1
+    assert outs[0] == outs[1] == outs[2]
+    materialize_graphql(m, ev, QUERY, variables={"gap": 60.0})
+    assert len(compile_calls) == 2
+
+
+def test_model_mutation_recompiles_graphql_request(spark, compile_calls):
+    """A feature, alias, source or store registered on the base model
+    clears its request cache: the next identical GraphQL request
+    recompiles and resolves against the mutated model."""
+    import datetime as dt
+
+    m, ev = _model(), _events(spark)
+    store = spark.createDataFrame(
+        [(1, dt.datetime(2024, 2, 1), 10)], "user_id long, at timestamp, value long"
+    )
+    m.register_store("st", store, last_updated="at")
+    m.declare_asof_feature("sv", "st")
+    src = """
+    query Q($flag: Int = 7, $tier: Int = 3) {
+        dataElement { eventId eventType flag tier sv }
+    }
+    """
+
+    def run():
+        out = materialize_graphql(m, ev, src).orderBy("eventId").collect()
+        return {c: [r[c] for r in out] for c in ("eventType", "flag", "tier", "sv")}
+
+    first = run()
+    assert run() == first and len(compile_calls) == 1
+    types = ["view", "click", "purchase"] * 2
+    assert first == {"eventType": types * 3, "flag": [7] * 18, "tier": [3] * 18,
+                     "sv": [10] * 6 + [None] * 12}
+    # tier 3 (alias) outranks the tier-4 convention column
+    m.alias("eventType", "prior_event_type")
+    assert run()["eventType"] == ([None] + types[:5]) * 3 and len(compile_calls) == 2
+    # tier 2 (feature) outranks the tier-6 variable
+    m.declare_window_feature("flag", op="row_number")
+    assert run()["flag"] == list(range(1, 7)) * 3 and len(compile_calls) == 3
+    # tier 5 (source field) outranks the tier-6 variable
+    m.register_source("tiers", spark.createDataFrame(
+        [(1, 10), (2, 20)], "user_id long, tier long"))
+    assert run()["tier"] == [10] * 6 + [20] * 6 + [None] * 6 and len(compile_calls) == 4
+    # re-registering a store swaps the as-of feature's data
+    m.register_store("st", store.withColumn("value", F.lit(20).cast("long")),
+                     last_updated="at")
+    assert run()["sv"] == [20] * 6 + [None] * 12 and len(compile_calls) == 5

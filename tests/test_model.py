@@ -558,3 +558,64 @@ def test_dependency_levels_match_per_feature_chain(spark, transcripts, feature_s
     # the chains carry values, not only NULLs
     assert any(r[cols.index("prior_store")] is not None for r in got)
     assert any(r[cols.index("gap_twice")] is not None for r in got)
+
+
+def test_compile_binds_every_tier_once(spark, transcripts):
+    """compile() resolves every requested name and feature argument once
+    and binds the stage arguments to the resolved names: a tier-3 alias, a
+    tier-4 column argument (Role), a tier-4 feature argument (gapSecs), a
+    tier-5 source field (tierName) and a tier-6 variable (tag) in one
+    request equal a hand-built reference, and describe() lists the
+    resolved dependency names."""
+    from funcify_feature_eng_spark.functions.scalars import negative_to_null
+    from funcify_feature_eng_spark.functions.text import char_len
+    from funcify_feature_eng_spark.operators import windows as W
+
+    convs = sorted(r["conv_id"] for r in transcripts.select("conv_id").distinct().collect())
+    profile = spark.createDataFrame(
+        [(c, "t" * (1 + i % 4)) for i, c in enumerate(convs[::2])],
+        "conv_id string, tier_name string",
+    )
+    m = FeatureModel(entity_key="conv_id", order=("turn_idx", "ts"), event_time="ts")
+    m.register_source("profile", profile)
+    m.declare_window_feature("prior_role", op="lag", col="Role")
+    m.declare_window_feature("gap_secs", op="gap")
+    m.declare_transformer_feature("gap_clean", "negative_to_null", args=["gapSecs"])
+    m.declare_transformer_feature("tier_len", "char_len", args=["tierName"])
+    m.declare_transformer_feature("tag_len", "char_len", args=["tag"])
+    m.alias("priorRole", "prior_role")
+    cols = ["conv_id", "turn_idx", "priorRole", "gap_clean", "tierName",
+            "tier_len", "tag_len"]
+    out = m.materialize(transcripts, cols, variables={"tag": "abcd"})
+    assert out.columns == cols
+
+    keys, order = ["conv_id"], ["turn_idx", "ts"]
+    ref = (
+        transcripts.join(profile, "conv_id", "left")
+        .withColumn("priorRole", W.lag_col("role", keys, order))
+        .withColumn("gap_clean", negative_to_null(W.gap_seconds("ts", keys, order)))
+        .withColumn("tierName", F.col("tier_name"))
+        .withColumn("tier_len", char_len(F.col("tier_name")))
+        .withColumn("tag_len", char_len(F.lit("abcd")))
+    )
+    got = _rows(out, cols)
+    assert got == _rows(ref, cols)
+    assert any(r[cols.index("tier_len")] is not None for r in got)
+    assert {r[cols.index("tag_len")] for r in got} == {4}
+
+    plan = m.describe(cols, transcripts.columns, ("tag",))
+    by_col = {c["column"]: (c["resolves"], c["target"]) for c in plan["columns"]}
+    assert by_col["priorRole"] == ("feature", "prior_role")
+    assert by_col["tierName"] == ("source", ("profile", "tier_name"))
+    deps = {s["feature"]: s["depends_on"] for s in plan["stages"]}
+    assert deps == {
+        "prior_role": ["role"],
+        "gap_secs": [],
+        "gap_clean": ["gap_secs"],
+        "tier_len": ["tierName"],
+        "tag_len": ["tag"],
+    }
+    # the stage list compile() returns carries the same bound arguments
+    stages = {s.name: s for s in m.compile(cols, transcripts.columns, ("tag",))}
+    assert stages["gap_clean"].args == ("gap_secs",)
+    assert stages["prior_role"].col == "role"
