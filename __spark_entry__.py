@@ -1106,9 +1106,10 @@ def q_cms_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership in the gate (operators/sketches.py::
     bloom_sketch/bloom_contains): per-lang 512-bit filters over even-doc
-    texts (ONE combinable shuffle of sparse 64-bit words), probed with the
-    distinct odd-doc texts via a broadcast map + pure forall Column check
-    (no explode, no probe-side shuffle). Output = (lang, probed, hits);
+    texts (ONE combinable shuffle of sparse 64-bit words), collected into
+    per-lang dense bitmaps and broadcast; the distinct odd-doc texts ship
+    their JVM xxhash64 bit positions to one vectorized worker-side probe
+    (no explode, join or probe-side shuffle). Output = (lang, probed, hits);
     at this m/n ratio the filter is intentionally tight enough that hits
     include deterministic FALSE POSITIVES beyond the true cross-half
     overlap — the fixture (scripts/make_fixtures.py::bloom_probe_counts,
@@ -4908,9 +4909,10 @@ def q_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact frequent users above a 0.7% share (operators/sketches.py::
-    heavy_hitters): CMS candidate pass packed into ONE broadcast row,
-    map-side probe (CMS never underestimates, so candidates are a
-    guaranteed superset), exact groupBy over candidates only, exact
+    heavy_hitters): CMS candidate pass collected into ONE broadcast
+    (depth, width) grid, map-side vectorized probe of the LongType user
+    ids (CMS never underestimates, so candidates are a guaranteed
+    superset), exact groupBy over candidates only, exact
     re-test — the shuffle carries candidate keys, never the distinct-key
     space. Oracle = plain GROUP BY ... HAVING with the same integer
     threshold; the sketch changes the PLAN, never the rows."""

@@ -173,14 +173,15 @@ def kmv_difference_estimate(
     )
 
 
-def _cms_buckets(value: Column | str, width: int, depth: int) -> Column:
-    """The depth hash positions of a value: row d uses ``xxhash64(d, value)``
-    (Spark's chained multi-arg hash — d as IntegerType seed stage), bucketed
-    by pmod into [0, width)."""
+def _hash_positions(value: Column | str, n: int, depth: int) -> Column:
+    """The depth hash positions of a value — CMS buckets and Bloom bits
+    alike: row d uses ``xxhash64(d, value)`` (Spark's chained multi-arg
+    hash — d as IntegerType seed stage), bucketed by pmod into [0, n), so
+    the pure-Python fixture twin reproduces it exactly."""
     v = F.col(value) if isinstance(value, str) else value
     return F.array(
         *[
-            F.pmod(F.xxhash64(F.lit(d).cast("int"), v), F.lit(width)).cast("int")
+            F.pmod(F.xxhash64(F.lit(d).cast("int"), v), F.lit(n)).cast("int")
             for d in range(depth)
         ]
     )
@@ -219,7 +220,7 @@ def cms_sketch(
     w = F.count(F.lit(1)) if weight_col is None else F.sum(weight_col)
     ex = df.filter(F.col(value_col).isNotNull()).select(
         *keys,
-        F.posexplode(_cms_buckets(value_col, width, depth)).alias("d", "bucket"),
+        F.posexplode(_hash_positions(value_col, width, depth)).alias("d", "bucket"),
         *( [weight_col] if weight_col else [] ),
     )
     return ex.groupBy(*keys, "d", "bucket").agg(w.cast("long").alias("cnt"))
@@ -257,7 +258,7 @@ def cms_estimate(
         *keys,
         value_col,
         *carry,
-        F.posexplode(_cms_buckets(value_col, width, depth)).alias("d", "bucket"),
+        F.posexplode(_hash_positions(value_col, width, depth)).alias("d", "bucket"),
     )
     rhs = F.broadcast(sketch) if broadcast else sketch
     j = ex.join(rhs, [*keys, "d", "bucket"], "left")
@@ -278,19 +279,6 @@ def _bit_mask(pos_mod_64: Column) -> Column:
         ]
     )
     return F.element_at(masks, (pos_mod_64 + F.lit(1)).cast("int"))
-
-
-def _bloom_positions(value: Column | str, m_bits: int, depth: int) -> Column:
-    """The depth bit positions of a value: row d uses ``xxhash64(d, value)``
-    pmod m_bits — same chained-hash convention as :func:`_cms_buckets`, so
-    the pure-Python fixture twin reproduces it exactly."""
-    v = F.col(value) if isinstance(value, str) else value
-    return F.array(
-        *[
-            F.pmod(F.xxhash64(F.lit(d).cast("int"), v), F.lit(m_bits)).cast("int")
-            for d in range(depth)
-        ]
-    )
 
 
 def bloom_sketch(
@@ -326,7 +314,7 @@ def bloom_sketch(
     keys = list(group_by)
     ex = df.filter(F.col(value_col).isNotNull()).select(
         *keys,
-        F.explode(_bloom_positions(value_col, m_bits, depth)).alias("__pos"),
+        F.explode(_hash_positions(value_col, m_bits, depth)).alias("__pos"),
     )
     word = (F.col("__pos") / 64).cast("int")
     mask = _bit_mask(F.pmod(F.col("__pos"), F.lit(64)))
@@ -337,13 +325,13 @@ def bloom_sketch(
     )
 
 
-def _bloom_positions_np(v, m_bits: int, depth: int):
-    """Vectorized NumPy replica of :func:`_bloom_positions` for LongType
-    probe values: ``pmod(xxhash64(int(d), long(v)), m_bits)`` — the
-    XxHash64 int→long chain from functions/xxh64.py in uint64 array math
-    (the per-value lane mix is shared across depths). Bit-equality with
-    the JVM expression is pinned by tests/test_sketches.py::
-    test_bloom_positions_np_matches_jvm. Returns ``(depth, n)`` int64."""
+def _hash_positions_np(v, n: int, depth: int):
+    """Vectorized NumPy replica of :func:`_hash_positions` for LongType
+    values: ``pmod(xxhash64(int(d), long(v)), n)`` — the XxHash64
+    int→long chain from functions/xxh64.py in uint64 array math (the
+    per-value lane mix is shared across depths). Bit-equality with the JVM
+    expression is pinned by tests/test_sketches.py::
+    test_bloom_positions_np_matches_jvm. Returns ``(depth, len(v))`` int64."""
     import numpy as np
 
     from ..functions.xxh64 import _M, P1, P2, P3, P4, P5, xxh64_int
@@ -365,8 +353,74 @@ def _bloom_positions_np(v, m_bits: int, depth: int):
             h ^= h >> u(32)
             # numpy % follows Python sign semantics: result is non-negative
             # for a positive modulus — exactly Spark's pmod
-            out[d] = h.astype(np.int64) % m_bits
+            out[d] = h.astype(np.int64) % n
     return out
+
+
+def _sketch_probe(
+    df: DataFrame,
+    value_col: str,
+    keys: Sequence[str],
+    tables: dict,
+    n: int,
+    depth: int,
+    hit,
+) -> Column:
+    """The one worker-side probe of the sketch family: a boolean Column,
+    ``hit(table, P)`` for each row of ``df``, where ``table`` is the dense
+    NumPy table that ``tables`` maps the row's group-key tuple to (a
+    driver-collected dict, broadcast once) and ``P`` is the ``(depth, rows)``
+    int64 array of the rows' :func:`_hash_positions` in ``[0, n)``. Rows
+    whose group has no table get False.
+
+    Positions reach the worker in one of two ways, chosen by key type.
+    LongType keys ship ONLY the 8-byte key and :func:`_hash_positions_np`
+    computes the positions in one uint64 vector pass; NULL keys are
+    coalesced to 0 JVM-side so the batch keeps a clean int64 dtype (a null
+    would turn the column into float64 and corrupt keys above 2^53) — the
+    caller discards NULL rows. Every other type ships the JVM ``xxhash64``
+    position array: ``xxhash64`` hashes each type its own way, and a
+    NumPy replica over variable-length UTF-8 would be more code and slower
+    on document text."""
+    import numpy as np
+    from pyspark.sql.types import LongType
+
+    bc = df.sparkSession.sparkContext.broadcast(tables)
+    n_keys = len(keys)
+    long_key = isinstance(df.schema[value_col].dataType, LongType)
+
+    @F.pandas_udf("boolean")
+    def _probe(*cols):
+        import pandas as pd
+
+        tabs = bc.value
+        vals = cols[-1]
+        out = np.zeros(len(vals), dtype=bool)
+        if len(vals) == 0 or not tabs:
+            return pd.Series(out)
+        if long_key:
+            P = _hash_positions_np(vals.to_numpy(np.int64), n, depth)
+        else:
+            P = np.stack(vals.to_numpy(), axis=1).astype(np.int64)
+        if n_keys == 0:
+            arr = tabs.get(())
+            if arr is not None:
+                out = hit(arr, P)
+        else:
+            kf = pd.DataFrame({i: cols[i] for i in range(n_keys)})
+            for kt, idx in kf.groupby(
+                list(range(n_keys)), dropna=False, sort=False
+            ).indices.items():
+                arr = tabs.get(kt if n_keys > 1 else (kt,))
+                if arr is not None:
+                    out[idx] = hit(arr, P[:, idx])
+        return pd.Series(out)
+
+    v = F.col(value_col)
+    pos = F.coalesce(v, F.lit(0).cast("long")) if long_key else _hash_positions(
+        v, n, depth
+    )
+    return _probe(*[F.col(k) for k in keys], pos)
 
 
 def bloom_contains(
@@ -376,159 +430,49 @@ def bloom_contains(
     group_by: Sequence[str] = (),
     m_bits: int = 4096,
     depth: int = 3,
-    broadcast: bool = True,
     out_col: str = "maybe_present",
 ) -> DataFrame:
     """Membership probe against a :func:`bloom_sketch` table: adds
     ``out_col`` (boolean) — True iff ALL depth bit positions of the value
     are set (no false negatives; False is definitive absence).
-    ``m_bits``/``depth`` MUST match the sketch's. NULL probe values and
-    probes for groups with no sketch get False (nothing was inserted).
+    ``m_bits``/``depth`` MUST match the sketch's. NULL probe values, NULL
+    group keys and probes for groups with no sketch get False (nothing was
+    inserted).
 
-    Shape (``broadcast=True``, the default): the sparse word table is a
-    BOUNDED driver collect (≤ groups × m_bits/64 rows — the same bytes a
-    packed broadcast would ship) into per-group dense NumPy bitmaps; the
-    depth positions compute JVM-side (one ``xxhash64`` array per row) and a
-    vectorized pandas UDF tests the bits against the broadcast bitmaps.
-    Crucially the bitmap NEVER rides a join: earlier packings (map or dense
-    array joined onto the probe side) copied the whole O(m_bits) structure
-    into EVERY joined output row, which at real sketch sizes dominated the
-    probe scan by orders of magnitude. Pass ``broadcast=False`` for
-    high-cardinality groups (same contract as :func:`cms_estimate`) —
-    that path keeps the per-group packed-map join and never drives the
-    sketch through the driver."""
+    Shape: the sparse word table is a BOUNDED driver collect (≤ groups ×
+    m_bits/64 rows — the bytes of the packed bitmaps) into per-group dense
+    NumPy bitmaps, broadcast once; :func:`_sketch_probe` tests the bits of
+    each probe row worker-side. The bitmap NEVER rides a join: packings
+    joined onto the probe side copy the whole O(m_bits) structure into
+    EVERY joined row, which at real sketch sizes dominates the probe scan
+    by orders of magnitude."""
+    import numpy as np
+
     keys = list(group_by)
-    pos_col = _bloom_positions(value_col, m_bits, depth)
-    if broadcast:
-        import numpy as np
-
-        n_words = m_bits // 64
-        tbl = sketch.select(*keys, "word", "bits").toArrow()
-        words = tbl.column("word").to_numpy(zero_copy_only=False)
-        bits = tbl.column("bits").to_numpy(zero_copy_only=False)
-        key_cols = [tbl.column(k).to_pylist() for k in keys]
-        tables: dict = {}
-        for i in range(len(words)):
-            kt = tuple(kc[i] for kc in key_cols)
-            if any(k is None for k in kt):
-                # a NULL group key never matches an equi-join — mirror the
-                # join path by leaving such sketch rows unreachable
-                continue
-            arr = tables.get(kt)
-            if arr is None:
-                arr = tables[kt] = np.zeros(n_words, dtype=np.int64)
-            arr[int(words[i])] |= int(bits[i])
-        bc = probes.sparkSession.sparkContext.broadcast(tables)
-        n_keys = len(keys)
-        from pyspark.sql.types import LongType
-
-        long_probe = isinstance(probes.schema[value_col].dataType, LongType)
-        if long_probe:
-            # LongType probes ship ONLY the 8-byte key; the depth positions
-            # compute inside the worker as one uint64 vector pass — no
-            # per-row position array is built, serialized, or re-stacked.
-            # NULL keys are coalesced to 0 JVM-side so the batch keeps a
-            # clean int64 dtype (a null in the batch would otherwise
-            # convert the whole column to float64 and corrupt > 2^53
-            # keys); their probe result is discarded by the isNull guard.
-            @F.pandas_udf("boolean")
-            def _probe(*cols):
-                import pandas as pd
-
-                tabs = bc.value
-                vals = cols[-1]
-                n = len(vals)
-                out = np.zeros(n, dtype=bool)
-                if n == 0 or not tabs:
-                    return pd.Series(out)
-                P = _bloom_positions_np(vals.to_numpy(np.int64), m_bits, depth)
-                W = P >> 6
-                S = P & 63
-                if n_keys == 0:
-                    arr = tabs.get(())
-                    if arr is not None:
-                        out = np.ones(n, dtype=bool)
-                        for d in range(depth):
-                            out &= ((arr[W[d]] >> S[d]) & 1) == 1
-                else:
-                    kf = pd.DataFrame({i: cols[i] for i in range(n_keys)})
-                    for kt, idx in kf.groupby(
-                        list(range(n_keys)), dropna=False, sort=False
-                    ).indices.items():
-                        arr = tabs.get(kt if n_keys > 1 else (kt,))
-                        if arr is not None:
-                            hit = np.ones(len(idx), dtype=bool)
-                            for d in range(depth):
-                                hit &= ((arr[W[d][idx]] >> S[d][idx]) & 1) == 1
-                            out[idx] = hit
-                return pd.Series(out)
-
-            probe_args = [F.col(k) for k in keys] + [
-                F.coalesce(F.col(value_col), F.lit(0).cast("long"))
-            ]
-        else:
-
-            @F.pandas_udf("boolean")
-            def _probe(*cols):
-                import pandas as pd
-
-                tabs = bc.value
-                pos = cols[-1]
-                n = len(pos)
-                out = np.zeros(n, dtype=bool)
-                if n == 0 or not tabs:
-                    return pd.Series(out)
-                P = np.stack(pos.to_numpy()).astype(np.int64)
-                W = P >> 6
-                S = P & 63
-                if n_keys == 0:
-                    arr = tabs.get(())
-                    if arr is not None:
-                        out = (((arr[W] >> S) & 1) == 1).all(axis=1)
-                else:
-                    kf = pd.DataFrame({i: cols[i] for i in range(n_keys)})
-                    for kt, idx in kf.groupby(
-                        list(range(n_keys)), dropna=False, sort=False
-                    ).indices.items():
-                        arr = tabs.get(kt if n_keys > 1 else (kt,))
-                        if arr is not None:
-                            out[idx] = (((arr[W[idx]] >> S[idx]) & 1) == 1).all(axis=1)
-                return pd.Series(out)
-
-            probe_args = [F.col(k) for k in keys] + [pos_col]
-        return probes.withColumn(
-            out_col,
-            F.when(F.col(value_col).isNull(), F.lit(False)).otherwise(
-                F.coalesce(_probe(*probe_args), F.lit(False))
-            ),
-        )
-    packed = sketch.groupBy(*keys).agg(
-        F.map_from_entries(F.collect_list(F.struct("word", "bits"))).alias("__bloom")
+    tbl = sketch.select(*keys, "word", "bits").toArrow()
+    words = tbl.column("word").to_numpy(zero_copy_only=False)
+    bits = tbl.column("bits").to_numpy(zero_copy_only=False)
+    key_cols = [tbl.column(k).to_pylist() for k in keys]
+    tables: dict = {}
+    for i in range(len(words)):
+        kt = tuple(kc[i] for kc in key_cols)
+        if any(k is None for k in kt):
+            # a NULL group key matches nothing, as in an equi-join
+            continue
+        arr = tables.get(kt)
+        if arr is None:
+            arr = tables[kt] = np.zeros(m_bits // 64, dtype=np.int64)
+        arr[int(words[i])] |= int(bits[i])
+    probe = _sketch_probe(
+        probes, value_col, keys, tables, m_bits, depth,
+        lambda arr, P: (((arr[P >> 6] >> (P & 63)) & 1) == 1).all(axis=0),
     )
-    if not keys:
-        packed = packed.withColumn("__one", F.lit(1))
-    if keys:
-        j = probes.join(packed, keys, "left")
-    else:
-        j = probes.withColumn("__one", F.lit(1)).join(packed, "__one", "left").drop(
-            "__one"
-        )
-    hit_all = F.forall(
-        pos_col,
-        lambda p: (
-            F.coalesce(
-                F.element_at(F.col("__bloom"), (p / 64).cast("int")),
-                F.lit(0).cast("long"),
-            ).bitwiseAND(_bit_mask(F.pmod(p, F.lit(64))))
-        )
-        == _bit_mask(F.pmod(p, F.lit(64))),
-    )
-    return j.withColumn(
+    return probes.withColumn(
         out_col,
         F.when(F.col(value_col).isNull(), F.lit(False)).otherwise(
-            F.coalesce(hit_all, F.lit(False))
+            F.coalesce(probe, F.lit(False))
         ),
-    ).drop("__bloom")
+    )
 
 
 def histogram_counts(
@@ -607,7 +551,6 @@ def heavy_hitters(
     min_share_ppm: int,
     width: int = 1024,
     depth: int = 4,
-    broadcast: bool = True,
     sketch: DataFrame | None = None,
 ) -> DataFrame:
     """Exact frequent items above a share threshold, found WITHOUT
@@ -618,13 +561,15 @@ def heavy_hitters(
 
     A value is a heavy hitter iff its exact count satisfies
     ``count * 1e6 >= min_share_ppm * n`` (n = non-NULL rows). Pass 1
-    builds the CMS (ONE combinable shuffle of O(width x depth) counters)
-    and packs it into a single broadcast row. Pass 2 probes every row
-    MAP-SIDE against the packed sketch — CMS never underestimates, so
-    rows whose estimate clears the threshold are a guaranteed SUPERSET of
-    the true heavy hitters — and only those candidate rows enter the
-    exact groupBy. The final filter re-tests the EXACT count, so the
-    output is exact regardless of sketch collisions.
+    builds the CMS (ONE combinable shuffle of O(width x depth) counters),
+    collected into a dense (depth, width) NumPy grid and broadcast once.
+    Pass 2 probes every row MAP-SIDE with :func:`_sketch_probe` — the
+    min over depth rows of the row's counters against the integer
+    threshold ``ceil(ppm·n/1e6)``, for every key type. CMS never
+    underestimates, so rows whose estimate clears the threshold are a
+    guaranteed SUPERSET of the true heavy hitters — and only those
+    candidate rows enter the exact groupBy. The final filter re-tests the
+    EXACT count, so the output is exact regardless of sketch collisions.
 
     Why not :func:`~funcify_feature_eng_spark.operators.profiling.
     key_skew_report`? That one shuffles every distinct key (fine for
@@ -654,7 +599,9 @@ def heavy_hitters(
     exact per-feature metadata, ``materializer`` module) — SURVEY §2
     extension beside cms_sketch.
     """
-    from .util import exact_floor_div
+    import numpy as np
+
+    from .util import exact_floor_div, spread_small_input
 
     if not (1 <= int(min_share_ppm) <= 1_000_000):
         raise ValueError(
@@ -670,145 +617,31 @@ def heavy_hitters(
     sk = sketch if sketch is not None else cms_sketch(
         df, value_col, width=width, depth=depth
     )
+    # the counters as a dense (depth, width) grid, collected ONCE (bounded
+    # by the cap above); each value increments exactly one bucket per depth
+    # row, so the d=0 slice sums to n — no second pass over the data
+    tbl = sk.select("d", "bucket", "cnt").toArrow()
+    d_a = tbl.column("d").to_numpy(zero_copy_only=False).astype(np.int64)
+    b_a = tbl.column("bucket").to_numpy(zero_copy_only=False).astype(np.int64)
+    c_a = tbl.column("cnt").to_numpy(zero_copy_only=False).astype(np.int64)
+    cms = np.zeros((depth, width), dtype=np.int64)
+    cms[d_a, b_a] = c_a
+    n_tot = int(cms[0].sum())
+    # ceil(ppm * n / 1e6): candidates must clear the integer threshold the
+    # exact test uses
+    thr = (n_tot * ppm + 999_999) // 1_000_000
+    # hash by the value column: parallelizes the probe on few-split inputs
+    # AND is reused by the exact groupBy right after (no-op at scale)
     v = F.col(value_col)
-    from pyspark.sql.types import LongType
-
-    if broadcast and isinstance(df.schema[value_col].dataType, LongType):
-        # LongType fast path: the packed map previously rode the crossJoin
-        # into EVERY probed row (O(width·depth) bytes copied per row) and
-        # each element_at was a linear scan of the map. Collect the
-        # counters into a dense (depth, width) NumPy grid ONCE (bounded by
-        # the 1<<22 cap above), compute the buckets worker-side with the
-        # vectorized xxhash64 replica (same chain as the bloom positions,
-        # pinned by tests), and probe as one vector min — the sketch never
-        # rides a join row and no Python-side structure is rebuilt per
-        # batch. The exact groupBy + exact re-test below are unchanged, so
-        # the output is exact either way.
-        import numpy as np
-
-        tbl = sk.select("d", "bucket", "cnt").toArrow()
-        d_a = tbl.column("d").to_numpy(zero_copy_only=False).astype(np.int64)
-        b_a = tbl.column("bucket").to_numpy(zero_copy_only=False).astype(np.int64)
-        c_a = tbl.column("cnt").to_numpy(zero_copy_only=False).astype(np.int64)
-        cms = np.zeros((depth, width), dtype=np.int64)
-        cms[d_a, b_a] = c_a
-        n_tot = int(cms[0].sum())
-        thr = (n_tot * ppm + 999_999) // 1_000_000
-        bc = df.sparkSession.sparkContext.broadcast(cms)
-
-        @F.pandas_udf("boolean")
-        def _cand(vals):
-            import pandas as pd
-
-            V = vals.to_numpy(np.int64)
-            if len(V) == 0:
-                return pd.Series(np.zeros(0, dtype=bool))
-            grid = bc.value
-            P = _bloom_positions_np(V, width, depth)
-            est_v = grid[0][P[0]]
-            for d in range(1, depth):
-                est_v = np.minimum(est_v, grid[d][P[d]])
-            return pd.Series(est_v >= thr)
-
-        from .util import spread_small_input
-
-        # hash by the value column: parallelizes the probe on few-split
-        # inputs AND is reused by the exact groupBy right after (no-op at
-        # scale)
-        nn = spread_small_input(
-            df.filter(v.isNotNull()).select(v.alias(value_col)), value_col
-        )
-        cand = nn.filter(_cand(F.coalesce(v, F.lit(0)))).select(
-            v.alias(value_col), F.lit(n_tot).cast("long").alias("__tot")
-        )
-        return (
-            cand.groupBy(value_col)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_count"),
-                F.first("__tot").alias("n_total"),
-            )
-            .filter(
-                dec(F.col("n_count")) * F.lit(1_000_000)
-                >= F.lit(ppm) * dec(F.col("n_total"))
-            )
-            .select(
-                value_col,
-                "n_count",
-                "n_total",
-                exact_floor_div(
-                    dec(F.col("n_count")) * F.lit(1_000_000), dec(F.col("n_total"))
-                ).alias("share_ppm"),
-            )
-        )
-
-    # pack to ONE row: map[(d*width + bucket)] -> cnt, plus the exact total
-    # (each value increments exactly one bucket per depth row, so the d=0
-    # slice sums to n — no second pass over the data)
-    packed = (
-        sk.groupBy()
-        .agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        (F.col("d").cast("long") * width + F.col("bucket"))
-                        .cast("int")
-                        .alias("key"),
-                        F.col("cnt").alias("value"),
-                    )
-                )
-            ).alias("__cms"),
-            F.coalesce(
-                F.sum(F.when(F.col("d") == 0, F.col("cnt"))), F.lit(0)
-            )
-            .cast("long")
-            .alias("__tot"),
-        )
-        .withColumn(
-            # ceil(ppm * n / 1e6) on DECIMAL — candidates must clear the
-            # integer threshold the exact test uses
-            "__thr",
-            exact_floor_div(
-                dec(F.col("__tot")) * F.lit(ppm) + F.lit(1_000_000 - 1),
-                dec(F.lit(1_000_000)),
-            ),
-        )
-        # sever lineage from df: packed derives from the SAME input, so the
-        # probe filter's columns share exprIds with the sketch subtree and
-        # Catalyst can push the probe below the crossJoin onto the packed
-        # side (runtime ATTRIBUTE_NOT_FOUND). One eager row — negligible.
-        .localCheckpoint()
+    nn = spread_small_input(
+        df.filter(v.isNotNull()).select(v.alias(value_col)), value_col
     )
-    # depth is a plan-time int: unroll the probe instead of a HOF lambda —
-    # a transform() lambda in a join-side filter trips the optimizer's
-    # reference tracking (the predicate gets pushed to the broadcast side
-    # it can't bind on), and the unrolled F.least is cheaper anyway
-    est = F.least(
-        *[
-            F.coalesce(
-                F.element_at(
-                    F.col("__cms"),
-                    (
-                        F.lit(d * width).cast("long")
-                        + F.pmod(F.xxhash64(F.lit(d).cast("int"), v), F.lit(width))
-                    ).cast("int"),
-                ),
-                F.lit(0).cast("long"),
-            )
-            for d in range(depth)
-        ]
-    ) if depth > 1 else F.coalesce(
-        F.element_at(
-            F.col("__cms"),
-            F.pmod(F.xxhash64(F.lit(0).cast("int"), v), F.lit(width)).cast("int"),
-        ),
-        F.lit(0).cast("long"),
+    est_clears = _sketch_probe(
+        nn, value_col, (), {(): cms}, width, depth,
+        lambda grid, P: np.take_along_axis(grid, P, axis=1).min(axis=0) >= thr,
     )
-    rhs = F.broadcast(packed) if broadcast else packed
-    cand = (
-        df.filter(v.isNotNull())
-        .crossJoin(rhs)
-        .filter(est >= F.col("__thr"))
-        .select(v.alias(value_col), F.col("__tot"))
+    cand = nn.filter(est_clears).select(
+        v.alias(value_col), F.lit(n_tot).cast("long").alias("__tot")
     )
     return (
         cand.groupBy(value_col)
@@ -840,7 +673,6 @@ def bloom_prefilter_join(
     how: str = "inner",
     m_bits: int = 1 << 20,
     depth: int = 3,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Equi-join with an explicit runtime row filter: build a
     :func:`bloom_sketch` of the RIGHT side's join keys, probe the LEFT
@@ -908,7 +740,6 @@ def bloom_prefilter_join(
         probe_col,
         m_bits=m_bits,
         depth=depth,
-        broadcast=broadcast,
         out_col="__bpj_maybe",
     )
     pre = filt.filter(F.col("__bpj_maybe")).drop("__bpj_maybe")

@@ -940,14 +940,14 @@ def cms_monitor_stream(
     — cross-batch mergeable frequency state is the Spark-side capability
     on top (SURVEY §2.8 extension beside stateful_kmv_stream).
     """
-    from funcify_feature_eng_spark.operators.sketches import _cms_buckets
+    from funcify_feature_eng_spark.operators.sketches import _hash_positions
 
     if width < 2 or depth < 1:
         raise ValueError(
             f"cms_monitor_stream: need width >= 2, depth >= 1; got {width}, {depth}"
         )
     ex = stream_df.filter(F.col(value_col).isNotNull()).select(
-        F.posexplode(_cms_buckets(value_col, width, depth)).alias("d", "bucket")
+        F.posexplode(_hash_positions(value_col, width, depth)).alias("d", "bucket")
     )
     return ex.groupBy("d", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")

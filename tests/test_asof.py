@@ -462,18 +462,29 @@ def test_nearest_tie_goes_backward_and_tolerance_applies(spark):
 
 
 def oracle_topk(left_pd, right_pd, k, exact):
-    rows = []
-    for _, lr in left_pd.iterrows():
-        r = right_pd[right_pd.conv_id == lr.conv_id]
-        vis = r[r.value_at_ts <= lr.ts] if exact else r[r.value_at_ts < lr.ts]
-        vis = vis.sort_values(["value_at_ts", "value"], kind="stable").tail(k)
-        if len(vis) == 0:
-            rows.append((lr.conv_id, lr.turn_idx, None, None))
-        else:
-            for i, (_, rr) in enumerate(vis.iloc[::-1].iterrows(), 1):
-                rows.append((lr.conv_id, lr.turn_idx, i, rr.value))
+    """Brute force over every (turn, store row) pair of a conversation:
+    keep the visible pairs, rank each turn's rows newest first by
+    (value_at_ts, value) — ties put the later store row first, as a
+    reversed stable sort does — and keep ranks 1..k; a turn with no
+    visible row gets one (NaN, None) row."""
+    l = left_pd[["conv_id", "turn_idx", "ts"]].reset_index(drop=True)
+    l["__l"] = np.arange(len(l))
+    r = (
+        right_pd[["conv_id", "value_at_ts", "value"]]
+        .sort_values(["value_at_ts", "value"], kind="stable")
+        .iloc[::-1]
+        .reset_index(drop=True)
+    )
+    r["__r"] = np.arange(len(r))
+    m = l.merge(r, on="conv_id")
+    m = m[m.value_at_ts <= m.ts] if exact else m[m.value_at_ts < m.ts]
+    m = m.sort_values(["__l", "__r"], kind="stable")
+    m["asof_rank"] = m.groupby("__l").cumcount() + 1
+    m = m[m.asof_rank <= k]
+    miss = l[~l["__l"].isin(m["__l"])].assign(asof_rank=np.nan, value=None)
     return (
-        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "asof_rank", "pv"])
+        pd.concat([m, miss])
+        .rename(columns={"value": "pv"})[["conv_id", "turn_idx", "asof_rank", "pv"]]
         .sort_values(["conv_id", "turn_idx", "asof_rank"], kind="stable")
         .reset_index(drop=True)
     )

@@ -433,6 +433,58 @@ def test_heavy_hitters_empty_and_validation(spark):
         heavy_hitters(df, "v", min_share_ppm=1, width=1 << 22, depth=2)
 
 
+def test_heavy_hitters_string_keys_hold_no_storage(spark):
+    """Every key type goes through the one worker-side probe: string-key
+    calls must leave no persisted RDD behind in a long-lived session."""
+    from funcify_feature_eng_spark.operators.sketches import heavy_hitters
+
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    df = spark.createDataFrame(
+        [("hot",)] * 30 + [(f"k{i}",) for i in range(20)], "v string"
+    )
+    for ppm in (100_000, 300_000, 500_000):
+        got = heavy_hitters(df, "v", min_share_ppm=ppm).collect()
+        assert [(r["v"], r["n_count"]) for r in got] == [("hot", 30)]
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_sketch_probes_on_int_keys(spark):
+    """IntegerType keys hash as ints JVM-side (xxhash64 hashes an int
+    differently from the same value as a long), so their probe must use
+    the JVM positions, never the LongType NumPy replica."""
+    from funcify_feature_eng_spark.operators.sketches import (
+        bloom_contains,
+        bloom_sketch,
+        heavy_hitters,
+    )
+
+    ins = spark.createDataFrame([(i * 7,) for i in range(200)], "v int")
+    sk = bloom_sketch(ins, "v", m_bits=1 << 16, depth=3)
+    present = bloom_contains(sk, ins, "v", m_bits=1 << 16, depth=3)
+    assert present.filter(~F.col("maybe_present")).count() == 0
+    # 600 bits set of 65536: a false positive has odds ~ (600/65536)^3
+    absent = spark.createDataFrame([(-5,), (3,), (10_000_001,), (None,)], "v int")
+    got = bloom_contains(sk, absent, "v", m_bits=1 << 16, depth=3).collect()
+    assert [r["maybe_present"] for r in got] == [False] * 4
+
+    rows = [(i % 9,) for i in range(300)] + [(5,)] * 100 + [(None,)] * 3
+    df = spark.createDataFrame(rows, "v int").repartition(3)
+    got = {
+        r["v"]: (r["n_count"], r["n_total"])
+        for r in heavy_hitters(df, "v", min_share_ppm=120_000).collect()
+    }
+    n = df.filter(F.col("v").isNotNull()).count()
+    want = {
+        r["v"]: (r["c"], n)
+        for r in df.filter(F.col("v").isNotNull())
+        .groupBy("v").agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") * 1_000_000 >= 120_000 * n)
+        .collect()
+    }
+    assert got == want and set(want) == {5}
+
+
 def test_bloom_prefilter_join_equals_plain_join(spark):
     from funcify_feature_eng_spark.operators.sketches import bloom_prefilter_join
 
@@ -481,7 +533,7 @@ def test_bloom_prefilter_join_probe_is_below_the_join(spark):
 
     left = spark.createDataFrame([(i,) for i in range(500)], "k long")
     right = spark.createDataFrame([(7,), (13,)], "k long")
-    out = bloom_prefilter_join(left, right, "k", broadcast=True)
+    out = bloom_prefilter_join(left, right, "k")
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the probe must appear in a Filter stage below the exact join, i.e.
     # rows are dropped before they shuffle. LongType keys probe via the
@@ -505,8 +557,8 @@ def test_bloom_positions_np_matches_jvm(spark):
     import numpy as np
 
     from funcify_feature_eng_spark.operators.sketches import (
-        _bloom_positions,
-        _bloom_positions_np,
+        _hash_positions,
+        _hash_positions_np,
     )
 
     vals = [0, 1, -1, 42, -42, 2**62, -(2**62), 2**63 - 1, -(2**63),
@@ -515,8 +567,8 @@ def test_bloom_positions_np_matches_jvm(spark):
     m_bits, depth = 1 << 20, 3
     jvm = {
         r["v"]: list(r["p"])
-        for r in df.select("v", _bloom_positions("v", m_bits, depth).alias("p")).collect()
+        for r in df.select("v", _hash_positions("v", m_bits, depth).alias("p")).collect()
     }
-    P = _bloom_positions_np(np.array(vals, dtype=np.int64), m_bits, depth)
+    P = _hash_positions_np(np.array(vals, dtype=np.int64), m_bits, depth)
     for i, v in enumerate(vals):
         assert [int(P[d][i]) for d in range(depth)] == jvm[v], v
