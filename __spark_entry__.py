@@ -2561,6 +2561,37 @@ def _stream_parts(spark: SparkSession, src_dir: str) -> str:
     return str(max(4, min(cores, n // 25_000 + 1)))
 
 
+def _run_stream_gate(
+    spark: SparkSession, src_dir: str, out, name: str = "", mode: str = "append"
+) -> DataFrame | None:
+    """Run one streaming gate to completion with the shuffle/state partition
+    count scoped to ``_stream_parts(src_dir)`` for the query's lifetime
+    (each micro-batch spins up one state-store partition per shuffle
+    partition), restoring the session value afterwards. ``out`` is either a
+    streaming frame, drained into an availableNow memory sink named
+    ``{name}_{seq}`` whose table is returned, or a zero-argument callable
+    that starts its own query (the ledger gates; returns None)."""
+    if isinstance(out, DataFrame):
+        _STREAM_GATE_SEQ[0] += 1
+        qname = f"{name}_{_STREAM_GATE_SEQ[0]}"
+
+        def start():
+            return (
+                out.writeStream.format("memory").queryName(qname)
+                .outputMode(mode).trigger(availableNow=True).start()
+            )
+    else:
+        qname, start = None, out
+    shuffle_conf = "spark.sql.shuffle.partitions"
+    session_parts = spark.conf.get(shuffle_conf)
+    spark.conf.set(shuffle_conf, _stream_parts(spark, src_dir))
+    try:
+        start().awaitTermination()
+    finally:
+        spark.conf.set(shuffle_conf, session_parts)
+    return None if qname is None else spark.table(qname)
+
+
 def q_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 publish + store maintenance in the DRIVER gate: publish the same
     deterministic feature twice (the replayed-job shape — identical values,
@@ -2785,24 +2816,8 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__h", F.xxhash64("text").bitwiseAND(F.lit((1 << 63) - 1))
     )
     out = stateful_kmv_stream(stream, group_col="lang", hash_col="__h", k=k)
-    _STREAM_GATE_SEQ[0] += 1
-    qname = f"stream_kmv_sink_{_STREAM_GATE_SEQ[0]}"
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
-    final = (
-        spark.table(qname)
-        .groupBy("lang")
-        .agg(F.max_by("kmv", "rows_cum").alias("kmv"))
-    )
+    sink = _run_stream_gate(spark, tmp, out, "stream_kmv_sink")
+    final = sink.groupBy("lang").agg(F.max_by("kmv", "rows_cum").alias("kmv"))
     return final.select("lang", kmv_estimate("kmv", k).alias("est_distinct"))
 
 
@@ -2824,20 +2839,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stateful_dedup_stream(
         stream, id_col="doc_id", key_col="text", keep_cols=["char_len"]
     )
-    _STREAM_GATE_SEQ[0] += 1
-    qname = f"stream_dedup_sink_{_STREAM_GATE_SEQ[0]}"
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
-    return spark.table(qname).select("doc_id", "char_len")
+    sink = _run_stream_gate(spark, tmp, out, "stream_dedup_sink")
+    return sink.select("doc_id", "char_len")
 
 
 def q_stream_model_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2893,23 +2896,8 @@ def q_stream_turn_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, entity_col="user_id", order_col="event_id", ts_col="ts",
         gap_seconds=GAP_S,
     )
-    _STREAM_GATE_SEQ[0] += 1
-    qname = f"stream_turn_features_sink_{_STREAM_GATE_SEQ[0]}"
-    # each micro-batch spins up a state-store partition per shuffle
-    # partition; at gate scale 32×4 empty-ish state partitions are pure
-    # overhead, so scope the conf down for the stream's lifetime
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
-    return spark.table(qname).select(
+    sink = _run_stream_gate(spark, tmp, out, "stream_turn_features_sink")
+    return sink.select(
         "user_id",
         "event_id",
         "role",
@@ -2997,20 +2985,8 @@ def q_stream_disorder_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, entity_col="user_id", order_col="event_id", ts_col="ts",
         gap_seconds=GAP_S, state_ttl_s=8 * GAP_S, max_disorder_s=D_s,
     )
-    _STREAM_GATE_SEQ[0] += 1
-    qname = f"stream_disorder_sink_{_STREAM_GATE_SEQ[0]}"
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
-    return spark.table(qname).filter(F.col("user_id") < _SENTINEL_UID).select(
+    sink = _run_stream_gate(spark, tmp, out, "stream_disorder_sink")
+    return sink.filter(F.col("user_id") < _SENTINEL_UID).select(
         "user_id",
         F.col("event_id").cast("int").alias("event_id"),
         "role",
@@ -3164,22 +3140,9 @@ def q_stream_role_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         role_col="event_type", allowed=_ROLE_MACHINE,
         allowed_start=("signup", "view"),
     )
-    _STREAM_GATE_SEQ[0] += 1
-    qname = f"stream_roleaudit_sink_{_STREAM_GATE_SEQ[0]}"
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
+    sink = _run_stream_gate(spark, tmp, out, "stream_roleaudit_sink")
     return (
-        spark.table(qname)
-        .groupBy("user_id")
+        sink.groupBy("user_id")
         .agg(
             F.max_by(
                 F.struct("n_turns", "n_violations", "first_violation_ord",
@@ -3364,16 +3327,9 @@ def q_stream_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger, ckpt = base + "_ledger", base + "_ckpt"
     shutil.rmtree(ledger, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = quality_monitor_stream(
-            stream, constraints, ledger_dir=ledger, checkpoint_dir=ckpt
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
+    _run_stream_gate(spark, tmp, lambda: quality_monitor_stream(
+        stream, constraints, ledger_dir=ledger, checkpoint_dir=ckpt
+    ))
     states = spark.read.parquet(ledger).drop("batch_id")
     return check_verdicts(merge_check_states(states), constraints)
 
@@ -3463,17 +3419,9 @@ def q_stream_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger, ckpt = base + "_ledger", base + "_ckpt"
     shutil.rmtree(ledger, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = calibration_monitor_stream(
-            scored, ledger, score_e6="score_e6", label="y",
-            checkpoint_dir=ckpt,
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
+    _run_stream_gate(spark, tmp, lambda: calibration_monitor_stream(
+        scored, ledger, score_e6="score_e6", label="y", checkpoint_dir=ckpt,
+    ))
     states = spark.read.parquet(ledger).drop("batch_id")
     return reliability_from_state(merge_calibration_states(states))
 
@@ -5000,22 +4948,8 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from funcify_feature_eng_spark.streaming.runner import cms_monitor_stream
 
     out = cms_monitor_stream(stream, value_col="user_id", width=width, depth=depth)
-    _STREAM_GATE_SEQ[0] += 1
-    qname = f"stream_hh_sink_{_STREAM_GATE_SEQ[0]}"
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
-    final = (
-        spark.table(qname).groupBy("d", "bucket").agg(F.max("cnt").alias("cnt"))
-    )
+    sink = _run_stream_gate(spark, tmp, out, "stream_hh_sink", mode="update")
+    final = sink.groupBy("d", "bucket").agg(F.max("cnt").alias("cnt"))
     return heavy_hitters(
         _t(spark, sf_dir, "events"),
         "user_id",
@@ -5243,18 +5177,11 @@ def q_stream_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger, ckpt = base + "_ledger", base + "_ckpt"
     shutil.rmtree(ledger, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = decay_monitor_stream(
-            staged, ledger, value_col="v_e6", ts_col="ts", keys=["user_id"],
-            ref_ts="2024-02-01 00:00:00", halflife_s=172_800, max_pow=20,
-            checkpoint_dir=ckpt,
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
+    _run_stream_gate(spark, tmp, lambda: decay_monitor_stream(
+        staged, ledger, value_col="v_e6", ts_col="ts", keys=["user_id"],
+        ref_ts="2024-02-01 00:00:00", halflife_s=172_800, max_pow=20,
+        checkpoint_dir=ckpt,
+    ))
     states = spark.read.parquet(ledger).drop("batch_id")
     return decay_from_state(
         merge_decay_states(states, keys=["user_id"]), keys=["user_id"],
@@ -5797,20 +5724,8 @@ def q_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
         rate_num=1,
         rate_den_s=7 * 86400,
     )
-    _STREAM_GATE_SEQ[0] += 1
-    qname = f"stream_throttle_sink_{_STREAM_GATE_SEQ[0]}"
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    session_parts = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, _stream_parts(spark, tmp))
-    try:
-        q = (
-            out.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(shuffle_conf, session_parts)
-    return spark.table(qname).select(
+    sink = _run_stream_gate(spark, tmp, out, "stream_throttle_sink")
+    return sink.select(
         "user_id", "event_id", "admitted", "tokens_after_e6den"
     )
 

@@ -17,11 +17,12 @@ simpler invariant: ``label(x) <= x`` always, labels are always node ids.
 Each round is a bounded number of shuffles on node id; convergence is a
 driver-side count of changed labels (O(1) per round, never a data collect).
 Every round's label table is ``localCheckpoint``-ed (eager) to truncate the
-lazy lineage — and the PREVIOUS round's checkpoint is explicitly released so
-a long-lived session (driver gate, bench loop) does not accumulate executor
-storage across rounds or calls. Hitting ``max_iters`` without convergence
-raises by default (silent wrong labels would make downstream retention
-over-keep duplicates undetected).
+lazy lineage — and the PREVIOUS round's checkpoint is released by its own
+handle (``util.release``), so a long-lived session (driver gate, bench loop)
+neither accumulates executor storage across rounds or calls nor loses
+checkpoints that other work in the session owns. Hitting ``max_iters``
+without convergence raises by default (silent wrong labels would make
+downstream retention over-keep duplicates undetected).
 """
 
 from __future__ import annotations
@@ -31,16 +32,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _release_rdds(sc, ids: set[int]) -> None:
-    m = sc._jsc.getPersistentRDDs()
-    for i in ids:
-        if m.containsKey(i):
-            m.get(i).unpersist(False)
+from .util import release
 
 
 def connected_components(
@@ -74,7 +66,6 @@ def connected_components(
     partial labels and emit a loud warning).
     """
     spark = edges.sparkSession
-    sc = spark.sparkContext
 
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -93,19 +84,14 @@ def connected_components(
     n_edges = sym.count()
     if n_edges <= driver_threshold:
         try:
-            return _cc_driver_union_find(spark, sym, edges.schema[src].dataType)
+            # the id type of the endpoint union, as the distributed path
+            return _cc_driver_union_find(spark, sym, sym.schema["a"].dataType)
         finally:
             sym.unpersist()
-    # baseline is snapshotted AFTER the count: a cached DataFrame's RDD only
-    # registers in getPersistentRDDs at materialization, so a pre-persist
-    # snapshot would let round 1's checkpoint-release sweep unpersist sym
-    # itself — every later round would then recompute the edge
-    # symmetrization from source
-    baseline_ids = _persistent_rdd_ids(sc)
     try:
         session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:  # e.g. "auto" under some AQE configurations
-        session_parts = sc.defaultParallelism
+        session_parts = spark.sparkContext.defaultParallelism
     # right-size the per-round shuffles from the measured edge count
     # (localCheckpoint hides tables from AQE coalescing, so without this a
     # 500-row dup graph would run 32-task barrier stages every round). The
@@ -115,8 +101,7 @@ def connected_components(
     # stream) sharing this SparkSession.
     loop_parts = max(1, min(session_parts, n_edges // 50_000 + 1))
     try:
-        return _cc_loop(spark, sc, sym, baseline_ids, max_iters,
-                        on_nonconverged, loop_parts)
+        return _cc_loop(sym, max_iters, on_nonconverged, loop_parts)
     finally:
         sym.unpersist()
 
@@ -158,7 +143,7 @@ def _cc_driver_union_find(spark, sym, id_type):
     return spark.createDataFrame(rows, schema)
 
 
-def _cc_loop(spark, sc, sym, baseline_ids, max_iters, on_nonconverged, loop_parts):
+def _cc_loop(sym, max_iters, on_nonconverged, loop_parts):
     # every shuffle boundary in the loop is pinned to loop_parts by an
     # explicit repartition ON THE UPCOMING KEY: the join/agg then finds its
     # required hash partitioning already satisfied, so no second exchange is
@@ -170,10 +155,8 @@ def _cc_loop(spark, sc, sym, baseline_ids, max_iters, on_nonconverged, loop_part
         .withColumn("comp", F.col("node"))
         .localCheckpoint()
     )
-    round_ids = _persistent_rdd_ids(sc) - baseline_ids  # this round's checkpoint
     changed = -1
     for _ in range(max_iters):
-        known = _persistent_rdd_ids(sc)
         # 1) propagation hop: node <- min(comp over neighbors ∪ self)
         nbr = (
             sym.repartition(loop_parts, "b")
@@ -212,11 +195,9 @@ def _cc_loop(spark, sc, sym, baseline_ids, max_iters, on_nonconverged, loop_part
             .localCheckpoint()
         )
         changed = new_labels.filter(F.col("comp") != F.col("old_comp")).count()
-        new_labels = new_labels.drop("old_comp")
         # the superseded round's checkpoint is dead — release it now
-        _release_rdds(sc, round_ids)
-        round_ids = _persistent_rdd_ids(sc) - known
-        labels = new_labels
+        release(labels)
+        labels = new_labels.drop("old_comp")
         if changed == 0:
             break
     if changed != 0:
@@ -350,8 +331,8 @@ def pagerank(
     checkpointed; each iteration is one join (ranks onto edge sources) +
     one aggregate (contributions onto destinations) + one left join back
     onto the static node table — O(n_iters) shuffles total, each
-    checkpoint released as the next supersedes it (the
-    connected_components loop discipline). Per-step products stay in
+    superseded round released by handle as the next one is checkpointed
+    (the connected_components loop discipline). Per-step products stay in
     DECIMAL(38): num·r ≤ 8.5e13 but den·outdeg can reach den·N.
     """
     if n_iters < 1:
@@ -361,10 +342,9 @@ def pagerank(
             f"pagerank: need 0 < damping_num < damping_den, got "
             f"{damping_num}/{damping_den}"
         )
-    from .util import exact_floor_div, release
+    from .util import exact_floor_div
 
     spark = edges.sparkSession
-    sc = spark.sparkContext
     s, d = F.col(src), F.col(dst)
     e = (
         edges.filter(s.isNotNull() & d.isNotNull() & (s != d))
@@ -380,7 +360,11 @@ def pagerank(
     # the distributed loop below remains the genuinely-large-graph path
     # (tests pin it via driver_threshold=0).
     m_edges = e.count()
-    id_type = edges.schema[src].dataType
+    endpoints = e.select(F.col("s").alias("node")).unionByName(
+        e.select(F.col("d").alias("node"))
+    )
+    # the id type of the endpoint union, as the distributed path
+    id_type = endpoints.schema["node"].dataType
     if 0 < m_edges <= driver_threshold and _integer_id_type(id_type):
         try:
             ranked = _pagerank_driver(
@@ -392,12 +376,7 @@ def pagerank(
         if ranked is not None:
             release(e)
             return ranked
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = endpoints.distinct().localCheckpoint()
     n = nodes.count()
     if n == 0:
         # empty graph: empty frame with the declared schema (the two
@@ -430,13 +409,7 @@ def pagerank(
     ranks = node_deg.select(
         "node", F.lit(e12 // n).cast("bigint").alias("rank_e12")
     ).localCheckpoint()
-    # r0 predates the loop's first `known` snapshot, so no round_ids set
-    # ever contains it — keep its own handle or it leaks one O(N)-row
-    # checkpoint per pagerank() call for the life of the session
-    r0 = ranks
-    round_ids: set[int] = set()
     for _ in range(int(n_iters)):
-        known = _persistent_rdd_ids(sc)
         contribs = (
             ed.join(ranks.withColumnRenamed("node", "s"), on="s")
             .select(
@@ -451,7 +424,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("__c").cast("bigint").alias("__in"))
         )
-        ranks = (
+        prev, ranks = ranks, (
             node_deg.select("node")
             .join(contribs, on="node", how="left")
             .select(
@@ -463,15 +436,14 @@ def pagerank(
             )
             .localCheckpoint()
         )
-        _release_rdds(sc, round_ids)
-        round_ids = _persistent_rdd_ids(sc) - known
+        release(prev)
+    # checkpointed once more because node_deg is released below
     out = ranks.join(node_deg, on="node").select(
         "node", "rank_e12", "out_degree"
     ).localCheckpoint()
-    _release_rdds(sc, round_ids)
+    release(ranks)
     release(ed)
     release(node_deg)
-    release(r0)
     return out
 
 
@@ -544,14 +516,11 @@ def label_propagation(
     Physical shape: one join (labels onto edge sources) + one
     (node, label)-grain count + one argmax per iteration — the argmax is
     ``min(struct(-cnt, label))``, an ordinary aggregate, no window.
-    O(n_iters) shuffles; per-iteration checkpoints released as
-    superseded (the connected_components loop discipline)."""
+    O(n_iters) shuffles; each superseded round released by handle (the
+    connected_components loop discipline)."""
     if n_iters < 1:
         raise ValueError(f"label_propagation: n_iters must be >= 1, got {n_iters}")
-    from .util import release
-
     spark = edges.sparkSession
-    sc = spark.sparkContext
     s, d = F.col(src), F.col(dst)
     base = edges.filter(s.isNotNull() & d.isNotNull() & (s != d)).select(
         s.alias("s"), d.alias("d")
@@ -563,7 +532,8 @@ def label_propagation(
     )
     # small-graph fast path (the connected_components / pagerank posture)
     m_edges = e.count()
-    id_type = edges.schema[src].dataType
+    # the id type of the endpoint union, as the distributed path
+    id_type = e.schema["s"].dataType
     if 0 < m_edges <= driver_threshold and _integer_id_type(id_type):
         try:
             return _label_propagation_driver(spark, e, id_type, n_iters)
@@ -571,18 +541,13 @@ def label_propagation(
             release(e)
     nodes = e.select(F.col("s").alias("node")).distinct().localCheckpoint()
     labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
-    # same r0 bookkeeping as pagerank: the seed checkpoint predates the
-    # first `known` snapshot and must be released by its own handle
-    l0 = labels
-    round_ids: set[int] = set()
     for _ in range(int(n_iters)):
-        known = _persistent_rdd_ids(sc)
         votes = (
             e.join(labels.withColumnRenamed("node", "s"), on="s")
             .groupBy(F.col("d").alias("node"), "label")
             .agg(F.count(F.lit(1)).cast("long").alias("__cnt"))
         )
-        labels = (
+        prev, labels = labels, (
             votes.groupBy("node")
             .agg(
                 F.min(
@@ -592,11 +557,7 @@ def label_propagation(
             .select("node", F.col("__best.label").alias("label"))
             .localCheckpoint()
         )
-        _release_rdds(sc, round_ids)
-        round_ids = _persistent_rdd_ids(sc) - known
-    out = labels.localCheckpoint()
-    _release_rdds(sc, round_ids)
+        release(prev)
     release(e)
     release(nodes)
-    release(l0)
-    return out
+    return labels

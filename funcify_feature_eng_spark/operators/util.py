@@ -72,10 +72,11 @@ def materialize_small(df: DataFrame, broadcast_rows: int = 1_000_000):
 
 
 def release(df: DataFrame) -> None:
-    """Release the storage behind an eagerly-materialized (localCheckpoint)
-    DataFrame returned by the dedup operators. The frame must not be used
-    afterwards: a local checkpoint truncates lineage, so its data cannot be
-    recomputed once unpersisted.
+    """Release the storage behind any eagerly-materialized (localCheckpoint
+    or persist) DataFrame — the package's one release path. Only storage
+    reachable from ``df`` itself is freed, never other work's in the same
+    session. The frame must not be used afterwards: a local checkpoint
+    truncates lineage, so its data cannot be recomputed once unpersisted.
 
     ``df.rdd.unpersist()`` would be a SILENT NO-OP here: ``df.rdd`` builds
     a fresh Python-conversion RDD pipeline over the checkpoint, and

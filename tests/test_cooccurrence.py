@@ -185,9 +185,8 @@ def test_item_neighbors_skip_counts_retained_universe_only(spark):
 
 
 def test_pagerank_releases_seed_checkpoint(spark):
-    """The r0 seed checkpoint predates the loop's bookkeeping snapshot and
-    needs its own release — at most one extra persisted RDD (the returned
-    frame) may survive a call."""
+    """The seed and every superseded round are released by handle — at
+    most one extra persisted RDD (the returned frame) may survive a call."""
     from funcify_feature_eng_spark.operators.graph import pagerank
 
     sc = spark.sparkContext

@@ -2,12 +2,16 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from funcify_feature_eng_spark.operators.graph import (
     connected_components,
     keep_best_per_cluster,
+    label_propagation,
+    pagerank,
 )
+from funcify_feature_eng_spark.operators.util import release
 from funcify_feature_eng_spark.operators.packing import pack_documents
 
 
@@ -155,19 +159,77 @@ def test_connected_components_nonconvergence_raises(spark):
         assert any("did not converge" in str(x.message) for x in w)
 
 
-def test_connected_components_releases_checkpoint_storage(spark):
-    """Round-superseded label checkpoints must be unpersisted (ADVICE r2):
-    after a call, at most ONE extra persisted RDD (the returned final labels)
-    may remain beyond what existed before."""
+_GRAPH_LOOPS = {
+    "connected_components": connected_components,
+    "pagerank": pagerank,
+    "label_propagation": label_propagation,
+}
+
+
+def _chain_plus_cycle(spark, schema="src long, dst long"):
+    # a 12-hop chain, a 5-cycle, and a tail hanging off the cycle
+    rows = [(i, i + 1) for i in range(12)]
+    rows += [(100 + i, 100 + (i + 1) % 5) for i in range(5)] + [(104, 200)]
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize("algo", list(_GRAPH_LOOPS))
+def test_graph_loops_release_checkpoint_storage(spark, algo):
+    """Round-superseded checkpoints must be unpersisted (ADVICE r2): after
+    a distributed call, at most ONE extra persisted RDD (the returned
+    frame) may remain beyond what existed before."""
     sc = spark.sparkContext
     before = {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(100)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(100)], "src long, dst long"
     )
-    labels = connected_components(edges, max_iters=12, driver_threshold=0)
-    labels.count()
+    out = _GRAPH_LOOPS[algo](edges, "src", "dst", driver_threshold=0)
+    out.count()
     after = {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
     assert len(after - before) <= 1
+    release(out)
+
+
+@pytest.mark.parametrize("algo", list(_GRAPH_LOOPS))
+def test_graph_loops_release_only_their_own_checkpoints(spark, monkeypatch, algo):
+    """A graph loop releases each superseded round by its own handle, so a
+    checkpoint some other work in the session makes while a round runs must
+    survive the call."""
+    frame_cls = type(spark.range(1))  # the concrete (classic) DataFrame
+    checkpoint = frame_cls.localCheckpoint
+    bystanders = []
+
+    def checkpoint_with_bystander(df, *args, **kwargs):
+        out = checkpoint(df, *args, **kwargs)
+        bystanders.append(checkpoint(spark.range(10)))
+        return out
+
+    edges = _chain_plus_cycle(spark)
+    monkeypatch.setattr(frame_cls, "localCheckpoint", checkpoint_with_bystander)
+    out = _GRAPH_LOOPS[algo](edges, "src", "dst", driver_threshold=0)
+    monkeypatch.undo()
+    out.count()
+    assert len(bystanders) > 2
+    assert [b.count() for b in bystanders] == [10] * len(bystanders)
+    for frame in [out, *bystanders]:
+        release(frame)
+
+
+@pytest.mark.parametrize("algo", list(_GRAPH_LOOPS))
+def test_graph_driver_path_takes_endpoint_union_id_type(spark, algo):
+    """The driver fast path must type node ids like the distributed path:
+    from the union of both endpoints, not from the src column alone (an int
+    src with a bigint dst beyond int range must neither overflow nor narrow
+    the output)."""
+    edges = _chain_plus_cycle(spark, "src int, dst long").unionByName(
+        spark.createDataFrame([(11, 5_000_000_000)], "src int, dst long")
+    )
+    fn = _GRAPH_LOOPS[algo]
+    fast = fn(edges, "src", "dst")
+    dist = fn(edges, "src", "dst", driver_threshold=0)
+    assert fast.dtypes == dist.dtypes
+    assert dict(fast.dtypes)["node"] == "bigint"
+    assert sorted(fast.collect()) == sorted(dist.collect())
 
 
 def test_quota_per_group_stable_and_capped(spark):
