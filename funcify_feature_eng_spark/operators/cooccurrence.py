@@ -13,6 +13,10 @@ shapes that survive 100 TB:
   expansion (``max_group``; error or documented skip), the same
   loud-before-quadratic posture as blocked_edit_pairs and the n-gram
   hot-gram cap.
+- **One lazy item-set base** (``_item_sets``): edges, per-item counts and
+  ``item_lift``'s group total all derive from the same per-group sets, so
+  every count lives in the retained-groups universe. The call runs no job
+  and holds no storage; a ``max_group`` overflow raises on action.
 - **Triangle counting uses degree orientation** (each undirected edge is
   directed from its (degree, id)-smaller endpoint): every wedge is
   enumerated at its lowest-degree apex, so per-node fan-out is bounded by
@@ -41,6 +45,99 @@ __all__ = ["co_occurrence_edges", "item_lift", "item_neighbors", "triangle_stats
 _PPM = 1_000_000
 
 
+def _item_sets(
+    df: DataFrame,
+    group_col: str,
+    item_col: str,
+    max_group: int,
+    on_oversize: str,
+) -> DataFrame:
+    """One ``(__g, __items)`` row per retained group, ``__items`` its sorted
+    distinct non-NULL items — the base every co-occurrence output derives
+    from."""
+    if on_oversize not in ("error", "skip"):
+        raise ValueError(f"on_oversize must be 'error'|'skip' (got {on_oversize!r})")
+    from .util import spread_small_input
+
+    g, i = F.col(group_col), F.col(item_col)
+    # the per-group set build is an ObjectHashAggregate whose PARTIAL pass
+    # runs on the scan splits — a single-split input serializes it on one
+    # core (guide §6); pre-hash by the group key (exchange reused by the
+    # groupBy, no-op at scale)
+    grouped = (
+        spread_small_input(
+            df.filter(g.isNotNull() & i.isNotNull())
+            .select(g.alias("__g"), i.alias("__i")),
+            "__g",
+        )
+        .groupBy("__g")
+        .agg(F.array_sort(F.collect_set("__i")).alias("__items"))
+    )
+    if on_oversize == "skip":
+        grouped = grouped.filter(F.size("__items") <= F.lit(int(max_group)))
+    return grouped
+
+
+def _pair_counts(sets: DataFrame, min_count: int, max_group: int) -> DataFrame:
+    """``(item_a, item_b, n_groups)`` over an :func:`_item_sets` base."""
+    if min_count < 1:
+        raise ValueError(f"co_occurrence_edges: min_count must be >= 1, got {min_count}")
+    n = F.size("__items")
+    # inline guard: evaluated before any pair expands, names the group. It
+    # sits on the pair branch only: were the per-item counts guarded too,
+    # two stages could fail at once, which surfaces as one unconverted
+    # STAGE_MATERIALIZATION_MULTIPLE_FAILURES error.
+    sets = sets.withColumn(
+        "__items",
+        F.when(n <= F.lit(int(max_group)), F.col("__items")).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        f"co_occurrence_edges: group exceeds max_group="
+                        f"{max_group} (pair expansion is size^2) — thin "
+                        "upstream, raise max_group, or pass "
+                        "on_oversize='skip'; offending group: "
+                    ),
+                    F.col("__g").cast("string"),
+                    F.lit(" with "),
+                    n.cast("string"),
+                    F.lit(" items"),
+                )
+            )
+        ),
+    )
+    # pair expansion as JVM HOFs over the sorted set: element x at index k
+    # pairs with every later element — items are distinct and sorted, so
+    # (x, y) is automatically canonical and unique within the group
+    pairs = F.flatten(
+        F.transform(
+            F.col("__items"),
+            lambda x, k: F.transform(
+                F.slice(F.col("__items"), k + F.lit(2), F.size("__items")),
+                lambda y: F.struct(x.alias("item_a"), y.alias("item_b")),
+            ),
+        )
+    )
+    exploded = sets.select(F.explode(pairs).alias("__p")).select(
+        F.col("__p.item_a"), F.col("__p.item_b")
+    )
+    out = exploded.groupBy("item_a", "item_b").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_groups")
+    )
+    if min_count > 1:
+        out = out.filter(F.col("n_groups") >= F.lit(int(min_count)))
+    return out
+
+
+def _item_counts(sets: DataFrame, item: str, n: str) -> DataFrame:
+    """Per-item group counts ``(<item>, <n>)`` over an :func:`_item_sets` base."""
+    return (
+        sets.select(F.explode("__items").alias(item))
+        .groupBy(item)
+        .agg(F.count(F.lit(1)).cast("bigint").alias(n))
+    )
+
+
 def co_occurrence_edges(
     df: DataFrame,
     group_col: str,
@@ -63,109 +160,8 @@ def co_occurrence_edges(
     size²); ``"skip"`` drops oversized groups whole — documented
     degradation, never a silent quadratic.
     """
-    if on_oversize not in ("error", "skip"):
-        raise ValueError(f"on_oversize must be 'error'|'skip' (got {on_oversize!r})")
-    if min_count < 1:
-        raise ValueError(f"co_occurrence_edges: min_count must be >= 1, got {min_count}")
-    from .util import spread_small_input
-
-    g, i = F.col(group_col), F.col(item_col)
-    # the per-group set build is an ObjectHashAggregate whose PARTIAL pass
-    # runs on the scan splits — a single-split input serializes it on one
-    # core (guide §6); pre-hash by the group key (exchange reused by the
-    # groupBy, no-op at scale)
-    grouped = (
-        spread_small_input(
-            df.filter(g.isNotNull() & i.isNotNull())
-            .select(g.alias("__g"), i.alias("__i")),
-            "__g",
-        )
-        .groupBy("__g")
-        .agg(F.array_sort(F.collect_set("__i")).alias("__items"))
-    )
-    n = F.size("__items")
-    if on_oversize == "error":
-        # inline guard: evaluated before any pair expands, names the group
-        grouped = grouped.withColumn(
-            "__items",
-            F.when(n <= F.lit(int(max_group)), F.col("__items")).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            f"co_occurrence_edges: group exceeds max_group="
-                            f"{max_group} (pair expansion is size^2) — thin "
-                            "upstream, raise max_group, or pass "
-                            "on_oversize='skip'; offending group: "
-                        ),
-                        F.col("__g").cast("string"),
-                        F.lit(" with "),
-                        n.cast("string"),
-                        F.lit(" items"),
-                    )
-                )
-            ),
-        )
-    else:
-        grouped = grouped.filter(n <= F.lit(int(max_group)))
-    # pair expansion as JVM HOFs over the sorted set: element x at index k
-    # pairs with every later element — items are distinct and sorted, so
-    # (x, y) is automatically canonical and unique within the group
-    pairs = F.flatten(
-        F.transform(
-            F.col("__items"),
-            lambda x, k: F.transform(
-                F.slice(F.col("__items"), k + F.lit(2), F.size("__items")),
-                lambda y: F.struct(x.alias("item_a"), y.alias("item_b")),
-            ),
-        )
-    )
-    exploded = grouped.select(F.explode(pairs).alias("__p")).select(
-        F.col("__p.item_a"), F.col("__p.item_b")
-    )
-    out = exploded.groupBy("item_a", "item_b").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_groups")
-    )
-    if min_count > 1:
-        out = out.filter(F.col("n_groups") >= F.lit(int(min_count)))
-    return out
-
-
-def _incidence(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-    item_alias: str,
-    max_group: int,
-    on_oversize: str,
-) -> DataFrame:
-    """Distinct non-NULL ``(__g, <item_alias>)`` incidence rows — the base
-    every per-item count and the group total are taken over.
-
-    Hashed by the ITEM key alone: a subset-key hash partitioning satisfies
-    the (group, item) distinct's clustering requirement AND the per-item
-    count aggregation right after it — one exchange serves both. Under
-    ``on_oversize="skip"`` the oversized groups are dropped here too, so
-    the counts live in the SAME retained-groups universe the edges were
-    built from (counting over all groups understates cosine / lift /
-    Jaccard and can invert ranks)."""
-    from pyspark.sql import Window
-
-    from .util import spread_small_input
-
-    g, i = F.col(group_col), F.col(item_col)
-    base = spread_small_input(
-        df.filter(g.isNotNull() & i.isNotNull())
-        .select(g.alias("__g"), i.alias(item_alias)),
-        item_alias,
-    ).distinct()
-    if on_oversize == "skip":
-        w_g = Window.partitionBy("__g")
-        base = (
-            base.withColumn("__gn", F.count(F.lit(1)).over(w_g))
-            .filter(F.col("__gn") <= F.lit(int(max_group)))
-            .drop("__gn")
-        )
-    return base
+    sets = _item_sets(df, group_col, item_col, max_group, on_oversize)
+    return _pair_counts(sets, min_count, max_group)
 
 
 def item_neighbors(
@@ -192,43 +188,36 @@ def item_neighbors(
     Output: ``(item, neighbor, n_both:bigint, n_item:bigint,
     n_neighbor:bigint, cosine2_ppm:bigint, rank:int)``, ``rank`` 1..k.
 
-    Physical shape: the edge list comes from :func:`co_occurrence_edges`
-    (one shuffle, size-guarded pair expansion — never a row-level
-    self-join); per-item group counts are one distinct + aggregate on
-    (group, item); the symmetric view is two selects over ONE eagerly
-    checkpointed edge frame (not a re-expansion per direction); top-k is a
-    row_number window on item grain. At 100 TB the cost is the edge list's
-    — counts and the window add O(items) and O(edges·2) respectively.
+    Physical shape: lazy — the call runs no job and holds no storage; a
+    ``max_group`` overflow surfaces when the result is acted on. The edge
+    list and the per-item group counts are both derived from ONE per-group
+    item-set base (one shuffle onto group grain, size-guarded pair
+    expansion — never a row-level self-join); the symmetric view is one
+    two-row explode per edge (not a re-expansion per direction); top-k is
+    a row_number window on item grain. At 100 TB the cost is the edge
+    list's — counts and the window add O(items) and O(edges·2).
     """
     if k < 1:
         raise ValueError(f"item_neighbors: k must be >= 1, got {k}")
     from pyspark.sql import Window
 
-    from .util import exact_floor_div, release
+    from .util import exact_floor_div
 
-    edges = co_occurrence_edges(
-        df,
-        group_col,
-        item_col,
-        min_count=min_count,
-        max_group=max_group,
-        on_oversize=on_oversize,
-    ).localCheckpoint()
-    base = _incidence(df, group_col, item_col, "item", max_group, on_oversize)
-    cnt = base.groupBy("item").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_item")
-    )
+    sets = _item_sets(df, group_col, item_col, max_group, on_oversize)
+    edges = _pair_counts(sets, min_count, max_group)
+    cnt = _item_counts(sets, "item", "n_item")
+    # both directions from ONE pass over the edges: a union of two selects
+    # would expand the pairs (and raise an oversize group) once per side
+    a, b = F.col("item_a"), F.col("item_b")
     sym = edges.select(
-        F.col("item_a").alias("item"),
-        F.col("item_b").alias("neighbor"),
+        F.explode(
+            F.array(
+                F.struct(a.alias("item"), b.alias("neighbor")),
+                F.struct(b.alias("item"), a.alias("neighbor")),
+            )
+        ).alias("__d"),
         F.col("n_groups").alias("n_both"),
-    ).unionByName(
-        edges.select(
-            F.col("item_b").alias("item"),
-            F.col("item_a").alias("neighbor"),
-            F.col("n_groups").alias("n_both"),
-        )
-    )
+    ).select("__d.item", "__d.neighbor", "n_both")
     scored = (
         sym.join(cnt, on="item")
         .join(
@@ -255,17 +244,14 @@ def item_neighbors(
     w = Window.partitionBy("item").orderBy(
         F.col("cosine2_ppm").desc(), F.col("n_both").desc(), F.col("neighbor").asc()
     )
-    out = (
+    return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= F.lit(int(k)))
         .select(
             "item", "neighbor", "n_both", "n_item", "n_neighbor",
             "cosine2_ppm", "rank",
         )
-        .localCheckpoint()
     )
-    release(edges)
-    return out
 
 
 def triangle_stats(
@@ -388,36 +374,27 @@ def item_lift(
     canonical ``item_a < item_b`` ordering inherited from
     :func:`co_occurrence_edges`.
 
-    Physical shape: the edge list is the size-guarded per-group pair
-    expansion (one shuffle); per-item counts are one aggregate on the
-    deduped (group, item) frame; N is a ONE-ROW aggregate attached by
-    broadcast crossJoin (no collect, no second pass). At 100 TB the cost
-    is the edge list's — everything after is O(edges) map-side.
+    Physical shape: lazy — the call runs no job and holds no storage; a
+    ``max_group`` overflow surfaces when the result is acted on. The edge
+    list (size-guarded per-group pair expansion), the per-item counts and
+    N all derive from ONE per-group item-set base; N is its row count, a
+    ONE-ROW aggregate attached by broadcast crossJoin (no collect). At
+    100 TB the cost is the edge list's — everything after is O(edges)
+    map-side.
 
     Reference parity anchor: no graph/association tier in the reference
     (closest: per-entity batching, ``materializer/.../
     BatchedDataElementCallable.kt``) — SURVEY §2 extension beside
     item_neighbors.
     """
-    from .util import exact_floor_div, release
+    from .util import exact_floor_div
 
-    edges = co_occurrence_edges(
-        df,
-        group_col,
-        item_col,
-        min_count=min_count,
-        max_group=max_group,
-        on_oversize=on_oversize,
-    ).localCheckpoint()
-    gi = _incidence(df, group_col, item_col, "__i", max_group, on_oversize)
-    cnt = gi.groupBy(F.col("__i").alias("__item")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("__n")
-    )
-    total = gi.agg(
-        F.count_distinct(F.col("__g")).cast("bigint").alias("n_groups_total")
-    )
+    sets = _item_sets(df, group_col, item_col, max_group, on_oversize)
+    edges = _pair_counts(sets, min_count, max_group)
+    cnt = _item_counts(sets, "__item", "__n")
+    total = sets.agg(F.count(F.lit(1)).cast("bigint").alias("n_groups_total"))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    out = (
+    return (
         edges.join(
             cnt.select(F.col("__item").alias("item_a"), F.col("__n").alias("n_a")),
             on="item_a",
@@ -451,7 +428,4 @@ def item_lift(
                 dec(F.col("n_a") + F.col("n_b") - F.col("n_both")),
             ),
         )
-        .localCheckpoint()
     )
-    release(edges)
-    return out

@@ -43,9 +43,9 @@ def connected_components(
     on_nonconverged: str = "raise",
     driver_threshold: int = 1_000_000,
 ) -> DataFrame:
-    """(node, component) for every node appearing in ``edges``; the
-    component id is the MINIMUM node id in the component (canonical,
-    deterministic).
+    """(node, component) for every node appearing in an edge with two
+    non-NULL endpoints; the component id is the MINIMUM node id in the
+    component (canonical, deterministic).
 
     **Small-graph fast path**: when the (symmetrized, distinct) edge count
     is ≤ ``driver_threshold``, the edges are collected and labeled with a
@@ -66,10 +66,13 @@ def connected_components(
     partial labels and emit a loud warning).
     """
     spark = edges.sparkSession
-
+    s, d = F.col(src), F.col(dst)
+    # an edge with a NULL endpoint drops (the pagerank / label_propagation
+    # rule); self-loops stay, so an isolated self-looped node is reported
+    kept = edges.filter(s.isNotNull() & d.isNotNull())
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        kept.select(s.alias("a"), d.alias("b"))
+        .unionByName(kept.select(d.alias("a"), s.alias("b")))
         .distinct()
         .persist()
     )
@@ -138,7 +141,7 @@ def _cc_driver_union_find(spark, sym, id_type):
                 parent[ra] = rb
     rows = [(n, find(n)) for n in parent]
     schema = StructType([
-        StructField("node", id_type, False), StructField("comp", id_type, False)
+        StructField("node", id_type), StructField("comp", id_type)
     ])
     return spark.createDataFrame(rows, schema)
 
@@ -250,6 +253,16 @@ def _integer_id_type(dt) -> bool:
     return isinstance(dt, (ByteType, ShortType, IntegerType, LongType))
 
 
+def _pagerank_schema(id_type):
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    return StructType([
+        StructField("node", id_type),
+        StructField("rank_e12", LongType(), False),
+        StructField("out_degree", LongType(), False),
+    ])
+
+
 def _pagerank_driver(spark, e, id_type, n_iters, num, den):
     """Driver-side exact replay of the pinned fixed-point PageRank fold
     over a collected small edge set, in NumPy int64. Ranks never exceed
@@ -262,7 +275,6 @@ def _pagerank_driver(spark, e, id_type, n_iters, num, den):
     tests/test_pagerank.py::test_driver_fast_path_equals_distributed."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import StructField, StructType, LongType
 
     e12 = 10**12
     i64_max = np.iinfo(np.int64).max
@@ -291,12 +303,7 @@ def _pagerank_driver(spark, e, id_type, n_iters, num, den):
         r = np.full(n, base, dtype=np.int64)
         r[seg_nodes] += sums
     out = pd.DataFrame({"node": nodes, "rank_e12": r, "out_degree": outdeg})
-    schema = StructType([
-        StructField("node", id_type, False),
-        StructField("rank_e12", LongType(), False),
-        StructField("out_degree", LongType(), False),
-    ])
-    return spark.createDataFrame(out, schema)
+    return spark.createDataFrame(out, _pagerank_schema(id_type))
 
 
 def pagerank(
@@ -365,7 +372,11 @@ def pagerank(
     )
     # the id type of the endpoint union, as the distributed path
     id_type = endpoints.schema["node"].dataType
-    if 0 < m_edges <= driver_threshold and _integer_id_type(id_type):
+    if m_edges == 0:
+        # empty graph: empty frame with the declared schema, e released
+        release(e)
+        return spark.createDataFrame([], _pagerank_schema(id_type))
+    if m_edges <= driver_threshold and _integer_id_type(id_type):
         try:
             ranked = _pagerank_driver(
                 spark, e, id_type, n_iters, damping_num, damping_den
@@ -378,12 +389,6 @@ def pagerank(
             return ranked
     nodes = endpoints.distinct().localCheckpoint()
     n = nodes.count()
-    if n == 0:
-        # empty graph: empty frame with the declared schema (the two
-        # checkpoints are empty; nothing worth releasing eagerly)
-        return nodes.withColumn("rank_e12", F.lit(None).cast("bigint")).withColumn(
-            "out_degree", F.lit(None).cast("bigint")
-        )
     outdeg = e.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("out_degree")
     )
@@ -481,8 +486,7 @@ def _label_propagation_driver(spark, e, id_type, n_iters):
         lab = new_lab
     out = pd.DataFrame({"node": nodes, "label": nodes[lab]})
     schema = StructType([
-        StructField("node", id_type, False),
-        StructField("label", id_type, False),
+        StructField("node", id_type), StructField("label", id_type)
     ])
     return spark.createDataFrame(out, schema)
 

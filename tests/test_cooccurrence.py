@@ -7,6 +7,8 @@ from pyspark.errors import PySparkException
 
 from funcify_feature_eng_spark.operators.cooccurrence import (
     co_occurrence_edges,
+    item_lift,
+    item_neighbors,
     triangle_stats,
 )
 
@@ -47,22 +49,42 @@ def test_edges_min_count(spark, baskets):
 
 
 def test_edges_oversize(spark):
+    """For every co-occurrence operator: argument errors raise at call
+    time; a ``max_group`` overflow raises when the (lazy) result is acted
+    on; ``skip`` drops the oversized group whole."""
     big = spark.createDataFrame(
         [(1, f"i{k}") for k in range(12)] + [(2, "x"), (2, "y")], "g int, i string"
     )
-    with pytest.raises(PySparkException, match="max_group"):
-        co_occurrence_edges(big, "g", "i", max_group=10).collect()
-    got = {
-        (r["item_a"], r["item_b"])
-        for r in co_occurrence_edges(
-            big, "g", "i", max_group=10, on_oversize="skip"
-        ).collect()
-    }
-    assert got == {("x", "y")}
-    with pytest.raises(ValueError, match="on_oversize"):
-        co_occurrence_edges(big, "g", "i", on_oversize="drop")
-    with pytest.raises(ValueError, match="min_count"):
-        co_occurrence_edges(big, "g", "i", min_count=0)
+    for fn in (co_occurrence_edges, item_neighbors, item_lift):
+        out = fn(big, "g", "i", max_group=10)
+        with pytest.raises(PySparkException, match="max_group"):
+            out.collect()
+        got = {
+            tuple(sorted(r[:2]))
+            for r in fn(big, "g", "i", max_group=10, on_oversize="skip").collect()
+        }
+        assert got == {("x", "y")}, fn.__name__
+        with pytest.raises(ValueError, match="on_oversize"):
+            fn(big, "g", "i", on_oversize="drop")
+        with pytest.raises(ValueError, match="min_count"):
+            fn(big, "g", "i", min_count=0)
+
+
+@pytest.mark.parametrize("fn", [item_lift, item_neighbors], ids=lambda f: f.__name__)
+def test_cooccurrence_call_is_lazy_and_holds_no_storage(spark, baskets, fn):
+    """The call only builds a plan: it launches no job, and acting on the
+    result leaves no persisted RDD behind."""
+    sc = spark.sparkContext
+    group = f"cooccurrence-call-{fn.__name__}"
+    before = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(baskets, "g", "i")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out.collect()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sc._jsc.getPersistentRDDs().size() == before
 
 
 def _tri(spark, edges):
@@ -119,8 +141,6 @@ def test_triangle_k4(spark):
 
 
 def test_item_neighbors_scores(spark, baskets):
-    from funcify_feature_eng_spark.operators.cooccurrence import item_neighbors
-
     got = {
         (r["item"], r["neighbor"]): (
             r["n_both"], r["n_item"], r["n_neighbor"], r["cosine2_ppm"], r["rank"]
@@ -142,8 +162,6 @@ def test_item_neighbors_scores(spark, baskets):
 
 
 def test_item_neighbors_k_cut(spark, baskets):
-    from funcify_feature_eng_spark.operators.cooccurrence import item_neighbors
-
     got = item_neighbors(baskets, "g", "i", k=1).collect()
     by_item = {}
     for r in got:
@@ -153,8 +171,6 @@ def test_item_neighbors_k_cut(spark, baskets):
 
 
 def test_item_neighbors_validation(spark, baskets):
-    from funcify_feature_eng_spark.operators.cooccurrence import item_neighbors
-
     with pytest.raises(ValueError, match="k must be"):
         item_neighbors(baskets, "g", "i", k=0)
 
@@ -164,8 +180,6 @@ def test_item_neighbors_skip_counts_retained_universe_only(spark):
     COUNTS too, not just the edges — otherwise two items co-occurring in
     every retained basket score 250000 instead of 1e6 and ranks can
     invert."""
-    from funcify_feature_eng_spark.operators.cooccurrence import item_neighbors
-
     rows = [("g1", "a"), ("g1", "b")]  # retained: a,b together
     # oversized group (4 items > max_group=3) also contains a and b
     rows += [("big", x) for x in ("a", "b", "x", "y")]
@@ -200,8 +214,6 @@ def test_pagerank_releases_seed_checkpoint(spark):
 
 
 def test_item_lift_exact(spark, baskets):
-    from funcify_feature_eng_spark.operators.cooccurrence import item_lift
-
     rows = {
         (r["item_a"], r["item_b"]): r for r in item_lift(baskets, "g", "i").collect()
     }
@@ -221,8 +233,6 @@ def test_item_lift_exact(spark, baskets):
 
 
 def test_item_lift_min_count(spark, baskets):
-    from funcify_feature_eng_spark.operators.cooccurrence import item_lift
-
     got = {
         (r["item_a"], r["item_b"])
         for r in item_lift(baskets, "g", "i", min_count=2).collect()
@@ -234,8 +244,6 @@ def test_item_lift_skip_counts_retained_universe_only(spark):
     """on_oversize='skip' drops oversized groups from n_a, n_b and N too,
     not just from the edges: two items co-occurring in every retained
     basket have lift and Jaccard exactly 1e6, not 500000 / 333333."""
-    from funcify_feature_eng_spark.operators.cooccurrence import item_lift
-
     rows = [("g1", "a"), ("g1", "b")]  # retained: a,b together
     # oversized group (4 items > max_group=3) also contains a and b
     rows += [("big", x) for x in ("a", "b", "x", "y")]

@@ -227,9 +227,18 @@ def test_graph_driver_path_takes_endpoint_union_id_type(spark, algo):
     fn = _GRAPH_LOOPS[algo]
     fast = fn(edges, "src", "dst")
     dist = fn(edges, "src", "dst", driver_threshold=0)
-    assert fast.dtypes == dist.dtypes
+    assert fast.schema == dist.schema
     assert dict(fast.dtypes)["node"] == "bigint"
     assert sorted(fast.collect()) == sorted(dist.collect())
+
+
+@pytest.mark.parametrize("driver_threshold", [1_000_000, 0])
+def test_connected_components_drops_null_endpoint_edges(spark, driver_threshold):
+    """An edge with a NULL endpoint drops on both paths (the pagerank /
+    label_propagation rule); its non-NULL endpoint keeps its other edges."""
+    edges = spark.createDataFrame([(1, 2), (2, None), (3, 4)], "src long, dst long")
+    out = connected_components(edges, "src", "dst", driver_threshold=driver_threshold)
+    assert {r["node"]: r["comp"] for r in out.collect()} == {1: 1, 2: 1, 3: 3, 4: 3}
 
 
 def test_quota_per_group_stable_and_capped(spark):

@@ -82,10 +82,18 @@ def test_damping_validation(spark):
 
 
 def test_empty_graph(spark):
-    df = spark.createDataFrame([], "src long, dst long")
-    out = pagerank(df)
-    assert out.count() == 0
-    assert out.columns == ["node", "rank_e12", "out_degree"]
+    """An edge set that is empty after the NULL/self-loop filter gives an
+    empty frame on both paths and holds no storage after the call."""
+    sc = spark.sparkContext
+    for rows in ([], [(1, 1), (2, 2)]):
+        df = spark.createDataFrame(rows, "src long, dst long")
+        for driver_threshold in (1_000_000, 0):
+            before = sc._jsc.getPersistentRDDs().size()
+            out = pagerank(df, driver_threshold=driver_threshold)
+            assert out.count() == 0
+            assert out.columns == ["node", "rank_e12", "out_degree"]
+            held = sc._jsc.getPersistentRDDs().size()
+            assert held == before, (rows, driver_threshold)
 
 
 class TestLabelPropagation:
