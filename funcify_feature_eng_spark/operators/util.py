@@ -44,6 +44,19 @@ def spread_small_input(df: DataFrame, *keys: str) -> DataFrame:
     return df
 
 
+def spread_partitions(estimate: int, parallelism: int, min_part_bytes: int) -> int:
+    """Partitions worth spreading a frame of ``estimate`` bytes (the
+    optimizer's plan-size estimate) over before a write:
+    ``min(parallelism, estimate // min_part_bytes)``.
+
+    ``min_part_bytes`` is AQE's ``coalescePartitions.minPartitionSize``:
+    AQE would merge any smaller post-shuffle partition anyway, so a frame
+    below two of them is not worth a shuffle. An unknown estimate
+    (Long.MaxValue) sizes to full parallelism. Callers spread only when the
+    result is above the input's own partition count, never coalesce."""
+    return min(parallelism, estimate // min_part_bytes)
+
+
 def materialize_small(df: DataFrame, broadcast_rows: int = 1_000_000):
     """Materialize a DECISION frame (candidate pairs, surviving ids) that is
     expected to be orders of magnitude smaller than the payload tables it

@@ -22,21 +22,45 @@ fallback is plain parquet at a path — same code path, different format
 
 Schema (FIXTURES.md §2): feature_id, conv_id (entity), params_hash, value
 (JSON string), value_at_ts, calculated_ts.
+
+I/O contract of the parquet fallback (each cost is sized to the data):
+
+- ``publish`` spreads its input across partitions only when the
+  optimizer's size estimate fills more partitions than the input already
+  has (:func:`~funcify_feature_eng_spark.operators.util.spread_partitions`:
+  one partition per AQE ``minPartitionSize``, at most
+  ``defaultParallelism``). A micro-batch of a few hundred KB writes one
+  file, pays no shuffle and is not probed for its partition count. Each
+  call logs its decision on the ``funcify_feature_eng_spark.store``
+  logger.
+- Each ``FeatureStore`` pins one all-nullable schema: from its first
+  publish into an empty local location, or from the first read that had to
+  infer it. Later reads pass it to the reader, so building a read launches
+  no schema-inference job.
+- A read of a missing location, or of one with no data files, is empty;
+  any other failure (a corrupt file) raises.
+- ``compact``/``expire`` take their before/after row counts from the
+  parquet footers, not from ``count()`` jobs.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from funcify_feature_eng_spark.operators.asof import asof_join
-from funcify_feature_eng_spark.operators.util import release
+from funcify_feature_eng_spark.operators.util import release, spread_partitions
+
+_log = logging.getLogger(__name__)
 
 STORE_COLUMNS = ["feature_id", "conv_id", "params_hash", "value", "value_at_ts", "calculated_ts"]
 
@@ -55,6 +79,26 @@ def contextual_params_hash(params: dict[str, Any] | None) -> str:
     return hashlib.sha256(canon.encode()).hexdigest()
 
 
+def _data_files(path: str) -> list[str]:
+    """The data files under a local store directory, skipping the names
+    Spark's file index skips (``_SUCCESS``, ``.crc`` checksums, a
+    ``_temporary`` write directory)."""
+    out = []
+    for d, dirs, files in os.walk(path):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        out += [os.path.join(d, f) for f in files if not f.startswith(("_", "."))]
+    return out
+
+
+def _footer_rows(path: str) -> int:
+    """Rows stored under a local parquet directory, summed from the file
+    footers — what ``spark.read.parquet(path).count()`` returns, without
+    a job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
+
+
 @dataclass
 class FeatureStore:
     """Point-in-time feature-value store over a table path or Iceberg name."""
@@ -62,10 +106,23 @@ class FeatureStore:
     spark: SparkSession
     location: str  # path (parquet fallback) or catalog.db.table (Iceberg)
     entity_col: str = "conv_id"
+    # the parquet fallback's read schema, pinned once known (module docstring)
+    _schema: StructType | None = field(default=None, init=False, repr=False, compare=False)
 
     @property
     def _is_table(self) -> bool:
         return not ("/" in self.location or self.location.startswith("file:"))
+
+    @property
+    def _local_dir(self) -> str | None:
+        """The parquet fallback's directory when it is on the local file
+        system; None for a catalog table or a remote path."""
+        if self._is_table:
+            return None
+        loc = self.location.removeprefix("file:")
+        # any scheme prefix (hdfs:/..., s3a://...) means non-local: the
+        # first path segment contains a colon
+        return None if ":" in loc.split("/", 1)[0] else loc
 
     def _snapshot_isolating_catalog(self) -> bool:
         """True when EVERY table in the catalog is snapshot-isolating: only
@@ -88,10 +145,19 @@ class FeatureStore:
         if self._is_table:
             df = self.spark.read.table(self.location)
         else:
+            reader = self.spark.read
+            if self._schema is not None:
+                reader = reader.schema(self._schema)
             try:
-                df = self.spark.read.parquet(self.location)
-            except Exception:
+                df = reader.parquet(self.location)
+            except AnalysisException as e:
+                # nothing published yet; any other failure (a corrupt or
+                # unreadable file) must not read as an empty store
+                if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                    raise
                 return self._empty()
+            if self._schema is None:
+                self._schema = df.schema  # inferred file schemas are all-nullable
         if feature_id is not None:
             # partition-pruned on Iceberg (store is partitioned by feature_id)
             df = df.filter(F.col("feature_id") == feature_id)
@@ -182,12 +248,7 @@ class FeatureStore:
             if calculated_at is not None
             else F.current_timestamp()
         )
-        from funcify_feature_eng_spark.operators.util import spread_small_input
-
-        # the JSON-serialize + write stage inherits the input split count;
-        # a single-split source would write the whole publish on one core
-        # (guide §6 — no-op at scale, where inputs have many splits)
-        rows = spread_small_input(calculated).select(
+        rows = self._spread_for_write(calculated).select(
             F.lit(feature_id).alias("feature_id"),
             F.col(self.entity_col).alias("conv_id"),
             F.lit(params_hash or contextual_params_hash(params)).alias("params_hash"),
@@ -197,8 +258,47 @@ class FeatureStore:
         )
         if self._is_table:
             rows.writeTo(self.location).append()
-        else:
-            rows.write.mode("append").parquet(self.location)
+            return
+        loc = self._local_dir
+        pin = self._schema is None and loc is not None and not _data_files(loc)
+        rows.write.mode("append").parquet(self.location)
+        if pin:
+            self._schema = StructType([StructField(f.name, f.dataType) for f in rows.schema])
+
+    def _spread_for_write(self, df: DataFrame) -> DataFrame:
+        """Spread a publish's input over :func:`spread_partitions` partitions
+        when that is more than the input has: the JSON-serialize + write
+        stage otherwise inherits the input's split count, so a large
+        single-split input would be written on one core, while a small one
+        is cheaper as one file with no shuffle. Logs one decision record per
+        call (``input_partitions`` is None when the input was not probed)."""
+        qe = df._jdf.queryExecution()
+        estimate = int(str(qe.optimizedPlan().stats().sizeInBytes()))
+        min_size = self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            self.spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+        )
+        n = spread_partitions(estimate, self.spark.sparkContext.defaultParallelism, min_size)
+        parts = None
+        # n <= 1 never spreads, so the probe (~50 ms) is skipped. df.rdd
+        # finalizes an adaptive plan and can run its shuffle stages; a
+        # shuffled input's parallelism is the shuffle's anyway
+        if n > 1 and "Exchange" not in qe.executedPlan().toString():
+            parts = df.rdd.getNumPartitions()
+        fired = parts is not None and n > parts
+        decision = {
+            "name": "publish_spread",
+            "estimate_bytes": estimate,
+            "input_partitions": parts,
+            "partitions": n if fired else parts,
+            "spread": "fired" if fired else "skipped",
+        }
+        _log.info(
+            "publish spread %(spread)s: estimate %(estimate_bytes)d B, "
+            "input partitions %(input_partitions)s, partitions %(partitions)s",
+            decision,
+            extra={"decision": decision},
+        )
+        return df.repartition(n) if fired else df
 
     def materialize_with_store(
         self,
@@ -413,10 +513,8 @@ class FeatureStore:
                     release(staged)
             n_after = self.spark.read.table(self.location).count()
             return {"rows_before": n_before, "rows_after": n_after}
-        loc = self.location.removeprefix("file:")
-        # any scheme prefix (hdfs:/..., s3a://...) means non-local: the
-        # first path segment contains a colon
-        if ":" in loc.split("/", 1)[0]:
+        loc = self._local_dir
+        if loc is None:
             raise NotImplementedError(
                 f"compact() on the parquet fallback supports local paths only, "
                 f"got {self.location!r} — use a catalog table for remote stores"
@@ -439,12 +537,11 @@ class FeatureStore:
         # the store lazily — rewriting in place would read what it deletes),
         # then swap with the old store renamed ASIDE first, never deleted
         # before the new data is in place
-        df = self.read()
-        n_before = df.count()
+        n_before = _footer_rows(loc)
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        survivors(df).write.mode("overwrite").parquet(tmp)
+        survivors(self.read()).write.mode("overwrite").parquet(tmp)
         os.rename(loc, aside)
         os.rename(tmp, loc)
         shutil.rmtree(aside)
-        return {"rows_before": n_before, "rows_after": self.read().count()}
+        return {"rows_before": n_before, "rows_after": _footer_rows(loc)}

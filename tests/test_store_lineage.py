@@ -2,14 +2,17 @@
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from funcify_feature_eng_spark.lineage import LineageTracker, fingerprint_df
-from funcify_feature_eng_spark.store import FeatureStore
+from funcify_feature_eng_spark.store import STORE_COLUMNS, FeatureStore
 
 
 @pytest.fixture()
@@ -393,3 +396,200 @@ def test_expire_knowledge_frontier_preserves_bitemporal_reads(spark, tmp_store):
     assert val("2025-01-15 00:00:00") == 1.0  # pre-correction knowledge
     assert val("2025-02-15 00:00:00") == 2.0  # correction visible
     assert val("2024-12-01 00:00:00") is None  # before any knowledge
+
+
+# ------------------------------------------------------- I/O shape
+
+
+def _one_split(spark, tmp_path):
+    """The spine as a one-file parquet source: one input split, like a
+    streaming micro-batch read from one file."""
+    path = str(tmp_path / "one_split")
+    _spine(spark).withColumn("f", F.col("turn_idx") * 10).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize(
+    "estimate,parallelism,min_part_bytes,expected",
+    [
+        (230_000, 4, 1 << 20, 0),  # a micro-batch: below one minimum partition
+        (818_000, 32, 1 << 20, 0),
+        (3 << 20, 32, 1 << 20, 3),  # one partition per minimum size
+        (8 << 20, 4, 1 << 20, 4),  # capped at parallelism
+        (8 << 20, 4, 4 << 20, 2),
+        ((1 << 63) - 1, 4, 1 << 20, 4),  # unknown size: full parallelism
+    ],
+)
+def test_spread_partitions(estimate, parallelism, min_part_bytes, expected):
+    from funcify_feature_eng_spark.operators.util import spread_partitions
+
+    assert spread_partitions(estimate, parallelism, min_part_bytes) == expected
+
+
+def test_small_publish_writes_one_file(spark, tmp_path, tmp_store):
+    from funcify_feature_eng_spark.store import _data_files
+
+    tmp_store.publish(_one_split(spark, tmp_path), "features/f", "f")
+    assert len(_data_files(tmp_store.location)) == 1
+    assert tmp_store.read().count() == 3
+
+
+def test_publish_logs_spread_decision(spark, tmp_path, tmp_store, caplog):
+    """One record per publish on the store logger. A small input is not
+    probed; one sized above its partition count spreads; one sized at its
+    partition count (an unknown-size local frame) keeps its partitions."""
+    src = _one_split(spark, tmp_path)
+    par = spark.sparkContext.defaultParallelism
+    local = spark.createDataFrame(
+        [(f"c{i}", i, i) for i in range(par)], "conv_id string, ts long, f long"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    old = spark.conf.get(key)
+    with caplog.at_level(logging.INFO, logger="funcify_feature_eng_spark.store"):
+        tmp_store.publish(src, "features/f", "f")
+        spark.conf.set(key, "1b")
+        try:
+            tmp_store.publish(src, "features/g", "f")
+        finally:
+            spark.conf.set(key, old)
+        tmp_store.publish(local, "features/h", "f")
+    recs = [r.decision for r in caplog.records if r.name == "funcify_feature_eng_spark.store"]
+    assert all(r["name"] == "publish_spread" and r["estimate_bytes"] > 0 for r in recs)
+    got = [(r["spread"], r["input_partitions"], r["partitions"]) for r in recs]
+    assert got == [
+        ("skipped", None, None),
+        ("fired", 1, par),
+        ("skipped", local.rdd.getNumPartitions(), local.rdd.getNumPartitions()),
+    ]
+
+
+def test_read_after_publish_launches_no_job(spark, tmp_path):
+    """The publish pins the store schema, so building a read (or a
+    read-through) infers nothing; a second instance infers once, then pins."""
+    sc = spark.sparkContext
+    loc = str(tmp_path / "fs")
+    spine = _spine(spark)
+    stores = {"publisher": FeatureStore(spark, loc), "reader": FeatureStore(spark, loc)}
+    stores["publisher"].publish(spine.withColumn("f", F.col("turn_idx")), "features/f", "f")
+    stores["reader"].read()  # infers the schema once
+    for who, store in stores.items():
+        group = f"store-read-{who}"
+        sc.setJobGroup(group, group)
+        try:
+            store.read()
+            out = store.read_through(spine, "features/f", "fv")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert [r["fv"] for r in out.orderBy("conv_id", "turn_idx").collect()] == [
+            '{"v":0}', '{"v":1}', '{"v":0}'
+        ]
+
+
+def test_publisher_pins_a_nullable_schema(spark, tmp_store):
+    tmp_store.publish(_spine(spark).withColumn("f", F.lit(1)), "features/f", "f")
+    inferred = spark.read.parquet(tmp_store.location).schema
+    assert tmp_store._schema == inferred
+    assert all(f.nullable for f in tmp_store._schema)
+
+
+def test_footer_counts_equal_spark_counts(spark, tmp_store):
+    """compact/expire count from parquet footers; the counts equal Spark's
+    own count() of the store before and after, down to an empty store."""
+    spine = _spine(spark)
+    for know in ("2025-01-01 00:00:00", "2025-02-01 00:00:00"):
+        tmp_store.publish(
+            spine.withColumn("f", F.col("turn_idx")), "features/f", "f",
+            calculated_at=know,
+        )
+    fresh = FeatureStore(spark, tmp_store.location)
+    before = fresh.read().count()
+    stats = tmp_store.compact()
+    assert stats == {"rows_before": before, "rows_after": fresh.read().count()}
+    assert (before, stats["rows_after"]) == (6, 3)
+    stats = tmp_store.expire("2030-01-01 00:00:00", keep_latest=False)
+    assert stats == {"rows_before": 3, "rows_after": 0}
+    assert fresh.read().count() == 0 and tmp_store.read().count() == 0
+
+
+# ---------------------------------------------- read failures, recovery
+
+
+def test_read_missing_or_dataless_store_is_empty(spark, tmp_path):
+    missing = FeatureStore(spark, str(tmp_path / "missing"))
+    (tmp_path / "empty").mkdir()
+    (tmp_path / "empty" / "_SUCCESS").write_bytes(b"")
+    dataless = FeatureStore(spark, str(tmp_path / "empty"))
+    spine = _spine(spark)
+    for store in (missing, dataless):
+        assert store.read().columns == STORE_COLUMNS
+        assert store.read().count() == 0
+        out = store.read_through(spine, "features/f", "fv").collect()
+        assert len(out) == 3 and all(r["fv"] is None for r in out)
+
+
+def test_read_corrupt_store_raises(spark, tmp_path, tmp_store):
+    """A store whose only data file is corrupt must fail the read, not
+    serve every request as a miss."""
+    from funcify_feature_eng_spark.store import _data_files
+
+    spine = _spine(spark)
+    tmp_store.publish(_one_split(spark, tmp_path), "features/f", "f")
+    (part,) = _data_files(tmp_store.location)
+    with open(part, "wb") as fh:
+        fh.write(b"not a parquet file" * 64)
+    fresh = FeatureStore(spark, tmp_store.location)
+    for store in (tmp_store, fresh):  # pinned schema; schema inference
+        with pytest.raises((Py4JJavaError, PySparkException)):
+            store.read_through(spine, "features/f", "fv").collect()
+
+
+def _shadowed_store(spark, store):
+    spine = _spine(spark)
+    for know in ("2025-01-01 00:00:00", "2025-02-01 00:00:00"):
+        store.publish(
+            spine.withColumn("f", F.col("turn_idx")), "features/f", "f",
+            calculated_at=know,
+        )
+
+
+def test_compact_restores_aside_store_without_store(spark, tmp_store):
+    """A crash between the two renames leaves only ``__precompact`` (and the
+    written survivors): the next compaction restores and compacts it."""
+    _shadowed_store(spark, tmp_store)
+    loc = tmp_store.location
+    os.rename(loc, loc + "__precompact")
+    os.makedirs(loc + "__compacting")  # survivors written before the crash
+    stats = FeatureStore(spark, loc).compact()
+    assert stats == {"rows_before": 6, "rows_after": 3}
+    assert not os.path.exists(loc + "__precompact")
+    assert not os.path.exists(loc + "__compacting")
+    assert FeatureStore(spark, loc).read().count() == 3
+
+
+def test_compact_discards_aside_backup_beside_store(spark, tmp_path, tmp_store):
+    """``__precompact`` beside the store is a completed backup: it is
+    discarded, never read back."""
+    _shadowed_store(spark, tmp_store)
+    loc = tmp_store.location
+    other = FeatureStore(spark, str(tmp_path / "other"))
+    other.publish(_spine(spark).withColumn("f", F.lit(99)), "features/other", "f")
+    os.rename(other.location, loc + "__precompact")
+    stats = tmp_store.compact()
+    assert stats == {"rows_before": 6, "rows_after": 3}
+    assert not os.path.exists(loc + "__precompact")
+    assert {r["feature_id"] for r in tmp_store.read().collect()} == {"features/f"}
+
+
+def test_compact_removes_stale_compacting_dir(spark, tmp_path, tmp_store):
+    """A stale ``__compacting`` directory from an interrupted write is
+    removed before the survivors are written; none of its rows survive."""
+    _shadowed_store(spark, tmp_store)
+    loc = tmp_store.location
+    other = FeatureStore(spark, str(tmp_path / "other"))
+    other.publish(_spine(spark).withColumn("f", F.lit(99)), "features/other", "f")
+    os.rename(other.location, loc + "__compacting")
+    stats = tmp_store.compact()
+    assert stats == {"rows_before": 6, "rows_after": 3}
+    assert not os.path.exists(loc + "__compacting")
+    assert {r["feature_id"] for r in tmp_store.read().collect()} == {"features/f"}
