@@ -37,12 +37,24 @@ Leakage contract: with ``allow_exact_matches=False`` a right row at exactly
 the left timestamp is NOT visible (strict prior); ties among right rows at
 the same (entity, ts) are broken by ``right_order`` columns — pass them to
 make results deterministic when the right side can carry duplicates.
+
+Column reuse: every strategy goes through the same few Column-building
+helpers (the right side's NULL-time filter, :func:`_tagged_union`'s tag
+projections, :func:`_ffill_and_project`'s window pick, side filter and
+payload extraction). Building a Column costs Python→JVM round trips, so
+each helper takes its Columns from a bounded module memo keyed by its own
+arguments plus the live JVM gateway; a Column is an unresolved expression,
+so one built for one call resolves against every later call's frames. The
+DataFrame operations themselves still run per call.
 """
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Sequence
+from functools import lru_cache
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -51,6 +63,23 @@ _SIDE = "__asof_side"
 _RV = "__asof_rv"
 _RVF = "__asof_rvf"
 _B = "__asof_bucket"
+
+_log = logging.getLogger("funcify_feature_eng_spark.asof")
+
+# the memo's bound: distinct (helper arguments) shapes kept per helper
+_MEMO_SIZE = 128
+
+
+def _gateway():
+    """The live JVM gateway, part of every Column memo key: a Column built
+    over a gateway that was shut down and replaced is never handed out."""
+    return SparkContext._gateway
+
+
+@lru_cache(maxsize=_MEMO_SIZE)
+def _known_time(gateway, ts: str) -> Column:
+    """The right side's filter: a row with no time can match nothing."""
+    return F.col(ts).isNotNull()
 
 
 def _validate(left: DataFrame, on: Sequence[str], out_names: Sequence[str]) -> None:
@@ -129,7 +158,7 @@ def asof_join(
     # first) and forward-filled its payload as "known before all time", a
     # temporal leak; broadcast dropped it and pandas merge_asof raised,
     # so strategy="auto" silently changed results by plan choice
-    right = right.filter(F.col(right_ts).isNotNull())
+    right = right.filter(_known_time(_gateway(), right_ts))
     if direction == "nearest":
         # pandas merge_asof direction='nearest': the closer of the backward
         # and forward matches, ties to the PRIOR one (pandas' convention).
@@ -260,19 +289,37 @@ def _tagged_union(
     vals: dict[str, str],
     right_order: Sequence[str],
 ) -> DataFrame:
-    rv = F.struct(*[F.col(rc).alias(out) for rc, out in vals.items()])
+    left_cols, right_cols = _union_cols(
+        _gateway(), tuple(on), left_ts, right_ts, tuple(vals.items()), tuple(right_order)
+    )
+    return left.select(*left_cols).unionByName(
+        right.select(*right_cols), allowMissingColumns=True
+    )
+
+
+@lru_cache(maxsize=_MEMO_SIZE)
+def _union_cols(
+    gateway,
+    on: tuple[str, ...],
+    left_ts: str,
+    right_ts: str,
+    vals: tuple[tuple[str, str], ...],
+    right_order: tuple[str, ...],
+) -> tuple[tuple[str | Column, ...], tuple[str | Column, ...]]:
+    """:func:`_tagged_union`'s left and right tag projections. Plain names
+    stay strings: ``select`` converts a name in fewer round trips than
+    ``F.col`` builds one."""
+    rv = F.struct(*[F.col(rc).alias(out) for rc, out in vals])
     tie = [F.col(c).alias(f"__tie_{i}") for i, c in enumerate(right_order)]
-    right2 = right.select(
-        *[F.col(c) for c in on],
+    right_cols = (
+        *on,
         F.col(right_ts).alias(_T),
         F.lit(0).alias(_SIDE),
         rv.alias(_RV),
         *tie,
     )
-    left2 = left.select(
-        "*", F.col(left_ts).alias(_T), F.lit(1).alias(_SIDE)
-    )
-    return left2.unionByName(right2, allowMissingColumns=True)
+    left_cols = ("*", F.col(left_ts).alias(_T), F.lit(1).alias(_SIDE))
+    return left_cols, right_cols
 
 
 def _ffill_and_project(
@@ -285,6 +332,26 @@ def _ffill_and_project(
     extra_keys: Sequence[str] = (),
     forward: bool = False,
 ) -> DataFrame:
+    filled, left_side, out = _ffill_cols(
+        _gateway(), tuple(left_cols), tuple(on), tuple(vals.values()),
+        allow_exact_matches, n_tie, tuple(extra_keys), forward,
+    )
+    return u.withColumn(_RVF, filled).filter(left_side).select(*out)
+
+
+@lru_cache(maxsize=_MEMO_SIZE)
+def _ffill_cols(
+    gateway,
+    left_cols: tuple[str, ...],
+    on: tuple[str, ...],
+    outs: tuple[str, ...],
+    allow_exact_matches: bool,
+    n_tie: int,
+    extra_keys: tuple[str, ...],
+    forward: bool,
+) -> tuple[Column, Column, tuple[str | Column, ...]]:
+    """:func:`_ffill_and_project`'s window pick, left-side filter and
+    output projection."""
     # Exact-match ties (backward): right rows (side=0) sort BEFORE left rows
     # at the same ts when matches at equal ts are allowed, AFTER them when
     # strict — so the (preceding, 0] frame sees exactly the visible rows.
@@ -305,9 +372,12 @@ def _ffill_and_project(
         .orderBy(F.col(_T).asc(), side_order, *tie_order)
         .rowsBetween(*frame)
     )
-    filled = u.withColumn(_RVF, pick(_RV, ignorenulls=True).over(w))
-    out_vals = [F.col(f"{_RVF}.{out}").alias(out) for out in vals.values()]
-    return filled.filter(F.col(_SIDE) == 1).select(*left_cols, *out_vals)
+    out_vals = [F.col(f"{_RVF}.{out}").alias(out) for out in outs]
+    return (
+        pick(_RV, ignorenulls=True).over(w),
+        F.col(_SIDE) == 1,
+        (*left_cols, *out_vals),
+    )
 
 
 def _asof_union_window(
@@ -609,29 +679,33 @@ def choose_asof_strategy(
        knowing your key distribution; recurring pipelines should cache the
        decision or pin the strategy.
     3. **union_window** otherwise — the one-shuffle default.
+
+    Logs one record per call on the ``funcify_feature_eng_spark.asof``
+    logger; its ``decision`` attribute holds the right-side estimate, the
+    broadcast threshold, the sampled key max/mean (None when no sample ran)
+    and the chosen strategy.
     """
     if broadcast_bytes is None:
-        try:
-            raw = left.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-            # Spark accepts "10485760", "100MB", "10m", "1g", ... — parse
-            # the full byte-string grammar; a bare trailing-'b' strip
-            # silently fell back to 10 MiB on '100MB' (int('100m') raises)
-            # and mis-sized both the broadcast gate and the salted bound
-            txt = str(raw).strip().lower().removesuffix("b")
-            mult = 1
-            if txt and txt[-1] in "kmgt":
-                mult = 1024 ** ("kmgt".index(txt[-1]) + 1)
-                txt = txt[:-1]
-            broadcast_bytes = int(txt) * mult
-        except Exception:
-            broadcast_bytes = 10 << 20
+        # the session's threshold as Spark itself parsed it ("100MB",
+        # "10m", ...); -1 disables broadcast joins
+        broadcast_bytes = int(
+            left.sparkSession._jsparkSession.sessionState().conf()
+            .autoBroadcastJoinThreshold()
+        )
     try:
         raw_est = right._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         est = raw_est if isinstance(raw_est, int) else int(str(raw_est))
     except Exception:
         est = 1 << 62  # unknown → assume big
+    decision = {
+        "name": "asof_strategy",
+        "estimate_bytes": est,
+        "threshold_bytes": broadcast_bytes,
+        "sampled_max": None,
+        "sampled_mean": None,
+    }
     if 0 < broadcast_bytes and est <= broadcast_bytes:
-        return "broadcast"
+        return _decided(decision, "broadcast")
 
     sample = left.select(*on)
     if skew_sample_fraction < 1.0:
@@ -642,14 +716,30 @@ def choose_asof_strategy(
         .agg(F.max("c").alias("mx"), F.avg("c").alias("mean"))
         .collect()[0]
     )
+    decision["sampled_max"], decision["sampled_mean"] = stats["mx"], stats["mean"]
     if stats["mx"] is None:
-        return "union_window"
+        return _decided(decision, "union_window")
     extrapolated_hot = stats["mx"] / max(skew_sample_fraction, 1e-12)
     if stats["mx"] >= skew_ratio * stats["mean"] and extrapolated_hot >= hot_key_rows:
         if salt_max_right_bytes is None:
             salt_max_right_bytes = 4 * broadcast_bytes
-        return "salted" if est <= salt_max_right_bytes else "segmented"
-    return "union_window"
+        return _decided(
+            decision, "salted" if est <= salt_max_right_bytes else "segmented"
+        )
+    return _decided(decision, "union_window")
+
+
+def _decided(decision: dict, strategy: str) -> str:
+    """Log :func:`choose_asof_strategy`'s decision record; returns the pick."""
+    decision["strategy"] = strategy
+    _log.info(
+        "as-of strategy %(strategy)s: right estimate %(estimate_bytes)d B, "
+        "broadcast threshold %(threshold_bytes)d B, sampled key max "
+        "%(sampled_max)s, mean %(sampled_mean)s",
+        decision,
+        extra={"decision": decision},
+    )
+    return strategy
 
 
 def asof_topk(
@@ -694,7 +784,7 @@ def asof_topk(
     vals = _normalize_values(value_cols)
     _validate(left, on, [*vals.values(), rank_col])
     # NULL right_ts rows match nothing (same contract as asof_join)
-    right = right.filter(F.col(right_ts).isNotNull())
+    right = right.filter(_known_time(_gateway(), right_ts))
     ridx = "__asof_topk_ridx"
     cand = "__asof_topk_cand"
     pos = "__asof_topk_pos"
@@ -811,7 +901,7 @@ def sliding_window_join(
     )
     # a right row with a NULL timestamp would become a +delta sorting
     # before every probe (nulls first) and pollute ALL running counts
-    right = right.filter(F.col(right_ts).isNotNull())
+    right = right.filter(_known_time(_gateway(), right_ts))
     birth = right.select(
         *on,
         us(right_ts).alias("__t"),

@@ -97,8 +97,14 @@ def release(df: DataFrame) -> None:
     actual storage handle lives on the ``LogicalRDD`` leaf the checkpoint
     planted in the logical plan — walk the leaves and unpersist those RDDs
     directly (non-blocking). Any leaf checkpoint reachable from ``df`` is
-    released, which is exactly the do-not-use-afterwards contract."""
-    plan = df._jdf.queryExecution().optimizedPlan()
+    released, which is exactly the do-not-use-afterwards contract.
+
+    The leaves are read off the ANALYZED plan, which the frame already
+    holds: the optimized plan would run the optimizer on a
+    broadcast-hinted frame (:func:`materialize_small`) outside any join,
+    and Spark logs a "join hint ... not part of a join relation" warning
+    for each such release."""
+    plan = df._jdf.queryExecution().analyzed()
     leaves = plan.collectLeaves()
     for i in range(leaves.size()):
         leaf = leaves.apply(i)

@@ -26,6 +26,16 @@ Spark-first:
   is the dispatched-publisher graph; Catalyst's ReuseExchange is the
   ``.cache()`` memoization.
 
+The plan cache also holds the request's lowered Columns: the first
+materialize of a request shape builds each window and transformer stage's
+Column and the final projection, and every later call hands the stored
+Columns to ``withColumns`` / ``select`` instead of rebuilding them through
+hundreds of Python→JVM round trips. Source joins, variable literals and
+:meth:`FeatureModel._validate_transformer_input` still run per call. The
+stored Columns go with the bound plan (every mutator clears it, below); a
+transformer's Column is reused only while its name still maps to the same
+Transformer object, so re-registering a transformer takes effect.
+
 Request scopes: the document and GraphQL front doors bind a request's
 variants and ad-hoc features onto :meth:`FeatureModel.request_scope`, and
 keep the compiled scopes in the base model's request cache; every mutator
@@ -43,7 +53,7 @@ from collections.abc import Sequence
 from dataclasses import dataclass, field, replace
 from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from funcify_feature_eng_spark.functions.registry import TransformerRegistry, default_registry
@@ -104,6 +114,11 @@ class _BoundPlan(NamedTuple):
     # requested column / argument name -> resolve_name's (kind, target), in
     # landing order: requested columns, then arguments in stage order
     wiring: dict[str, tuple[str, Any]]
+    # Columns built by the first materialize and reused after it: stage
+    # name -> (the Transformer it was built from, None for a window; Column)
+    lowered: dict[str, tuple[Any, Column]]
+    # requested column order -> the final projection
+    projections: dict[tuple[str, ...], list[Column]]
 
 
 class FeatureModel:
@@ -410,7 +425,7 @@ class FeatureModel:
             else s
             for s in order
         ]
-        plan = self._plan_cache[key] = _BoundPlan(stages, wiring)
+        plan = self._plan_cache[key] = _BoundPlan(stages, wiring, {}, {})
         return plan
 
     def describe(
@@ -522,7 +537,7 @@ class FeatureModel:
                         if s.kind == "transformer":
                             self._validate_transformer_input(s, df)
                     df = df.withColumns(
-                        {s.name: self._lower_one(s, keys, order) for s in batch}
+                        {s.name: self._lowered(plan, s, keys, order) for s in batch}
                     )
             elif spec.kind == "interval":
                 from funcify_feature_eng_spark.operators.intervals import (
@@ -593,13 +608,15 @@ class FeatureModel:
                     )
                 i += 1
 
-        out_cols = []
-        for col in columns:
-            kind, resolved = plan.wiring[col]
-            if kind in ("source", "variable"):
-                out_cols.append(F.col(col))  # materialized under the requested name
-            else:
-                out_cols.append(F.col(resolved).alias(col))
+        out_cols = plan.projections.get(tuple(columns))
+        if out_cols is None:
+            out_cols = plan.projections[tuple(columns)] = []
+            for col in columns:
+                kind, resolved = plan.wiring[col]
+                if kind in ("source", "variable"):
+                    out_cols.append(F.col(col))  # materialized under the requested name
+                else:
+                    out_cols.append(F.col(resolved).alias(col))
         return df.select(*out_cols)
 
     def materialize_backfill(
@@ -655,6 +672,16 @@ class FeatureModel:
             t.validate_input_types(actual)
         except TypeError as e:
             raise PlanError(f"feature {spec.name!r}: {e}") from e
+
+    def _lowered(self, plan: _BoundPlan, spec: FeatureSpec, keys, order) -> Column:
+        """``spec``'s Column, built on the plan's first lowering and reused
+        after it; a transformer's only while its name still maps to the
+        Transformer it was built from."""
+        built_by = self.registry.get(spec.transformer) if spec.kind == "transformer" else None
+        hit = plan.lowered.get(spec.name)
+        if hit is None or hit[0] is not built_by:
+            hit = plan.lowered[spec.name] = (built_by, self._lower_one(spec, keys, order))
+        return hit[1]
 
     def _lower_one(self, spec: FeatureSpec, keys, order):
         if spec.kind == "transformer":

@@ -2,8 +2,13 @@
 
 Prints, per `queries()` entry: Exchange / SortMergeJoin / BroadcastHashJoin
 / window / scan counts from the executed plan, plus pushed filters on the
-scans — the "is this the plan you'd want at 100x scale" check the build
-brief asks for. Run after operator changes; diff the table across rounds.
+scans — the "is this the plan you'd want at 100x scale" check. Run after
+operator changes; diff the table across rounds.
+
+The `py4j` column counts the Python→JVM round trips spent building the
+leaf's DataFrame (py4j's own object-release messages excluded): the
+driver-side planning cost that Column construction and eager actions add
+before any plan runs.
 
 Usage: python scripts/plan_audit.py [sf_dir]   (default /root/testdata/sf0.01)
 """
@@ -16,8 +21,28 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from py4j.clientserver import ClientServerConnection
+
 import __spark_entry__ as entrymod
 from funcify_feature_eng_spark import get_spark
+
+
+def round_trips(fn):
+    """``(fn(), Python→JVM round trips it made)``, not counting py4j's
+    object-release messages (sent whenever Python happens to collect)."""
+    sent = [0]
+    real = ClientServerConnection.send_command
+
+    def counted(self, command, *a, **kw):
+        if not command.startswith("m\nd\n"):
+            sent[0] += 1
+        return real(self, command, *a, **kw)
+
+    ClientServerConnection.send_command = counted
+    try:
+        return fn(), sent[0]
+    finally:
+        ClientServerConnection.send_command = real
 
 
 def audit(plan: str) -> dict[str, int]:
@@ -41,12 +66,13 @@ def main() -> int:
     spark = get_spark("plan-audit", master="local[8]")
     rows = []
     for name, fn in entrymod.queries().items():
-        df = fn(spark, sf_dir)
+        df, trips = round_trips(lambda: fn(spark, sf_dir))
         plan = df._jdf.queryExecution().executedPlan().toString()
         a = audit(plan)
+        a["py4j"] = trips
         rows.append((name, a))
     print(f"{'query':26s} {'exch':>4} {'smj':>4} {'bhj':>4} {'win':>4} "
-          f"{'scan':>4} {'push':>4} {'pyudf':>5} {'arrow':>5}")
+          f"{'scan':>4} {'push':>4} {'pyudf':>5} {'arrow':>5} {'py4j':>6}")
     flagged = 0
     for name, a in rows:
         flag = ""
@@ -55,7 +81,7 @@ def main() -> int:
             flagged += 1
         print(f"{name:26s} {a['exchange']:>4} {a['smj']:>4} {a['bhj']:>4} "
               f"{a['window']:>4} {a['scans']:>4} {a['pushed']:>4} "
-              f"{a['py_udf']:>5} {a['arrow']:>5}{flag}")
+              f"{a['py_udf']:>5} {a['arrow']:>5} {a['py4j']:>6}{flag}")
     spark.stop()
     if write_json:
         import json

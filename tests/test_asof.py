@@ -749,3 +749,100 @@ def test_sliding_window_join_null_ts_rows(spark):
     # NULL-ts right row must not pollute the count; NULL-ts probe -> NULL
     assert got[1] == (1, 5)
     assert got[2] == (None, None)
+
+
+# ------------------------------------------------- Column memo
+
+
+def _memo_clear():
+    from funcify_feature_eng_spark.operators import asof
+
+    for memo in (asof._known_time, asof._union_cols, asof._ffill_cols):
+        memo.cache_clear()
+
+
+@pytest.mark.parametrize("strategy", ["union_window", "segmented", "salted"])
+def test_memo_keys_never_collide(spark, strategy):
+    """Calls that differ only in ``allow_exact_matches``, ``direction``,
+    ``right_order`` or ``value_cols`` share the memoized Column helpers;
+    alternating them must give each one's fresh (memo-cleared) result."""
+    left = spark.createDataFrame(
+        [("a", 1, 10), ("a", 2, 20), ("a", 3, 30), ("b", 1, 15), ("b", 2, 40)],
+        "e string, i int, t int",
+    ).withColumn("t", F.col("t").cast("timestamp"))
+    # exact-time matches at 10/20/15, ties at 20 and 15 ordered opposite
+    # ways by v and by r
+    right = spark.createDataFrame(
+        [("a", 10, 1, 2), ("a", 20, 2, 1), ("a", 20, 3, 0), ("b", 15, 4, 1),
+         ("b", 15, 5, 0), ("b", 30, 6, 0)],
+        "e string, rt int, v int, r int",
+    ).withColumn("rt", F.col("rt").cast("timestamp"))
+    base = dict(on=["e"], left_ts="t", right_ts="rt", value_cols={"v": "out"},
+                right_order=["v"], strategy=strategy, bucket_seconds=10)
+    variants = [
+        {},
+        {"allow_exact_matches": False},
+        {"direction": "forward"},
+        {"right_order": ["r"]},
+        {"value_cols": {"r": "out"}},
+    ]
+
+    def rows(variant):
+        out = asof_join(left, right, **{**base, **variant})
+        return [tuple(r) for r in out.orderBy("e", "i").collect()]
+
+    fresh = []
+    for v in variants:
+        _memo_clear()
+        fresh.append(rows(v))
+    assert len(set(map(tuple, fresh))) == len(variants)  # every knob bites
+    for _ in range(2):
+        for v, want in zip(variants, fresh):
+            assert rows(v) == want
+
+
+@pytest.mark.parametrize("threshold, want_bytes, want", [
+    ("100MB", 100 << 20, "broadcast"),
+    ("-1", -1, "union_window"),  # -1 disables broadcast
+])
+def test_choose_asof_strategy_logs_decision(
+    spark, transcripts, feature_store, caplog, threshold, want_bytes, want
+):
+    """The threshold is the session's parsed value, and each call logs one
+    decision record on the as-of logger."""
+    import logging
+
+    from funcify_feature_eng_spark.operators.asof import choose_asof_strategy
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, threshold)
+    try:
+        with caplog.at_level(logging.INFO, logger="funcify_feature_eng_spark.asof"):
+            chosen = choose_asof_strategy(
+                transcripts, feature_store, ["conv_id"], skew_sample_fraction=1.0
+            )
+    finally:
+        spark.conf.set(key, old)
+    recs = [r.decision for r in caplog.records if r.name == "funcify_feature_eng_spark.asof"]
+    assert len(recs) == 1
+    rec = recs[0]
+    assert chosen == want == rec["strategy"]
+    assert rec["name"] == "asof_strategy" and rec["threshold_bytes"] == want_bytes
+    assert 0 < rec["estimate_bytes"] < 100 << 20
+    sampled = (rec["sampled_max"], rec["sampled_mean"])
+    assert sampled == (None, None) if want == "broadcast" else None not in sampled
+
+
+def test_memo_keyed_by_live_gateway(spark, monkeypatch):
+    """A Column memoized under one JVM gateway is not handed out once that
+    gateway has been replaced."""
+    from pyspark import SparkContext
+
+    from funcify_feature_eng_spark.operators import asof
+
+    args = (("e",), "t", "rt", (("v", "out"),), ())
+    first = asof._union_cols(asof._gateway(), *args)
+    assert asof._union_cols(asof._gateway(), *args) is first
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert asof._union_cols(asof._gateway(), *args) is not first

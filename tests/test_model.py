@@ -619,3 +619,74 @@ def test_compile_binds_every_tier_once(spark, transcripts):
     stages = {s.name: s for s in m.compile(cols, transcripts.columns, ("tag",))}
     assert stages["gap_clean"].args == ("gap_secs",)
     assert stages["prior_role"].col == "role"
+
+
+# ------------------------------------------------- lowered-Column reuse
+
+
+def _round_trips(fn):
+    """Python→JVM round trips ``fn`` makes, not counting py4j's own
+    object-release messages (sent whenever Python happens to collect)."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    real = ClientServerConnection.send_command
+
+    def counted(self, command, *a, **kw):
+        if not command.startswith("m\nd\n"):
+            sent.append(1)
+        return real(self, command, *a, **kw)
+
+    ClientServerConnection.send_command = counted
+    try:
+        fn()
+    finally:
+        ClientServerConnection.send_command = real
+    return len(sent)
+
+
+def test_repeated_materialize_reuses_lowered_columns(model, transcripts):
+    """The first call of a request shape lowers its Columns; a second call
+    reuses them and only builds the DataFrame operations."""
+    model.materialize(transcripts, COLUMNS)
+    assert _round_trips(lambda: model.materialize(transcripts, COLUMNS)) < 200
+
+
+def _few(transcripts):
+    return transcripts.filter(F.col("conv_id").isin("conv_00000322", "conv_00000465"))
+
+
+_MUTATIONS = {
+    # an exact feature name outranks the convention-equivalent "turn_len"
+    "declare_transformer": lambda m, fs: m.declare_transformer_feature(
+        "turnLen", "token_count", args=["text"]),
+    "declare_window": lambda m, fs: m.declare_window_feature("turnLen", op="row_number"),
+    "declare_asof": lambda m, fs: m.declare_asof_feature(
+        "turnLen", store="fs", right_ts="value_at_ts", value_col="value",
+        right_order=("value",)),
+    "alias": lambda m, fs: m.alias("turnLen", "session_id"),
+    "register_store": lambda m, fs: m.register_store(
+        "fs", fs.withColumn("value", F.concat("value", F.lit("!")))),
+    "reregister_transformer": lambda m, fs: m.registry.register(
+        "char_len", lambda c: F.length(c) * 10),
+}
+
+
+@pytest.mark.parametrize("mutation", list(_MUTATIONS))
+def test_mutation_after_materialize_changes_next_output(
+    model, transcripts, feature_store, mutation
+):
+    """Stored Columns never outlive what they were built from: each mutator
+    (and re-registering a transformer, which no mutator sees) changes the
+    next materialize of the same request."""
+    spine = _few(transcripts)
+    cols = ["conv_id", "turn_idx", "turnLen", "asof_store_value"]
+
+    def rows():
+        return model.materialize(spine, cols).orderBy("conv_id", "turn_idx").collect()
+
+    before = rows()
+    assert rows() == before
+    _MUTATIONS[mutation](model, feature_store)
+    after = rows()
+    assert len(after) == len(before) and after != before

@@ -323,3 +323,19 @@ def test_temporal_split_is_a_time_suffix(spark):
     assert out[out["u"] == "a"]["split"].tolist().count("eval") == 2
     assert out[out["u"] == "b"]["split"].tolist().count("eval") == 1
     assert out[out["u"] == "c"]["split"].tolist() == ["eval"]
+
+
+def test_release_broadcast_hinted_small_frame(spark):
+    """A broadcast-hinted ``materialize_small`` frame releases its
+    checkpoint: the persisted RDDs return to their baseline."""
+    from funcify_feature_eng_spark.operators.util import materialize_small
+
+    sc = spark.sparkContext
+    before = {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    small, n = materialize_small(spark.range(50).withColumnRenamed("id", "x"))
+    assert n == 50
+    held = {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    assert len(held - before) == 1
+    release(small)
+    after = {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    assert after - before == set()
