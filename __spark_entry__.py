@@ -2551,12 +2551,11 @@ def _stream_parts(spark: SparkSession, src_dir: str) -> str:
     spins up one state-store partition per shuffle partition, so tiny
     inputs want few partitions (32x4 empty-ish state stores are pure
     overhead at gate scale) while sf1.0's 500k-row batches are
-    Python-state-bound and want every core. The row count is a parquet
-    metadata read of the already-written micro-batch dir, not a data scan."""
-    try:
-        n = spark.read.parquet(src_dir).count()
-    except Exception:
-        n = 0
+    Python-state-bound and want every core. The row count is summed from
+    the parquet footers of the already-written micro-batch dir: no job."""
+    from funcify_feature_eng_spark.operators.util import footer_rows
+
+    n = footer_rows(src_dir)
     cores = spark.sparkContext.defaultParallelism
     return str(max(4, min(cores, n // 25_000 + 1)))
 
@@ -2699,10 +2698,9 @@ def _stream_batch_files(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _decay_stream_source(spark: SparkSession, sf_dir: str):
-    """(tmp_dir, streaming DataFrame) over a 2-file ts-ordered split of
-    events CARRYING the value column (the shared split projects it away;
-    the decay gate aggregates it)."""
+def _decay_stream_files(spark: SparkSession, sf_dir: str) -> str:
+    """2-file ts-ordered split of events CARRYING the value column (the
+    shared split projects it away; the decay gate aggregates it)."""
 
     def parts():
         pdf = (
@@ -2718,26 +2716,20 @@ def _decay_stream_source(spark: SparkSession, sf_dir: str):
         "/tmp",
         f"spark_graft_decay_stream_{os.path.basename(os.path.normpath(sf_dir))}",
     )
-    tmp = _write_micro_batches(
+    return _write_micro_batches(
         tmp, os.path.join(sf_dir, "events.parquet"), "1", parts,
         {"coerce_timestamps": "us", "allow_truncated_timestamps": True},
     )
-    sch = spark.read.parquet(tmp).schema
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(tmp)
-    )
-    return tmp, stream
 
 
-def _stream_source(spark: SparkSession, sf_dir: str):
-    """(tmp_dir, streaming DataFrame) over the 2-file micro-batch split —
-    one definition of the micro-batch contract for both streaming gates."""
-    tmp = _stream_batch_files(spark, sf_dir)
-    sch = spark.read.parquet(tmp).schema
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(tmp)
+def _stream_source(spark: SparkSession, src_dir: str) -> DataFrame:
+    """The micro-batch contract of every stream gate: a file stream over
+    the micro-batch dir ``src_dir`` (see _write_micro_batches), read with
+    the dir's own schema, one file per micro-batch."""
+    sch = spark.read.parquet(src_dir).schema
+    return (
+        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(src_dir)
     )
-    return tmp, stream
 
 
 def _doc_stream_files(spark: SparkSession, sf_dir: str) -> str:
@@ -2808,10 +2800,7 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = 128
     tmp = _doc_kmv_stream_files(spark, sf_dir)
-    sch = spark.read.parquet(tmp).schema
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(tmp)
-    )
+    stream = _stream_source(spark, tmp)
     stream = stream.withColumn(
         "__h", F.xxhash64("text").bitwiseAND(F.lit((1 << 63) - 1))
     )
@@ -2831,10 +2820,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from funcify_feature_eng_spark.streaming.runner import stateful_dedup_stream
 
     tmp = _doc_stream_files(spark, sf_dir)
-    sch = spark.read.parquet(tmp).schema
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(tmp)
-    )
+    stream = _stream_source(spark, tmp)
     stream = stream.withColumn("char_len", F.length("text").cast("int"))
     out = stateful_dedup_stream(
         stream, id_col="doc_id", key_col="text", keep_cols=["char_len"]
@@ -2855,7 +2841,8 @@ def q_stream_model_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from funcify_feature_eng_spark.streaming.runner import materialize_stream
 
-    tmp, stream = _stream_source(spark, sf_dir)
+    tmp = _stream_batch_files(spark, sf_dir)
+    stream = _stream_source(spark, tmp)
     stream = stream.withColumnRenamed("role", "event_type")
     # SIBLING of the input dir — inside it, the file stream source (and the
     # schema read) would ingest the sink's own output as new batches
@@ -2891,7 +2878,8 @@ def q_stream_turn_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_turn_features_stream,
     )
 
-    tmp, stream = _stream_source(spark, sf_dir)
+    tmp = _stream_batch_files(spark, sf_dir)
+    stream = _stream_source(spark, tmp)
     out = stateful_turn_features_stream(
         stream, entity_col="user_id", order_col="event_id", ts_col="ts",
         gap_seconds=GAP_S,
@@ -2976,10 +2964,7 @@ def q_stream_disorder_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tmp = _stream_disorder_files(spark, sf_dir)
-    sch = spark.read.parquet(tmp).schema
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(tmp)
-    )
+    stream = _stream_source(spark, tmp)
     D_s = 2 * GAP_S
     out = stateful_turn_features_stream(
         stream, entity_col="user_id", order_col="event_id", ts_col="ts",
@@ -3131,10 +3116,7 @@ def q_stream_role_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tmp = _events_roleaudit_stream_files(spark, sf_dir)
-    sch = spark.read.parquet(tmp).schema
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(tmp)
-    )
+    stream = _stream_source(spark, tmp)
     out = stateful_role_audit_stream(
         stream, entity_col="user_id", order=("ts", "event_id"),
         role_col="event_type", allowed=_ROLE_MACHINE,
@@ -3321,7 +3303,8 @@ def q_stream_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         isin("role", ["view", "click", "purchase", "signup", "error"], 1.0),
         row_count_between(1, 100_000_000),
     ]
-    tmp, stream = _stream_source(spark, sf_dir)
+    tmp = _stream_batch_files(spark, sf_dir)
+    stream = _stream_source(spark, tmp)
     _STREAM_GATE_SEQ[0] += 1
     base = f"{tmp}_quality_{_STREAM_GATE_SEQ[0]}"
     ledger, ckpt = base + "_ledger", base + "_ckpt"
@@ -3407,7 +3390,8 @@ def q_stream_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         calibration_monitor_stream,
     )
 
-    tmp, stream = _stream_source(spark, sf_dir)
+    tmp = _stream_batch_files(spark, sf_dir)
+    stream = _stream_source(spark, tmp)
     y = (F.col("event_id") % 3 == 0).cast("int")
     scored = stream.filter(F.col("event_id").isNotNull()).select(
         (F.pmod(knuth_key("event_id"), F.lit(600_000))
@@ -4208,10 +4192,7 @@ def q_stream_store_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     from funcify_feature_eng_spark.streaming.runner import store_publish_stream
 
     files = _events_value_stream_files(spark, sf_dir)
-    sch = spark.read.parquet(files).schema
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(files)
-    )
+    stream = _stream_source(spark, files)
     store_dir = tempfile.mkdtemp(prefix="sgstreampub_")
     atexit.register(shutil.rmtree, store_dir, ignore_errors=True)
     store = FeatureStore(spark, os.path.join(store_dir, "fs"), entity_col="user_id")
@@ -4941,10 +4922,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     width, depth = 1024, 4
     tmp = _events_hh_stream_files(spark, sf_dir)
-    sch = spark.read.parquet(tmp).schema
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(tmp)
-    )
+    stream = _stream_source(spark, tmp)
     from funcify_feature_eng_spark.streaming.runner import cms_monitor_stream
 
     out = cms_monitor_stream(stream, value_col="user_id", width=width, depth=depth)
@@ -5168,7 +5146,8 @@ def q_stream_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from funcify_feature_eng_spark.streaming.runner import decay_monitor_stream
 
-    tmp, stream = _decay_stream_source(spark, sf_dir)
+    tmp = _decay_stream_files(spark, sf_dir)
+    stream = _stream_source(spark, tmp)
     staged = stream.withColumn(
         "v_e6", F.floor(F.col("value") * F.lit(1_000_000.0)).cast("long")
     )
@@ -5710,10 +5689,7 @@ def q_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tmp = _stream_batch_files(spark, sf_dir)
-    sch = spark.read.parquet(tmp).schema
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(tmp)
-    )
+    stream = _stream_source(spark, tmp)
     out = stateful_throttle_stream(
         stream,
         entity_col="user_id",

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 
 
@@ -134,3 +136,23 @@ def exact_floor_div(num, den):
     return F.when(
         (r != 0) & ((num < 0) != (den < 0)), q - 1
     ).otherwise(q)
+
+
+def data_files(path: str) -> list[str]:
+    """The data files under a local parquet directory, skipping the names
+    Spark's file index skips (``_SUCCESS``, ``.crc`` checksums, a
+    ``_temporary`` write directory)."""
+    out = []
+    for d, dirs, files in os.walk(path):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        out += [os.path.join(d, f) for f in files if not f.startswith(("_", "."))]
+    return out
+
+
+def footer_rows(path: str) -> int:
+    """Rows stored under a local parquet directory, summed from the file
+    footers — what ``spark.read.parquet(path).count()`` returns, without
+    a job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in data_files(path))

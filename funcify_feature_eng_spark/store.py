@@ -58,7 +58,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from funcify_feature_eng_spark.operators.asof import asof_join
-from funcify_feature_eng_spark.operators.util import release, spread_partitions
+from funcify_feature_eng_spark.operators.util import (
+    data_files,
+    footer_rows,
+    release,
+    spread_partitions,
+)
 
 _log = logging.getLogger(__name__)
 
@@ -77,26 +82,6 @@ def contextual_params_hash(params: dict[str, Any] | None) -> str:
     """
     canon = json.dumps(params or {}, sort_keys=True, separators=(",", ":"), default=str)
     return hashlib.sha256(canon.encode()).hexdigest()
-
-
-def _data_files(path: str) -> list[str]:
-    """The data files under a local store directory, skipping the names
-    Spark's file index skips (``_SUCCESS``, ``.crc`` checksums, a
-    ``_temporary`` write directory)."""
-    out = []
-    for d, dirs, files in os.walk(path):
-        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-        out += [os.path.join(d, f) for f in files if not f.startswith(("_", "."))]
-    return out
-
-
-def _footer_rows(path: str) -> int:
-    """Rows stored under a local parquet directory, summed from the file
-    footers — what ``spark.read.parquet(path).count()`` returns, without
-    a job."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
 
 
 @dataclass
@@ -260,7 +245,7 @@ class FeatureStore:
             rows.writeTo(self.location).append()
             return
         loc = self._local_dir
-        pin = self._schema is None and loc is not None and not _data_files(loc)
+        pin = self._schema is None and loc is not None and not data_files(loc)
         rows.write.mode("append").parquet(self.location)
         if pin:
             self._schema = StructType([StructField(f.name, f.dataType) for f in rows.schema])
@@ -537,11 +522,11 @@ class FeatureStore:
         # the store lazily — rewriting in place would read what it deletes),
         # then swap with the old store renamed ASIDE first, never deleted
         # before the new data is in place
-        n_before = _footer_rows(loc)
+        n_before = footer_rows(loc)
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         survivors(self.read()).write.mode("overwrite").parquet(tmp)
         os.rename(loc, aside)
         os.rename(tmp, loc)
         shutil.rmtree(aside)
-        return {"rows_before": n_before, "rows_after": _footer_rows(loc)}
+        return {"rows_before": n_before, "rows_after": footer_rows(loc)}

@@ -7,6 +7,21 @@ Streaming micro-batches that reuse the SAME batch feature DAG via
 ``foreachBatch`` (SURVEY.md §2.8), plus a genuinely streaming sessionizer
 (watermark + session_window) the reference lacks but the transcript workload
 wants.
+
+The six cross-batch stateful operators (turn features in order and under
+bounded disorder, KMV, dedup, role audit, throttle) share one keyed-state
+skeleton, :func:`_keyed_state_stream`. It owns the whole
+``applyInPandasWithState`` protocol: the output schema built from the input
+types, the pandas-iterator concat, reading the state and writing it back or
+removing it, the timeout mode (event time when the operator has a
+watermark, none otherwise) and the event-time timeout. An operator supplies
+only its grouping column, its state schema and one fold
+``(key, rows | None, state | None, watermark_ms) -> (out | None,
+new_state | None, wake_ms | None)``; ``rows=None`` marks a timeout call and
+a None state removes the key. Per-group Python cost, not the state store,
+is the floor of these streams, so hash-bucketing the groups (as
+``stateful_dedup_stream`` does by hand with ``pmod(xxhash64, 4096)``)
+belongs inside the skeleton, where one change serves every operator.
 """
 
 from __future__ import annotations
@@ -128,6 +143,73 @@ def store_publish_stream(
     return _start_foreach_batch(stream_df, process, checkpoint_dir, trigger_seconds)
 
 
+def _keyed_state_stream(
+    df: DataFrame,
+    key: str,
+    passthrough: Sequence[str],
+    out_schema: str,
+    state_schema: str,
+    fold: Callable,
+    watermark: tuple[str, float] | None = None,
+) -> DataFrame:
+    """The keyed-state skeleton under every stateful stream (module
+    docstring): groups ``df`` by ``key`` and calls ``fold(key, rows,
+    state, watermark_ms) -> (out, new_state, wake_ms)`` once per group and
+    micro-batch.
+
+    - ``rows``: the group's rows as one pandas frame, or None on an
+      event-time timeout call (a key times out only in a batch where it
+      has no rows);
+    - ``state``: the stored state tuple, or None;
+    - ``watermark_ms``: the current watermark, None without one;
+    - ``out``: pandas rows to emit, or None;
+    - ``new_state``: None removes the key; ``state`` itself (the same
+      object) leaves the store untouched; anything else is written;
+    - ``wake_ms``: the event-time timeout to arm, or None.
+
+    The output schema is the ``passthrough`` input columns, typed as in
+    ``df``, then ``out_schema``. ``watermark=(ts_col, delay_s)`` applies
+    the watermark and selects event-time timeouts; without one there are
+    no timeouts."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    in_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    schema = ", ".join(
+        [f"{c} {in_types[c]}" for c in passthrough] + ([out_schema] if out_schema else [])
+    )
+    timeout = GroupStateTimeout.NoTimeout
+    if watermark is not None:
+        ts_col, delay_s = watermark
+        # milliseconds: int() of a seconds float would floor a sub-second
+        # delay to a zero-delay watermark
+        df = df.withWatermark(ts_col, f"{int(delay_s * 1000)} milliseconds")
+        timeout = GroupStateTimeout.EventTimeTimeout
+
+    def update(k, pdfs, state):
+        import pandas as pd
+
+        rows = None
+        if not state.hasTimedOut:
+            dfs = list(pdfs)
+            rows = dfs[0] if len(dfs) == 1 else pd.concat(dfs, ignore_index=True)
+        old = state.getOption
+        wm_ms = state.getCurrentWatermarkMs() if watermark is not None else None
+        out, new, wake_ms = fold(k, rows, old, wm_ms)
+        if new is None:
+            if old is not None:
+                state.remove()
+        elif new is not old:
+            state.update(new)
+        if wake_ms is not None:
+            state.setTimeoutTimestamp(wake_ms)
+        if out is not None:
+            yield out
+
+    return df.groupBy(key).applyInPandasWithState(
+        update, schema, state_schema, "append", timeout
+    )
+
+
 def stateful_turn_features_stream(
     stream_df: DataFrame,
     entity_col: str = "conv_id",
@@ -143,9 +225,10 @@ def stateful_turn_features_stream(
     roles that are CONTINUOUS across micro-batches (and across restarts via
     the checkpoint), unlike the per-batch window in ``materialize_stream``.
 
-    Built on ``applyInPandasWithState`` — per-entity GroupState carries
-    (last_ts_us, last_role, session_id); each batch's rows are processed in
-    (order_col, ts) order inside vectorized pandas.
+    Per-entity state carries (last_ts_us, last_role, session_id,
+    session_start_us); each batch's rows are processed in (order_col, ts)
+    order inside vectorized NumPy by one session fold shared with the
+    bounded-disorder mode.
 
     **Arrival-order contract.** Default (``max_disorder_s=None``): in-order
     arrival per entity across batches (the transcript ingest contract); a
@@ -173,18 +256,18 @@ def stateful_turn_features_stream(
     via the existing beyond-bound-late path (the deterministic, bounded
     degradation mode). Pending size is <= max_pending after every batch.
 
-    ``state_ttl_s`` bounds state growth — MANDATORY at web scale: with no
-    timeout, every conversation ever seen keeps a state row forever, and at
-    10^12 turns the state store becomes the job's largest table. The TTL is
-    EVENT-time (watermark-driven, ``withWatermark`` + EventTimeTimeout), so
-    job downtime or replay does NOT evict live conversations — a key times
-    out only when the stream's event time has really advanced past its last
-    turn by the TTL. For TTL ≥ the session gap, eviction matches the gap
-    rule: a resumed conversation starts a new session anyway. Because
-    session_id restarts at 0 after eviction, the output carries
-    ``session_start_ts`` (the first turn ts of the row's session) — key
-    sessions by (conv_id, session_start_ts) when conversations can outlive
-    the TTL.
+    ``state_ttl_s`` (> 0) bounds state growth — MANDATORY at web scale:
+    with no timeout, every conversation ever seen keeps a state row
+    forever, and at 10^12 turns the state store becomes the job's largest
+    table. The TTL is EVENT-time (watermark-driven, ``withWatermark`` +
+    EventTimeTimeout), so job downtime or replay does NOT evict live
+    conversations — a key times out only when the stream's event time has
+    really advanced past its last turn by the TTL. For TTL ≥ the session
+    gap, eviction matches the gap rule: a resumed conversation starts a
+    new session anyway. Because session_id restarts at 0 after eviction,
+    the output carries ``session_start_ts`` (the first turn ts of the
+    row's session) — key sessions by (conv_id, session_start_ts) when
+    conversations can outlive the TTL.
 
     The TTL requires a watermark, and the watermark's late-data filter is
     GLOBAL: a conversation whose events lag other conversations by more
@@ -202,58 +285,28 @@ def stateful_turn_features_stream(
     written by versions without ``session_start_us`` cannot be restarted
     against this operator — discard the checkpoint and reprocess.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    # entity/order types follow the input stream (conv ids are strings,
-    # event ids are ints — the operator shouldn't care)
-    in_types = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
-    out_schema = (
-        f"{entity_col} {in_types.get(entity_col, 'string')}, "
-        f"{order_col} {in_types.get(order_col, 'int')}, {ts_col} timestamp, "
-        "role string, prior_role string, session_id int, "
-        "session_start_ts timestamp"
-    )
-    state_schema = (
-        "last_ts_us long, last_role string, session_id int, session_start_us long"
-    )
+    if state_ttl_s is not None and not state_ttl_s > 0:
+        raise ValueError(f"state_ttl_s must be > 0, got {state_ttl_s}")
+    if max_disorder_s is not None and not max_disorder_s >= 0:
+        raise ValueError(f"max_disorder_s must be >= 0, got {max_disorder_s}")
+    use_ttl = state_ttl_s is not None
     gap_us = int(gap_seconds * 1_000_000)
 
-    use_ttl = state_ttl_s is not None
-    ttl_ms = int(state_ttl_s * 1000) if use_ttl else 0
-
-    def update(key, pdfs, state: GroupState):
-        # NumPy end-to-end: applyInPandasWithState invokes this once per
-        # ENTITY per micro-batch (15k calls/batch at sf1.0), so per-call
-        # pandas fixed costs (~ms across concat/sort/shift/cumsum) dominate
-        # the stream. The numpy formulation computes the identical values —
-        # same stable (order, ts) sort, same integer gap/cumsum arithmetic.
+    def session(key, o, ts, ts_us, roles, carried):
+        """The session fold of both arrival modes, over rows already in
+        (order, ts) order. ``carried`` = (last_ts_us, last_role,
+        session_id, session_start_us), None where nothing was carried.
+        Returns the output rows and the carried tuple after them. NumPy
+        end-to-end: it runs once per entity per micro-batch (15k calls a
+        batch at sf1.0), where per-call pandas fixed costs would dominate."""
         import numpy as np
         import pandas as pd
 
-        if use_ttl and state.hasTimedOut:
-            # event time advanced past this conversation's last turn by the
-            # TTL: evict — a later resume starts fresh, which for TTL ≥ gap
-            # is what the gap rule produces anyway
-            state.remove()
-            return
-        dfs = list(pdfs)
-        rows = dfs[0] if len(dfs) == 1 else pd.concat(dfs, ignore_index=True)
-        o = rows[order_col].to_numpy()
-        ts_np = rows[ts_col].to_numpy()
-        ts_us = ts_np.astype("datetime64[us]").astype("int64")
-        # stable (order, ts) sort: lexsort's last key is primary
-        perm = np.lexsort((ts_us, o))
-        o = o[perm]
-        ts_np = ts_np[perm]
-        ts_us = ts_us[perm]
-        roles = rows["role"].to_numpy()[perm]
-        if state.exists:
-            last_ts_us, last_role, session_id, session_start_us = state.get
-        else:
-            last_ts_us, last_role, session_id, session_start_us = None, None, 0, None
-        n = len(o)
-        # gap vs previous row, first row vs carried state (no state -> the
-        # first row never opens a boundary, matching the NaN-gap fillna)
+        last_ts_us, last_role, session_id, session_start_us = carried
+        n = len(ts_us)
+        # gap vs previous row, first row vs carried state (nothing carried
+        # -> the first row never opens a boundary, matching the NaN-gap
+        # fillna of the batch formulation)
         b = np.empty(n, dtype=bool)
         b[1:] = (ts_us[1:] - ts_us[:-1]) > gap_us
         b[0] = (ts_us[0] - last_ts_us) > gap_us if last_ts_us is not None else False
@@ -275,24 +328,49 @@ def stateful_turn_features_stream(
             {
                 entity_col: key[0],
                 order_col: o,
-                ts_col: ts_np,
+                ts_col: ts,
                 "role": roles,
                 "prior_role": prior,
                 "session_id": sess.astype("int32"),
                 "session_start_ts": pd.to_datetime(start_us, unit="us"),
             }
         )
-        state.update(
-            (int(ts_us[-1]), str(roles[-1]), int(sess[-1]), int(start_us[-1]))
+        return out, (int(ts_us[-1]), str(roles[-1]), int(sess[-1]), int(start_us[-1]))
+
+    if max_disorder_s is None:
+        if max_pending is not None:
+            raise ValueError("max_pending requires max_disorder_s (no buffer otherwise)")
+        delay = gap_seconds if watermark_delay_s is None else watermark_delay_s
+        if use_ttl and delay < 0:
+            raise ValueError(f"watermark_delay_s must be >= 0, got {delay}")
+        ttl_ms = int(state_ttl_s * 1000) if use_ttl else 0
+        state_schema = (
+            "last_ts_us long, last_role string, session_id int, session_start_us long"
         )
-        if use_ttl:
+
+        def fold(key, rows, carried, wm_ms):
+            import numpy as np
+
+            if rows is None:
+                # event time advanced past this conversation's last turn by
+                # the TTL: evict — a later resume starts fresh, which for
+                # TTL ≥ gap is what the gap rule produces anyway
+                return None, None, None
+            o = rows[order_col].to_numpy()
+            ts = rows[ts_col].to_numpy()
+            ts_us = ts.astype("datetime64[us]").astype("int64")
+            # stable (order, ts) sort: lexsort's last key is primary
+            perm = np.lexsort((ts_us, o))
+            out, carried = session(
+                key, o[perm], ts[perm], ts_us[perm], rows["role"].to_numpy()[perm],
+                carried or (None, None, 0, None),
+            )
             # event-time timeout: fires only when the WATERMARK (not the
             # wall clock) passes last turn + TTL, so downtime/replay never
             # evicts live conversations
-            state.setTimeoutTimestamp(int(ts_us[-1] // 1000) + ttl_ms)
-        yield out
+            return out, carried, carried[0] // 1000 + ttl_ms if use_ttl else None
 
-    if max_disorder_s is not None:
+    else:
         if not use_ttl:
             raise ValueError(
                 "max_disorder_s requires state_ttl_s: buffered tail rows "
@@ -301,52 +379,59 @@ def stateful_turn_features_stream(
             )
         if max_pending is not None and max_pending < 1:
             raise ValueError(f"max_pending must be >= 1, got {max_pending}")
-        return _disorder_turn_features_stream(
-            stream_df, entity_col, order_col, ts_col, gap_seconds,
-            state_ttl_s, watermark_delay_s, max_disorder_s,
-            out_schema, in_types, max_pending,
+        delay = (
+            max(gap_seconds, max_disorder_s)
+            if watermark_delay_s is None else watermark_delay_s
         )
-    if max_pending is not None:
-        raise ValueError("max_pending requires max_disorder_s (no buffer otherwise)")
+        if delay < max_disorder_s:
+            raise ValueError(
+                f"watermark_delay_s ({delay}) must be >= max_disorder_s "
+                f"({max_disorder_s}): Spark's global late filter would drop rows "
+                "inside the promised disorder bound"
+            )
+        o_type = stream_df.schema[order_col].dataType.simpleString()
+        state_schema = (
+            "last_ts_us long, last_order long, last_role string, session_id int, "
+            "session_start_us long, max_seen_us long, "
+            "pend_order array<long>, pend_ts_us array<long>, pend_role array<string>"
+        )
+        fold = _disorder_fold(
+            session, order_col, ts_col,
+            "int32" if o_type in ("int", "smallint") else "int64",
+            max_disorder_s, state_ttl_s, max_pending,
+        )
 
-    src = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if use_ttl:
-        delay = gap_seconds if watermark_delay_s is None else watermark_delay_s
-        if delay < 0:
-            raise ValueError(f"watermark_delay_s must be >= 0, got {delay}")
-        # milliseconds: int() of a seconds float would floor a sub-second
-        # delay to the zero-delay watermark this knob exists to avoid
-        src = src.withWatermark(ts_col, f"{int(delay * 1000)} milliseconds")
-        timeout = GroupStateTimeout.EventTimeTimeout
-    else:
-        timeout = GroupStateTimeout.NoTimeout
-    return src.groupBy(entity_col).applyInPandasWithState(
-        update, out_schema, state_schema, "append", timeout
+    return _keyed_state_stream(
+        stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp")),
+        entity_col,
+        [entity_col, order_col, ts_col],
+        "role string, prior_role string, session_id int, session_start_ts timestamp",
+        state_schema,
+        fold,
+        (ts_col, delay) if use_ttl else None,
     )
 
 
-def _disorder_turn_features_stream(
-    stream_df: DataFrame,
-    entity_col: str,
+def _disorder_fold(
+    session: Callable,
     order_col: str,
     ts_col: str,
-    gap_seconds: float,
-    state_ttl_s: float,
-    watermark_delay_s: float | None,
+    order_np: str,
     max_disorder_s: float,
-    out_schema: str,
-    in_types: dict[str, str],
-    max_pending: int | None = None,
-):
-    """Bounded-disorder variant: per-entity buffering + ordered emission.
+    state_ttl_s: float,
+    max_pending: int | None,
+) -> Callable:
+    """The bounded-disorder mode's fold: per-entity buffering + ordered
+    emission through the shared ``session`` fold.
 
     Per-entity state additionally carries the PENDING buffer (rows not yet
-    safe to emit) and the emitted frontier (last emitted (order, ts)). A
-    row is emitted once the entity's max seen event time passes its ts by
-    ``max_disorder_s`` (data path) or once the GLOBAL watermark passes its
-    ts (timeout path — at that point Spark itself guarantees nothing older
-    can arrive). Rows at or behind the emitted frontier are dropped —
-    beyond-bound late data, the per-entity mirror of watermark drops.
+    safe to emit) and the emitted frontier (last emitted (order, ts)); -1
+    marks "nothing emitted yet". A row is emitted once the entity's max
+    seen event time passes its ts by ``max_disorder_s`` (data path) or
+    once the GLOBAL watermark passes its ts (timeout path — at that point
+    Spark itself guarantees nothing older can arrive). Rows at or behind
+    the emitted frontier are dropped — beyond-bound late data, the
+    per-entity mirror of watermark drops.
 
     The frontier is the last emitted **(order, ts) pair, compared
     lexicographically** — exactly the batch formulation's sort order. A
@@ -357,17 +442,8 @@ def _disorder_turn_features_stream(
     ts-based sealing only delays emission, never reorders it relative to
     the (order, ts) sort.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_us = int(gap_seconds * 1_000_000)
     dis_us = int(max_disorder_s * 1_000_000)
     ttl_us = int(state_ttl_s * 1_000_000)
-    order_np = "int32" if in_types.get(order_col, "int") in ("int", "smallint") else "int64"
-    state_schema = (
-        "last_ts_us long, last_order long, last_role string, session_id int, "
-        "session_start_us long, max_seen_us long, "
-        "pend_order array<long>, pend_ts_us array<long>, pend_role array<string>"
-    )
 
     def _emit(key, pend, st, upto_us, force_n: int = 0):
         """Emit pending rows with ts_us <= upto_us in (order, ts) order.
@@ -376,9 +452,7 @@ def _disorder_turn_features_stream(
         the first N rows of the (order, ts) sort regardless of their ts —
         the max_pending overflow flush; OR-ing a prefix mask into the
         cummax mask keeps the sealed set a prefix, so emission stays
-        prefix-closed and ordered. NumPy end-to-end (like the in-order
-        update): this runs once per entity per micro-batch, so per-call
-        pandas fixed costs would dominate the stream."""
+        prefix-closed and ordered."""
         import numpy as np
         import pandas as pd
 
@@ -399,56 +473,22 @@ def _disorder_turn_features_stream(
         if not sealed.any():
             return None, rest, st
         ts_us = pt[sealed]
-        roles = pr[sealed]
         o_take = po[sealed]
-        n = len(ts_us)
-        b = np.empty(n, dtype=bool)
-        b[1:] = (ts_us[1:] - ts_us[:-1]) > gap_us
-        b[0] = (ts_us[0] - last_ts_us) > gap_us if last_ts_us >= 0 else False
-        sess = session_id + np.cumsum(b)
-        prior = np.empty(n, dtype=object)
-        prior[1:] = roles[:-1]
-        prior[0] = last_role if last_ts_us >= 0 else None
-        bidx = np.where(b, np.arange(n), -1)
-        run = np.maximum.accumulate(bidx)
-        first_start = (
-            session_start_us
-            if (not b[0] and session_start_us >= 0)
-            else int(ts_us[0])
+        out, (l_ts, l_role, sid, s_start) = session(
+            key, o_take.astype(order_np), pd.to_datetime(ts_us, unit="us"), ts_us,
+            pr[sealed],
+            (
+                last_ts_us if last_ts_us >= 0 else None, last_role, session_id,
+                session_start_us if session_start_us >= 0 else None,
+            ),
         )
-        start_us = np.where(run >= 0, ts_us[np.maximum(run, 0)], first_start)
-        out = pd.DataFrame({
-            entity_col: key[0],
-            order_col: o_take.astype(order_np),
-            ts_col: pd.to_datetime(ts_us, unit="us"),
-            "role": roles,
-            "prior_role": prior,
-            "session_id": sess.astype("int32"),
-            "session_start_ts": pd.to_datetime(start_us, unit="us"),
-        })
-        new_st = (
-            int(ts_us[-1]), int(o_take[-1]), str(roles[-1]),
-            int(sess[-1]), int(start_us[-1]), max_seen,
-        )
-        return out, rest, new_st
+        return out, rest, (l_ts, int(o_take[-1]), l_role, sid, s_start, max_seen)
 
-    def _rearm(state, st, pend, wm_ms):
-        # next wake-up: the FIRST pending row's flush point (pend arrives
-        # (order, ts)-sorted; prefix-closed emission means nothing can emit
-        # before it does), else eviction; Spark requires the timestamp to
-        # be beyond the current watermark
-        if len(pend[0]):
-            cand_ms = int(pend[1][0] // 1000) + 1
-        else:
-            cand_ms = (st[5] + ttl_us) // 1000
-        state.setTimeoutTimestamp(max(cand_ms, wm_ms + 1))
-
-    def update(key, pdfs, state: GroupState):
+    def fold(key, rows, state, wm_ms):
         import numpy as np
-        import pandas as pd
 
-        if state.exists:
-            (l_ts, l_o, l_r, sid, s_start, mx, po, pt, pr) = state.get
+        if state is not None:
+            (l_ts, l_o, l_r, sid, s_start, mx, po, pt, pr) = state
             st = (l_ts, l_o, l_r, sid, s_start, mx)
             pend = (
                 np.asarray(po, dtype=np.int64),
@@ -463,63 +503,47 @@ def _disorder_turn_features_stream(
                 np.zeros(0, dtype=object),
             )
 
-        wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
+        if rows is None:
             # flush everything the GLOBAL watermark has sealed: nothing
             # older can arrive past it, so emission is final and ordered
             out, pend, st = _emit(key, pend, st, wm_ms * 1000)
             if len(pend[0]) == 0 and wm_ms * 1000 >= st[5] + ttl_us:
-                state.remove()
-            else:
-                state.update((*st, pend[0].tolist(), pend[1].tolist(),
-                              pend[2].tolist()))
-                _rearm(state, st, pend, wm_ms)
-            if out is not None:
-                yield out
-            return
+                return out, None, None
+        else:
+            no = rows[order_col].to_numpy().astype(np.int64)
+            nt = rows[ts_col].to_numpy().astype("datetime64[us]").astype("int64")
+            nr = rows["role"].to_numpy().astype(object)
+            # drop beyond-bound late rows: at or behind the emitted frontier
+            # (same fate Spark's watermark gives globally-late rows)
+            if st[0] >= 0:
+                frontier = (no > st[1]) | ((no == st[1]) & (nt > st[0]))
+                no, nt, nr = no[frontier], nt[frontier], nr[frontier]
+            pend = (
+                np.concatenate([pend[0], no]),
+                np.concatenate([pend[1], nt]),
+                np.concatenate([pend[2], nr]),
+            )
+            mx = max(st[5], int(nt.max()) if len(nt) else -1)
+            st = (*st[:5], mx)
+            # per-entity watermark: emit rows sealed by max seen - disorder;
+            # max_pending overflow force-flushes the oldest prefix so the
+            # buffer is <= max_pending after every batch (state bound)
+            force_n = 0
+            if max_pending is not None and len(pend[0]) > max_pending:
+                force_n = len(pend[0]) - max_pending
+            out, pend, st = _emit(key, pend, st, mx - dis_us, force_n=force_n)
+        # next wake-up: the FIRST pending row's flush point (pend is
+        # (order, ts)-sorted; prefix-closed emission means nothing can emit
+        # before it does), else eviction; Spark requires the timestamp to
+        # be beyond the current watermark
+        if len(pend[0]):
+            wake_ms = int(pend[1][0] // 1000) + 1
+        else:
+            wake_ms = (st[5] + ttl_us) // 1000
+        new = (*st, pend[0].tolist(), pend[1].tolist(), pend[2].tolist())
+        return out, new, max(wake_ms, wm_ms + 1)
 
-        dfs = list(pdfs)
-        rows = dfs[0] if len(dfs) == 1 else pd.concat(dfs, ignore_index=True)
-        no = rows[order_col].to_numpy().astype(np.int64)
-        nt = rows[ts_col].to_numpy().astype("datetime64[us]").astype("int64")
-        nr = rows["role"].to_numpy().astype(object)
-        # drop beyond-bound late rows: at or behind the emitted frontier
-        # (same fate Spark's watermark gives globally-late rows)
-        if st[0] >= 0:
-            frontier = (no > st[1]) | ((no == st[1]) & (nt > st[0]))
-            no, nt, nr = no[frontier], nt[frontier], nr[frontier]
-        pend = (
-            np.concatenate([pend[0], no]),
-            np.concatenate([pend[1], nt]),
-            np.concatenate([pend[2], nr]),
-        )
-        mx = max(st[5], int(nt.max()) if len(nt) else -1)
-        st = (*st[:5], mx)
-        # per-entity watermark: emit rows sealed by max seen - disorder;
-        # max_pending overflow force-flushes the oldest prefix so the
-        # buffer is <= max_pending after every batch (state bound)
-        force_n = 0
-        if max_pending is not None and len(pend[0]) > max_pending:
-            force_n = len(pend[0]) - max_pending
-        out, pend, st = _emit(key, pend, st, mx - dis_us, force_n=force_n)
-        state.update((*st, pend[0].tolist(), pend[1].tolist(), pend[2].tolist()))
-        _rearm(state, st, pend, wm_ms)
-        if out is not None:
-            yield out
-
-    delay = max(gap_seconds, max_disorder_s) if watermark_delay_s is None else watermark_delay_s
-    if delay < max_disorder_s:
-        raise ValueError(
-            f"watermark_delay_s ({delay}) must be >= max_disorder_s "
-            f"({max_disorder_s}): Spark's global late filter would drop rows "
-            "inside the promised disorder bound"
-        )
-    src = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    src = src.withWatermark(ts_col, f"{int(delay * 1000)} milliseconds")
-    return src.groupBy(entity_col).applyInPandasWithState(
-        update, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    return fold
 
 
 def asof_enrich_stream(
@@ -616,29 +640,19 @@ def stateful_kmv_stream(
     features only (StreamFunctions.kt) — cross-batch mergeable summaries
     are the capability a Spark user adds for 10^12-turn monitoring.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    in_types = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
-    out_schema = f"{group_col} {in_types[group_col]}, rows_cum bigint, kmv array<bigint>"
-
-    def update(key, pdfs, state: GroupState):
+    def fold(key, rows, state, wm_ms):
         import pandas as pd
 
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        old_kmv, old_rows = state.get if state.exists else ((), 0)
+        old_kmv, old_rows = state or ((), 0)
         merged = sorted(set(old_kmv) | set(int(h) for h in rows[hash_col]))[:k]
         rows_cum = old_rows + len(rows)
-        state.update((merged, rows_cum))
-        yield pd.DataFrame(
-            {group_col: [key[0]], "rows_cum": [rows_cum], "kmv": [merged]}
-        )
+        out = pd.DataFrame({group_col: [key[0]], "rows_cum": [rows_cum], "kmv": [merged]})
+        return out, (merged, rows_cum), None
 
-    return stream_df.groupBy(group_col).applyInPandasWithState(
-        update,
-        out_schema,
-        "kmv array<bigint>, rows bigint",
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_state_stream(
+        stream_df, group_col, [group_col], "rows_cum bigint, kmv array<bigint>",
+        "kmv array<bigint>, rows bigint", fold,
     )
 
 
@@ -675,37 +689,24 @@ def stateful_dedup_stream(
     bounded in time, add a watermark TTL as in
     :func:`stateful_turn_features_stream`.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    in_types = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
     out_fields = [id_col, *[c for c in keep_cols if c != id_col]]
-    out_schema = ", ".join(f"{c} {in_types[c]}" for c in out_fields)
     n_buckets = 4096
 
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        seen = set(state.get[0]) if state.exists else set()
+    def fold(key, rows, state, wm_ms):
+        seen = set(state[0]) if state is not None else set()
         fresh = rows[~rows["__fp"].isin(seen)]
-        if len(fresh):
-            # deterministic within-batch winner: the min-id row per key
-            # (NOT arrival order), exactly the per-key formulation's rule
-            winners = fresh.loc[
-                fresh.groupby("__fp", sort=False)[id_col].idxmin(), out_fields
-            ]
-            seen.update(int(f) for f in fresh["__fp"].unique())
-            state.update((list(seen),))
-            yield winners
-        elif not state.exists:
-            state.update(([],))
+        if not len(fresh):
+            return None, state, None
+        # deterministic within-batch winner: the min-id row per key
+        # (NOT arrival order), exactly the per-key formulation's rule
+        winners = fresh.loc[fresh.groupby("__fp", sort=False)[id_col].idxmin(), out_fields]
+        seen.update(int(f) for f in fresh["__fp"].unique())
+        return winners, (list(seen),), None
 
     src = stream_df.withColumn("__fp", F.xxhash64(F.col(key_col))).withColumn(
         "__bk", F.pmod(F.col("__fp"), F.lit(n_buckets))
     )
-    return src.groupBy("__bk").applyInPandasWithState(
-        update, out_schema, "seen array<long>", "append", GroupStateTimeout.NoTimeout
-    )
+    return _keyed_state_stream(src, "__bk", out_fields, "", "seen array<long>", fold)
 
 
 def stateful_role_audit_stream(
@@ -738,31 +739,19 @@ def stateful_role_audit_stream(
     a NULL role is always a violation. State is O(1) per entity with no
     timeout; attach a watermark TTL for sliding-horizon audits.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     allowed_set = set(allowed)
     start_set = set(allowed_start) if allowed_start is not None else None
-    in_types = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
-    out_schema = (
-        f"{entity_col} {in_types[entity_col]}, n_turns bigint, "
-        "n_violations bigint, first_violation_ord int, is_valid boolean"
-    )
     order = list(order)
 
-    def update(key, pdfs, state: GroupState):
+    def fold(key, rows, state, wm_ms):
         import numpy as np
         import pandas as pd
 
-        dfs = list(pdfs)
-        rows = dfs[0] if len(dfs) == 1 else pd.concat(dfs, ignore_index=True)
         # stable multi-key sort via lexsort (what sort_values(list) runs
         # internally) without the per-call DataFrame reindex cost
         perm = np.lexsort(tuple(rows[c].to_numpy() for c in reversed(order)))
         roles_sorted = rows[role_col].to_numpy()[perm]
-        if state.exists:
-            n, v, ford, last, has_last = state.get
-        else:
-            n, v, ford, last, has_last = 0, 0, 0, None, False
+        n, v, ford, last, has_last = state or (0, 0, 0, None, False)
         for role in roles_sorted:
             role = None if pd.isna(role) else role
             n += 1
@@ -775,8 +764,7 @@ def stateful_role_audit_stream(
                 if ford == 0:
                     ford = n
             last, has_last = role, True
-        state.update((n, v, ford, last, has_last))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 entity_col: [key[0]],
                 "n_turns": [n],
@@ -785,13 +773,12 @@ def stateful_role_audit_stream(
                 "is_valid": [v == 0],
             }
         )
+        return out, (n, v, ford, last, has_last), None
 
-    return stream_df.groupBy(entity_col).applyInPandasWithState(
-        update,
-        out_schema,
-        "n bigint, v bigint, ford int, last string, has_last boolean",
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_state_stream(
+        stream_df, entity_col, [entity_col],
+        "n_turns bigint, n_violations bigint, first_violation_ord int, is_valid boolean",
+        "n bigint, v bigint, ford int, last string, has_last boolean", fold,
     )
 
 
@@ -983,21 +970,14 @@ def stateful_throttle_stream(
 
     The Python stage only folds integers over already-shuffled Arrow
     batches — no text, no float."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     if cap < 1 or rate_num < 1 or rate_den_s < 1 or cost < 1:
         raise ValueError(
             "stateful_throttle_stream: cap, rate_num, rate_den_s, cost >= 1"
         )
     unit = int(rate_den_s) * 1_000_000
     cap_u, cost_u = int(cap) * unit, int(cost) * unit
-    in_types = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
-    out_schema = (
-        f"{entity_col} {in_types[entity_col]}, {id_col} {in_types[id_col]}, "
-        "admitted boolean, tokens_after_e6den bigint"
-    )
 
-    def update(key, pdfs, state: GroupState):
+    def fold(key, rows, state, wm_ms):
         import pandas as pd
 
         # batch-twin contract (throttle.py: "NULL entity/ts rows are
@@ -1009,18 +989,16 @@ def stateful_throttle_stream(
         # worker as NaN (pandas has no null in float columns); a genuine
         # float-NaN key is indistinguishable and also dropped
         if key[0] is None or pd.isna(key[0]):
-            return
+            return None, state, None
         import numpy as np
 
-        dfs = list(pdfs)
-        rows = dfs[0] if len(dfs) == 1 else pd.concat(dfs, ignore_index=True)
         # numpy setup (the fold itself is inherently sequential but ~ns per
         # step; per-call pandas fixed costs dominated the stream at 15k
         # entity groups per micro-batch)
         t_all = rows[ts_col].to_numpy()
         m = ~np.isnat(t_all)
         if not m.any():
-            return
+            return None, state, None
         # explicit [us] normalization (same as the sibling folds above):
         # Arrow may hand pandas datetime64[ns] OR [us] depending on the
         # conversion path, and a raw astype('int64') on [us] would be read
@@ -1032,7 +1010,7 @@ def stateful_throttle_stream(
         perm = np.lexsort((o_np, t_us_np))
         t_us = t_us_np[perm].tolist()
         id_sorted = id_np[perm]
-        tok, prev = state.get if state.exists else (cap_u, None)
+        tok, prev = state or (cap_u, None)
         ids, adm, after = [], [], []
         for i, t in zip(id_sorted.tolist(), t_us):
             refill = 0 if prev is None else (t - prev) * rate_num
@@ -1043,8 +1021,7 @@ def stateful_throttle_stream(
             ids.append(i)
             adm.append(ok)
             after.append(tok)
-        state.update((int(tok), None if prev is None else int(prev)))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 entity_col: [key[0]] * len(ids),
                 id_col: ids,
@@ -1052,11 +1029,9 @@ def stateful_throttle_stream(
                 "tokens_after_e6den": after,
             }
         )
+        return out, (int(tok), None if prev is None else int(prev)), None
 
-    return stream_df.groupBy(entity_col).applyInPandasWithState(
-        update,
-        out_schema,
-        "tok bigint, prev bigint",
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_state_stream(
+        stream_df, entity_col, [entity_col, id_col],
+        "admitted boolean, tokens_after_e6den bigint", "tok bigint, prev bigint", fold,
     )

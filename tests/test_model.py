@@ -647,8 +647,10 @@ def _round_trips(fn):
 
 def test_repeated_materialize_reuses_lowered_columns(model, transcripts):
     """The first call of a request shape lowers its Columns; a second call
-    reuses them and only builds the DataFrame operations."""
-    model.materialize(transcripts, COLUMNS)
+    reuses them and only builds the DataFrame operations. The first call
+    makes ~1,070 round trips with its window specs ordered by column name;
+    a ``F.col(c).asc()`` per order key costs ~210 more."""
+    assert _round_trips(lambda: model.materialize(transcripts, COLUMNS)) < 1150
     assert _round_trips(lambda: model.materialize(transcripts, COLUMNS)) < 200
 
 

@@ -427,10 +427,10 @@ def test_spread_partitions(estimate, parallelism, min_part_bytes, expected):
 
 
 def test_small_publish_writes_one_file(spark, tmp_path, tmp_store):
-    from funcify_feature_eng_spark.store import _data_files
+    from funcify_feature_eng_spark.operators.util import data_files
 
     tmp_store.publish(_one_split(spark, tmp_path), "features/f", "f")
-    assert len(_data_files(tmp_store.location)) == 1
+    assert len(data_files(tmp_store.location)) == 1
     assert tmp_store.read().count() == 3
 
 
@@ -531,11 +531,11 @@ def test_read_missing_or_dataless_store_is_empty(spark, tmp_path):
 def test_read_corrupt_store_raises(spark, tmp_path, tmp_store):
     """A store whose only data file is corrupt must fail the read, not
     serve every request as a miss."""
-    from funcify_feature_eng_spark.store import _data_files
+    from funcify_feature_eng_spark.operators.util import data_files
 
     spine = _spine(spark)
     tmp_store.publish(_one_split(spark, tmp_path), "features/f", "f")
-    (part,) = _data_files(tmp_store.location)
+    (part,) = data_files(tmp_store.location)
     with open(part, "wb") as fh:
         fh.write(b"not a parquet file" * 64)
     fresh = FeatureStore(spark, tmp_store.location)

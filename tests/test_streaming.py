@@ -62,8 +62,14 @@ def test_stateful_sessionization_across_restarts(spark, data_dir, tmp_path, tran
 
     batch = spark.read.parquet(_os.path.join(data_dir, "transcripts.parquet"))
     sample_convs = [r["conv_id"] for r in
-                    batch.select("conv_id").distinct().orderBy("conv_id").limit(20).collect()]
-    sample = batch.filter(batch.conv_id.isin(sample_convs))
+                    batch.select("conv_id").distinct().orderBy("conv_id").limit(21).collect()]
+    null_conv = sample_convs.pop()
+    # plus one NULL-entity conversation: Spark groups NULL keys as one entity
+    sample = batch.filter(batch.conv_id.isin(sample_convs)).unionByName(
+        batch.filter(batch.conv_id == null_conv).withColumn(
+            "conv_id", F.lit(None).cast("string")
+        )
+    )
 
     src = str(tmp_path / "src")
     out_dir = str(tmp_path / "out")
@@ -678,6 +684,11 @@ def test_max_pending_requires_disorder_mode(spark):
         stateful_turn_features_stream(
             df, max_disorder_s=10.0, state_ttl_s=100.0, max_pending=0
         )
+    for ttl in (-3600.0, 0.0):
+        with pytest.raises(ValueError, match="state_ttl_s must be > 0"):
+            stateful_turn_features_stream(df, state_ttl_s=ttl)
+    with pytest.raises(ValueError, match="max_disorder_s must be >= 0"):
+        stateful_turn_features_stream(df, max_disorder_s=-1.0, state_ttl_s=100.0)
 
 
 def test_stateful_role_audit_stream_crosses_batch_boundary(spark, tmp_path):
@@ -695,13 +706,17 @@ def test_stateful_role_audit_stream_crosses_batch_boundary(spark, tmp_path):
     allowed = [("user", "assistant"), ("assistant", "user")]
     # conv 1: u a | a u  -> the a->a violation straddles the boundary (pos 3)
     # conv 2: u a | u a  -> fully valid alternation
+    # conv NULL: u a | u u -> one entity (Spark groups NULL keys together),
+    # with a u->u violation at pos 4
     b0 = pd.DataFrame({
-        "conv_id": [1, 1, 2, 2], "turn_idx": [0, 1, 0, 1],
-        "role": ["user", "assistant", "user", "assistant"],
+        "conv_id": pd.array([1, 1, 2, 2, None, None], dtype="Int64"),
+        "turn_idx": [0, 1, 0, 1, 0, 1],
+        "role": ["user", "assistant", "user", "assistant", "user", "assistant"],
     })
     b1 = pd.DataFrame({
-        "conv_id": [1, 1, 2, 2], "turn_idx": [2, 3, 2, 3],
-        "role": ["assistant", "user", "user", "assistant"],
+        "conv_id": pd.array([1, 1, 2, 2, None, None], dtype="Int64"),
+        "turn_idx": [2, 3, 2, 3, 2, 3],
+        "role": ["assistant", "user", "user", "assistant", "user", "user"],
     })
     src = str(tmp_path / "rasrc")
     _os.makedirs(src)
@@ -741,7 +756,7 @@ def test_stateful_role_audit_stream_crosses_batch_boundary(spark, tmp_path):
         batch, entity_col="conv_id", order=("turn_idx",), role_col="role",
         allowed=allowed, allowed_start=("user",),
     ).collect()}
-    for cid in (1, 2):
+    for cid in (1, 2, None):
         assert (bt[cid]["n_turns"], bt[cid]["n_violations"],
                 bt[cid]["first_violation_ord"], bt[cid]["is_valid"]) == (
             final[cid]["n_turns"], final[cid]["n_violations"],
