@@ -54,9 +54,10 @@ import logging
 from collections.abc import Sequence
 from functools import lru_cache
 
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from funcify_feature_eng_spark.operators.util import MEMO_SIZE, live_gateway
 
 _T = "__asof_t"
 _SIDE = "__asof_side"
@@ -66,17 +67,7 @@ _B = "__asof_bucket"
 
 _log = logging.getLogger("funcify_feature_eng_spark.asof")
 
-# the memo's bound: distinct (helper arguments) shapes kept per helper
-_MEMO_SIZE = 128
-
-
-def _gateway():
-    """The live JVM gateway, part of every Column memo key: a Column built
-    over a gateway that was shut down and replaced is never handed out."""
-    return SparkContext._gateway
-
-
-@lru_cache(maxsize=_MEMO_SIZE)
+@lru_cache(maxsize=MEMO_SIZE)
 def _known_time(gateway, ts: str) -> Column:
     """The right side's filter: a row with no time can match nothing."""
     return F.col(ts).isNotNull()
@@ -158,7 +149,7 @@ def asof_join(
     # first) and forward-filled its payload as "known before all time", a
     # temporal leak; broadcast dropped it and pandas merge_asof raised,
     # so strategy="auto" silently changed results by plan choice
-    right = right.filter(_known_time(_gateway(), right_ts))
+    right = right.filter(_known_time(live_gateway(), right_ts))
     if direction == "nearest":
         # pandas merge_asof direction='nearest': the closer of the backward
         # and forward matches, ties to the PRIOR one (pandas' convention).
@@ -290,14 +281,14 @@ def _tagged_union(
     right_order: Sequence[str],
 ) -> DataFrame:
     left_cols, right_cols = _union_cols(
-        _gateway(), tuple(on), left_ts, right_ts, tuple(vals.items()), tuple(right_order)
+        live_gateway(), tuple(on), left_ts, right_ts, tuple(vals.items()), tuple(right_order)
     )
     return left.select(*left_cols).unionByName(
         right.select(*right_cols), allowMissingColumns=True
     )
 
 
-@lru_cache(maxsize=_MEMO_SIZE)
+@lru_cache(maxsize=MEMO_SIZE)
 def _union_cols(
     gateway,
     on: tuple[str, ...],
@@ -333,13 +324,13 @@ def _ffill_and_project(
     forward: bool = False,
 ) -> DataFrame:
     filled, left_side, out = _ffill_cols(
-        _gateway(), tuple(left_cols), tuple(on), tuple(vals.values()),
+        live_gateway(), tuple(left_cols), tuple(on), tuple(vals.values()),
         allow_exact_matches, n_tie, tuple(extra_keys), forward,
     )
     return u.withColumn(_RVF, filled).filter(left_side).select(*out)
 
 
-@lru_cache(maxsize=_MEMO_SIZE)
+@lru_cache(maxsize=MEMO_SIZE)
 def _ffill_cols(
     gateway,
     left_cols: tuple[str, ...],
@@ -784,7 +775,7 @@ def asof_topk(
     vals = _normalize_values(value_cols)
     _validate(left, on, [*vals.values(), rank_col])
     # NULL right_ts rows match nothing (same contract as asof_join)
-    right = right.filter(_known_time(_gateway(), right_ts))
+    right = right.filter(_known_time(live_gateway(), right_ts))
     ridx = "__asof_topk_ridx"
     cand = "__asof_topk_cand"
     pos = "__asof_topk_pos"
@@ -901,7 +892,7 @@ def sliding_window_join(
     )
     # a right row with a NULL timestamp would become a +delta sorting
     # before every probe (nulls first) and pollute ALL running counts
-    right = right.filter(_known_time(_gateway(), right_ts))
+    right = right.filter(_known_time(live_gateway(), right_ts))
     birth = right.select(
         *on,
         us(right_ts).alias("__t"),

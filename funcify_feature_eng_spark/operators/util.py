@@ -4,7 +4,17 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
+
+# the bound of each Column memo: distinct argument shapes kept per helper
+MEMO_SIZE = 128
+
+
+def live_gateway():
+    """The live JVM gateway, part of every Column memo key: a Column built
+    over a gateway that was shut down and replaced is never handed out."""
+    return SparkContext._gateway
 
 
 def spread_small_input(df: DataFrame, *keys: str) -> DataFrame:

@@ -33,6 +33,11 @@ I/O contract of the parquet fallback (each cost is sized to the data):
   file, pays no shuffle and is not probed for its partition count. Each
   call logs its decision on the ``funcify_feature_eng_spark.store``
   logger.
+- ``publish`` builds its six output Columns once per (feature_id, entity
+  column, params hash, value column, ts column, ``calculated_at``) and
+  live JVM gateway, in a bounded memo shared by every store; an
+  unhashable argument builds them without it. A warm micro-batch publish
+  makes ~25 Python→JVM round trips instead of ~190.
 - Each ``FeatureStore`` pins one all-nullable schema: from its first
   publish into an empty local location, or from the first read that had to
   infer it. Later reads pass it to the reader, so building a read launches
@@ -50,17 +55,20 @@ import json
 import logging
 import os
 from dataclasses import dataclass, field
+from functools import lru_cache
 from typing import Any
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from funcify_feature_eng_spark.operators.asof import asof_join
 from funcify_feature_eng_spark.operators.util import (
+    MEMO_SIZE,
     data_files,
     footer_rows,
+    live_gateway,
     release,
     spread_partitions,
 )
@@ -82,6 +90,41 @@ def contextual_params_hash(params: dict[str, Any] | None) -> str:
     """
     canon = json.dumps(params or {}, sort_keys=True, separators=(",", ":"), default=str)
     return hashlib.sha256(canon.encode()).hexdigest()
+
+
+def _build_publish_cols(
+    gateway,
+    feature_id: str,
+    entity_col: str,
+    params_hash: str,
+    value_col: str,
+    ts_col: str,
+    calculated_at: Any | None,
+) -> tuple[Column, ...]:
+    """:meth:`FeatureStore.publish`'s output projection in store order."""
+    now = (
+        F.lit(calculated_at).cast("timestamp")
+        if calculated_at is not None
+        else F.current_timestamp()
+    )
+    return (
+        F.lit(feature_id).alias("feature_id"),
+        F.col(entity_col).alias("conv_id"),
+        F.lit(params_hash).alias("params_hash"),
+        F.to_json(F.struct(F.col(value_col).alias("v"))).alias("value"),
+        F.col(ts_col).cast("timestamp").alias("value_at_ts"),
+        now.alias("calculated_ts"),
+    )
+
+
+# typed: a stamp of 1 and one of 1.0 or True are different literals
+_publish_cols = lru_cache(maxsize=MEMO_SIZE, typed=True)(_build_publish_cols)
+
+
+@lru_cache(maxsize=8)
+def _byte_string(gateway, value: str) -> int:
+    """Spark's parse of a byte-size conf value ("1MB" -> 1048576)."""
+    return gateway.jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(value)
 
 
 @dataclass
@@ -228,19 +271,18 @@ class FeatureStore:
         backfills replaying history publish with the ORIGINAL run's stamp
         so bitemporal reads (``read_through(knowledge_time=...)``) stay
         faithful, and tests get deterministic stamps."""
-        now = (
-            F.lit(calculated_at).cast("timestamp")
-            if calculated_at is not None
-            else F.current_timestamp()
+        key = (
+            live_gateway(), feature_id, self.entity_col,
+            params_hash or contextual_params_hash(params), value_col, ts_col,
+            calculated_at,
         )
-        rows = self._spread_for_write(calculated).select(
-            F.lit(feature_id).alias("feature_id"),
-            F.col(self.entity_col).alias("conv_id"),
-            F.lit(params_hash or contextual_params_hash(params)).alias("params_hash"),
-            F.to_json(F.struct(F.col(value_col).alias("v"))).alias("value"),
-            F.col(ts_col).cast("timestamp").alias("value_at_ts"),
-            now.alias("calculated_ts"),
-        )
+        try:
+            hash(key)
+        except TypeError:
+            cols = _build_publish_cols(*key)
+        else:
+            cols = _publish_cols(*key)
+        rows = self._spread_for_write(calculated).select(*cols)
         if self._is_table:
             rows.writeTo(self.location).append()
             return
@@ -259,8 +301,9 @@ class FeatureStore:
         call (``input_partitions`` is None when the input was not probed)."""
         qe = df._jdf.queryExecution()
         estimate = int(str(qe.optimizedPlan().stats().sizeInBytes()))
-        min_size = self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            self.spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+        min_size = _byte_string(
+            live_gateway(),
+            self.spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"),
         )
         n = spread_partitions(estimate, self.spark.sparkContext.defaultParallelism, min_size)
         parts = None

@@ -284,6 +284,11 @@ def stateful_turn_features_stream(
     (last_ts_us, last_role, session_id, session_start_us); checkpoints
     written by versions without ``session_start_us`` cannot be restarted
     against this operator — discard the checkpoint and reprocess.
+    ``last_role`` is NULL when the entity's last turn had a NULL role;
+    earlier versions stored the string ``'None'`` there, and state written
+    by them keeps it: the next turn of such a key reads ``prior_role =
+    'None'`` (the literal is not mapped back, since a real role may be
+    spelled that way).
     """
     if state_ttl_s is not None and not state_ttl_s > 0:
         raise ValueError(f"state_ttl_s must be > 0, got {state_ttl_s}")
@@ -335,7 +340,8 @@ def stateful_turn_features_stream(
                 "session_start_ts": pd.to_datetime(start_us, unit="us"),
             }
         )
-        return out, (int(ts_us[-1]), str(roles[-1]), int(sess[-1]), int(start_us[-1]))
+        last = None if pd.isna(roles[-1]) else str(roles[-1])  # NULL stays NULL
+        return out, (int(ts_us[-1]), last, int(sess[-1]), int(start_us[-1]))
 
     if max_disorder_s is None:
         if max_pending is not None:

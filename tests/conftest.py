@@ -69,3 +69,29 @@ def compile_calls(monkeypatch):
 
     monkeypatch.setattr(document, "compile_document", counted)
     return calls
+
+
+@pytest.fixture()
+def round_trips():
+    """``round_trips(fn)``: the Python→JVM round trips ``fn`` makes, not
+    counting py4j's own object-release messages (sent whenever Python
+    happens to collect)."""
+    from py4j.clientserver import ClientServerConnection
+
+    def count(fn) -> int:
+        sent = []
+        real = ClientServerConnection.send_command
+
+        def counted(self, command, *a, **kw):
+            if not command.startswith("m\nd\n"):
+                sent.append(1)
+            return real(self, command, *a, **kw)
+
+        ClientServerConnection.send_command = counted
+        try:
+            fn()
+        finally:
+            ClientServerConnection.send_command = real
+        return len(sent)
+
+    return count

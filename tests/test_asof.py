@@ -840,9 +840,10 @@ def test_memo_keyed_by_live_gateway(spark, monkeypatch):
     from pyspark import SparkContext
 
     from funcify_feature_eng_spark.operators import asof
+    from funcify_feature_eng_spark.operators.util import live_gateway
 
     args = (("e",), "t", "rt", (("v", "out"),), ())
-    first = asof._union_cols(asof._gateway(), *args)
-    assert asof._union_cols(asof._gateway(), *args) is first
+    first = asof._union_cols(live_gateway(), *args)
+    assert asof._union_cols(live_gateway(), *args) is first
     monkeypatch.setattr(SparkContext, "_gateway", object())
-    assert asof._union_cols(asof._gateway(), *args) is not first
+    assert asof._union_cols(live_gateway(), *args) is not first

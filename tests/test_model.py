@@ -624,34 +624,13 @@ def test_compile_binds_every_tier_once(spark, transcripts):
 # ------------------------------------------------- lowered-Column reuse
 
 
-def _round_trips(fn):
-    """Python→JVM round trips ``fn`` makes, not counting py4j's own
-    object-release messages (sent whenever Python happens to collect)."""
-    from py4j.clientserver import ClientServerConnection
-
-    sent = []
-    real = ClientServerConnection.send_command
-
-    def counted(self, command, *a, **kw):
-        if not command.startswith("m\nd\n"):
-            sent.append(1)
-        return real(self, command, *a, **kw)
-
-    ClientServerConnection.send_command = counted
-    try:
-        fn()
-    finally:
-        ClientServerConnection.send_command = real
-    return len(sent)
-
-
-def test_repeated_materialize_reuses_lowered_columns(model, transcripts):
+def test_repeated_materialize_reuses_lowered_columns(model, transcripts, round_trips):
     """The first call of a request shape lowers its Columns; a second call
     reuses them and only builds the DataFrame operations. The first call
     makes ~1,070 round trips with its window specs ordered by column name;
     a ``F.col(c).asc()`` per order key costs ~210 more."""
-    assert _round_trips(lambda: model.materialize(transcripts, COLUMNS)) < 1150
-    assert _round_trips(lambda: model.materialize(transcripts, COLUMNS)) < 200
+    assert round_trips(lambda: model.materialize(transcripts, COLUMNS)) < 1150
+    assert round_trips(lambda: model.materialize(transcripts, COLUMNS)) < 200
 
 
 def _few(transcripts):

@@ -593,3 +593,57 @@ def test_compact_removes_stale_compacting_dir(spark, tmp_path, tmp_store):
     assert stats == {"rows_before": 6, "rows_after": 3}
     assert not os.path.exists(loc + "__compacting")
     assert {r["feature_id"] for r in tmp_store.read().collect()} == {"features/f"}
+
+
+# ------------------------------------------------- publish Column memo
+
+
+class _UnhashableStamp(str):
+    """A stamp the memo cannot key: publish builds its Columns without it."""
+
+    __hash__ = None
+
+
+def test_publish_memo_never_mixes_identities(spark, tmp_path):
+    """Publishes that differ only in ``calculated_at`` (a string, a
+    ``datetime``, an unhashable string), ``feature_id``, ``params`` or
+    ``value_col``, alternated so later ones hit the memo, write the same
+    store as with the memo cleared before every publish."""
+    import datetime as dt
+
+    from funcify_feature_eng_spark import store as store_mod
+
+    spine = _spine(spark).withColumn("f", F.col("turn_idx")).withColumn("g", F.lit(7))
+    at = "2025-01-01 00:00:00"
+    calls = [
+        {"feature_id": "features/f", "value_col": "f", "calculated_at": at},
+        {"feature_id": "features/f", "value_col": "f", "calculated_at": "2025-02-01 00:00:00"},
+        {"feature_id": "features/f", "value_col": "f", "calculated_at": dt.datetime(2025, 3, 1)},
+        {"feature_id": "features/f", "value_col": "f",
+         "calculated_at": _UnhashableStamp("2025-04-01 00:00:00")},
+        {"feature_id": "features/g", "value_col": "f", "calculated_at": at},
+        {"feature_id": "features/f", "value_col": "f", "calculated_at": at,
+         "params": {"window": 3}},
+        {"feature_id": "features/f", "value_col": "g", "calculated_at": at},
+    ]
+
+    def written(name, clear):
+        store = FeatureStore(spark, str(tmp_path / name))
+        for _ in range(2):
+            for kw in calls:
+                if clear:
+                    store_mod._publish_cols.cache_clear()
+                store.publish(spine, **kw)
+        return sorted(store.read().collect())
+
+    assert written("memo", clear=False) == written("cleared", clear=True)
+
+
+def test_warm_publish_reuses_its_columns(spark, tmp_store, round_trips):
+    """A repeated publish takes its six output Columns from the memo: it
+    makes ~25 round trips (the spread probe, the select and the write)
+    where building the Columns alone costs ~170."""
+    computed = _spine(spark).withColumn("f", F.col("turn_idx") * 10)
+    at = "2025-01-01 00:00:00"
+    tmp_store.publish(computed, "features/f", "f", calculated_at=at)
+    assert round_trips(lambda: tmp_store.publish(computed, "features/f", "f", calculated_at=at)) < 50

@@ -52,9 +52,39 @@ def test_materialize_stream_reuses_batch_dag(spark, stream_input, tmp_path, tran
     assert joined.count() == 0
 
 
-def test_stateful_sessionization_across_restarts(spark, data_dir, tmp_path, transcripts):
+_FC_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def test_local_session_checkpoint_manager_is_filesystem_based(spark, tmp_path):
+    """Local sessions commit checkpoint files through the FileSystem-based
+    manager (a rename, no forked ``readlink``): the class Spark resolves for
+    a checkpoint path on this session, so a class that moves in a later
+    Spark fails here rather than silently falling back."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    got = manager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert got.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+@pytest.mark.parametrize("first_manager", [None, _FC_MANAGER], ids=["default", "filecontext"])
+def test_stateful_sessionization_across_restarts(
+    spark, data_dir, tmp_path, transcripts, first_manager
+):
     """State continuity: run phase-1 turns, terminate, add phase-2 files,
-    restart from the checkpoint — session ids must match the batch result."""
+    restart from the checkpoint — session ids must match the batch result.
+    With ``first_manager`` the first run commits its checkpoint (logs and
+    state-store files) through that manager and the restart reads it under
+    the session default. One conversation's phase 1 ends on a NULL role,
+    so the carried ``last_role`` is NULL, not a string."""
     import os as _os
 
     from funcify_feature_eng_spark.operators.windows import turn_features
@@ -64,11 +94,21 @@ def test_stateful_sessionization_across_restarts(spark, data_dir, tmp_path, tran
     sample_convs = [r["conv_id"] for r in
                     batch.select("conv_id").distinct().orderBy("conv_id").limit(21).collect()]
     null_conv = sample_convs.pop()
+    # one conversation with a turn 5 gets a NULL role on turn 4, phase 1's last
+    null_role_conv = (
+        batch.filter(batch.conv_id.isin(sample_convs) & (batch.turn_idx == 5))
+        .select("conv_id").orderBy("conv_id").first()["conv_id"]
+    )
     # plus one NULL-entity conversation: Spark groups NULL keys as one entity
     sample = batch.filter(batch.conv_id.isin(sample_convs)).unionByName(
         batch.filter(batch.conv_id == null_conv).withColumn(
             "conv_id", F.lit(None).cast("string")
         )
+    ).withColumn(
+        "role",
+        F.when(
+            (F.col("conv_id") == null_role_conv) & (F.col("turn_idx") == 4), F.lit(None)
+        ).otherwise(F.col("role")),
     )
 
     src = str(tmp_path / "src")
@@ -94,7 +134,17 @@ def test_stateful_sessionization_across_restarts(spark, data_dir, tmp_path, tran
         )
         q.awaitTermination(180)
 
-    drain()
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    default = spark.conf.get(key, None)
+    if first_manager is not None:
+        spark.conf.set(key, first_manager)
+    try:
+        drain()
+    finally:
+        if default is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, default)
     sample.filter("turn_idx >= 5").coalesce(1).write.parquet(src + "/p2")
     drain()  # restart from checkpoint; state carries across runs
 
@@ -283,6 +333,7 @@ def test_disorder_mode_reorders_within_bound(spark, tmp_path):
 
     import pandas as pd
 
+    from funcify_feature_eng_spark.operators.windows import turn_features
     from funcify_feature_eng_spark.streaming.runner import stateful_turn_features_stream
 
     def _df(rs):
@@ -297,11 +348,19 @@ def test_disorder_mode_reorders_within_bound(spark, tmp_path):
     # both the 600s disorder bound AND the global watermark (B stays close
     # enough that wm < 100s when A1 lands). B alone advances event time
     # later so A's pending tail flushes via the event-time timeout.
-    # batch 1: A0, A2 (A1 missing), B@1000s
+    # batch 1: A0, A2 (A1 missing), B@1000s. C's first emission (C0, C1)
+    # ends on a NULL role; C2 flushes later on the timeout and must read a
+    # NULL prior_role, as the batch lag does
+    c_rows = [
+        ("C", 0, "user", "2024-01-01 00:00:00"),
+        ("C", 1, None, "2024-01-01 00:01:40"),
+        ("C", 2, "assistant", "2024-01-01 00:15:00"),
+    ]
     _df([
         ("A", 0, "user", "2024-01-01 00:00:00"),
         ("A", 2, "user", "2024-01-01 00:03:20"),
         ("B", 0, "user", "2024-01-01 00:16:40"),
+        *c_rows,
     ]).coalesce(1).write.parquet(src + "/p1")
     schema = _df([("A", 0, "user", "2024-01-01 00:00:00")]).schema
 
@@ -350,6 +409,13 @@ def test_disorder_mode_reorders_within_bound(spark, tmp_path):
     assert got["prior_role"].tolist()[1:] == ["user", "assistant", "user"]
     assert pd.isna(got["prior_role"].iloc[0])
     assert got["session_id"].tolist() == [0, 0, 0, 1]
+    cols = ["turn_idx", "prior_role", "session_id"]
+    got_c = (
+        spark.read.parquet(out_dir).filter("conv_id = 'C'")
+        .orderBy("turn_idx").select(*cols).collect()
+    )
+    exp_c = turn_features(_df(c_rows), tool_col=None, text_col=None)
+    assert got_c == exp_c.orderBy("turn_idx").select(*cols).collect()
 
 
 def test_disorder_mode_drops_beyond_frontier(spark, tmp_path):
